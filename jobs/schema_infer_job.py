@@ -7,6 +7,13 @@ top-N merge under the widening lattice -> protobuf hierarchy emission —
 re-planned Spark-first (single shuffle for the counts; driver-side fold
 only over the tiny top-k set; order-safe proto assembly).
 
+The raw rows are read, and the per-row shape UDF run, exactly once: in the
+one Spark action that writes ``distinct``. Top-k is then read back from
+that persisted table (a few thousand rows, not the corpus) — the
+reference's own SeqScanAsJson re-analysis path — fetching
+max(top-k, merge-n) rows so that ``--merge-n`` larger than ``--top-k``
+still merges merge-n shapes.
+
     spark-submit --py-files /tmp/schema_inference_spark.zip \
         jobs/schema_infer_job.py \
         --input  <path> --format {sequencefile|text|json-docs|parquet-kv} \
@@ -58,7 +65,7 @@ def main(argv: list[str] | None = None) -> int:
         proto_lines_df,
         with_metadata_message,
     )
-    from schema_inference_spark.operators.shapes import shape_counts, top_shapes
+    from schema_inference_spark.operators.shapes import shape_counts, top_k_counts
     from schema_inference_spark.sources.delimited import parse_delimited
     from schema_inference_spark.sources.sequencefile import read_sequencefile_values
     from schema_inference_spark.sources.tables import ensure_utc
@@ -82,19 +89,21 @@ def main(argv: list[str] | None = None) -> int:
         shaped = parse_delimited(rows, "value").select(
             kv_shape(F.col("kv")).alias("schema")
         )
-    shaped = shaped.where(F.col("schema").isNotNull())  # P4 null-row filter
 
-    from schema_inference_spark.sources.iceberg import write_table
+    from schema_inference_spark.sources.iceberg import read_table, write_table
 
-    counts = shape_counts(shaped, F.col("schema"))
-    write_table(counts, f"{args.output}/distinct", mode="overwrite")
+    # shape_counts drops the null shapes (reference P4 null-row filter)
+    distinct = f"{args.output}/distinct"
+    write_table(shape_counts(shaped, F.col("schema")), distinct, mode="overwrite")
 
-    top = top_shapes(shaped, F.col("schema"), k=args.top_k).collect()
+    top = top_k_counts(
+        read_table(spark, distinct), max(args.top_k, args.merge_n)
+    ).collect()
     if not top:
         print("no parseable rows found")
         return 1
     with open(f"{args.output}/top_schemas.json", "w", encoding="utf-8") as f:
-        for r in top:
+        for r in top[: args.top_k]:
             f.write(json.dumps(
                 {"schema": r["schema"], "count": r["count"], "percent": r["percent"]}
             ) + "\n")
@@ -109,9 +118,8 @@ def main(argv: list[str] | None = None) -> int:
     protos = concat_proto_files(proto_lines_df(spark, hierarchy))
     write_table(protos, f"{args.output}/protos", mode="overwrite")
 
-    n_shapes = len(top)
-    print(f"schema-infer: {n_shapes} distinct shapes (top-{args.top_k}), "
-          f"merged {min(args.merge_n, n_shapes)}, "
+    print(f"schema-infer: {len(top[: args.top_k])} distinct shapes (top-{args.top_k}), "
+          f"merged {len(top[: args.merge_n])}, "
           f"{len(hierarchy)} proto messages emitted")
     return 0
 

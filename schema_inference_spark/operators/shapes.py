@@ -6,15 +6,23 @@ Reference lifecycle (SeqFilesScan.java:282-373):
   (int division) -> fold-merge top-10.
 
 Spark-first rewrite:
-  * one ``groupBy('schema').count()`` — Catalyst partial+final hash agg, so
+  * one ``groupBy('schema')`` count — Catalyst partial+final hash agg, so
     the hot shape (34% of rows in the reference corpus,
     data/distinct/part-00000…json:1) is combined map-side and never skews a
     reducer;
+  * null shapes (unparseable rows, reference P4) are dropped AFTER the
+    aggregate, as the group whose ``count(schema)`` is 0. A
+    ``schema IS NOT NULL`` filter would be pushed below the projection onto
+    the shape UDF's output, and ExtractPythonUDFs then plans a second
+    ArrowEvalPython for the filter: every row crosses into Python twice;
   * percent-of-total via a broadcast cross-join against the single-row total
     (NOT a global window — a window with an empty partitionBy would funnel
-    the profile table through one task);
-  * top-k via ``orderBy(desc).limit(k)`` = TakeOrderedAndProject (per-
-    partition heaps + driver merge, no global sort);
+    the profile table through one task). Both branches are the same counts
+    plan, so the total reads a ReusedExchange of the counts shuffle and the
+    shape UDF runs once per input row;
+  * top-k via ``top_k_counts`` — ``orderBy(desc).limit(k)`` =
+    TakeOrderedAndProject (per-partition heaps + driver merge, no global
+    sort) — over a fresh counts plan or a persisted profile alike;
   * only the top-k rows are ever collected (vs the reference's whole-map
     collectAsMap, SeqFilesScan.java:315);
   * the schema merge fold runs on the driver over <= k tiny dicts
@@ -41,8 +49,12 @@ def shape_counts(df: DataFrame, shape_col: Column) -> DataFrame:
     ``percent`` uses the reference's integer-division semantics
     (count*100/total with Java int division, CommonUtils.java:245-251).
     """
-    shaped = df.select(shape_col.alias("schema")).where(F.col("schema").isNotNull())
-    counts = shaped.groupBy("schema").count()
+    counts = (
+        df.select(shape_col.alias("schema"))
+        .groupBy("schema")
+        .agg(F.count("schema").alias("count"))
+        .where(F.col("count") > 0)  # the null group; see the module docstring
+    )
     total = counts.agg(F.sum("count").alias("_total"))
     return (
         counts.crossJoin(F.broadcast(total))
@@ -54,10 +66,16 @@ def shape_counts(df: DataFrame, shape_col: Column) -> DataFrame:
     )
 
 
+def top_k_counts(counts: DataFrame, k: int) -> DataFrame:
+    """The k most frequent rows of a ``(schema, count, ...)`` table
+    (TakeOrderedAndProject; ties broken by schema string so the result is
+    deterministic across partitionings)."""
+    return counts.orderBy(F.desc("count"), F.asc("schema")).limit(k)
+
+
 def top_shapes(df: DataFrame, shape_col: Column, k: int = DEFAULT_TOP_K) -> DataFrame:
-    """Top-k shapes by count (TakeOrderedAndProject; ties broken by schema
-    string so the result is deterministic across partitionings)."""
-    return shape_counts(df, shape_col).orderBy(F.desc("count"), F.asc("schema")).limit(k)
+    """Top-k shapes by count."""
+    return top_k_counts(shape_counts(df, shape_col), k)
 
 
 def shape_exemplars(df: DataFrame, shape_col: Column, raw_col: Column) -> DataFrame:
@@ -69,9 +87,10 @@ def shape_exemplars(df: DataFrame, shape_col: Column, raw_col: Column) -> DataFr
     """
     return (
         df.select(shape_col.alias("schema"), raw_col.alias("colvalue"))
-        .where(F.col("schema").isNotNull())
         .groupBy("schema")
-        .agg(F.min("colvalue").alias("colvalue"))
+        .agg(F.min("colvalue").alias("colvalue"), F.count("schema").alias("_n"))
+        .where(F.col("_n") > 0)  # the null group, dropped as in shape_counts
+        .drop("_n")
     )
 
 
@@ -87,9 +106,7 @@ def reanalyze_persisted_shapes(spark, path: str, merge_n: int = DEFAULT_MERGE_N)
     (SeqScanAsJson.java:66-77 re-reads data/distinct and re-merges)."""
     # explicit schema: an empty profile dir has nothing to infer from
     profile = spark.read.schema("schema string, count long, percent long").json(path)
-    rows = (
-        profile.orderBy(F.desc("count"), F.asc("schema")).limit(merge_n).collect()
-    )
+    rows = top_k_counts(profile, merge_n).collect()
     schemas = [json.loads(r["schema"]) for r in rows]
     if not schemas:
         return {}

@@ -13,6 +13,11 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def final_plan_of(df) -> str:
+    """The executed adaptive plan without its '== Initial Plan ==' half."""
+    return plan_of(df).split("== Initial Plan ==")[0]
+
+
 @pytest.fixture(scope="module")
 def images_on_disk(spark, tmp_path_factory):
     corpus = generate_image_corpus(300, n_parts=2)
@@ -207,3 +212,33 @@ def test_partitioned_results_prune_on_read(spark, tmp_path):
     assert read.count() == 1250
     plan = plan_of(read)
     assert "PartitionFilters: [isnotnull(part" in plan or "PartitionFilters: [(part" in plan, plan
+
+
+def test_shape_udf_runs_once_per_row(spark, tmp_path):
+    """A ``schema IS NOT NULL`` filter on the shape UDF's output is pushed
+    below the projection and planned as a second ArrowEvalPython, so every
+    row crosses into Python twice. shape_counts and shape_exemplars drop the
+    null group after the aggregate instead, and the percent total reads the
+    counts shuffle as a ReusedExchange rather than re-scanning."""
+    from schema_inference_spark.functions.json_shape import flat_json_shape_expr
+    from schema_inference_spark.operators.shapes import shape_counts, shape_exemplars
+
+    docs = ['{"a": 1}'] * 5 + ['{"a": "x", "b": 2}'] * 3 + ["not json", None]
+    spark.createDataFrame([(d,) for d in docs], "doc string").write.parquet(f"{tmp_path}/docs")
+    df = spark.read.parquet(f"{tmp_path}/docs")
+
+    counts = shape_counts(df, flat_json_shape_expr(F.col("doc")))
+    rows = counts.collect()
+    plan = final_plan_of(counts)
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    total_branch = plan.split("BroadcastExchange", 1)[1]
+    assert "ReusedExchange" in total_branch and "FileScan" not in total_branch, plan
+    # the two unparseable rows are in neither the rows nor the percent total
+    assert all(r["schema"] is not None for r in rows)
+    assert sorted((r["count"], r["percent"]) for r in rows) == [(3, 37), (5, 62)]
+
+    ex = shape_exemplars(df, flat_json_shape_expr(F.col("doc")), F.col("doc"))
+    assert sorted(r["colvalue"] for r in ex.collect()) == ['{"a": "x", "b": 2}', '{"a": 1}']
+    plan = final_plan_of(ex)
+    assert plan.count("FileScan") == plan.count("ArrowEvalPython") == 1, plan

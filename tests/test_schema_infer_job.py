@@ -6,7 +6,10 @@ from __future__ import annotations
 import json
 import tempfile
 
+import pytest
+
 from jobs.schema_infer_job import main
+from schema_inference_spark.sources.delimited import FIELD_SEP, KV_SEP, PAIR_SEP
 
 FIXTURES = [
     "/root/reference/src/test/resources/fvalues.txt",
@@ -69,3 +72,76 @@ def test_json_docs_input_mode(spark):
         merged = json.load(open(f"{d}/out/merged_schema.json"))
         # 'a' integer(x3) widens with number(x2) -> number
         assert merged["properties"]["a"] == {"type": "number"}
+
+
+HOT = '{"type":"object","properties":{"host":{"type":"string"},"status":{"type":"integer"},"user":{"type":"string"}}}'
+NESTED = (
+    '{"type":"object","properties":{"id":{"type":"integer"},"payload":{"type":"object",'
+    '"properties":{"a":{"type":"integer"},"b":{"type":"array","items":{"type":"integer"}}}}}}'
+)
+STATUS_NUMBER = '{"type":"object","properties":{"status":{"type":"number"}}}'
+W_BOOLEAN = '{"type":"object","properties":{"w":{"type":"boolean"}}}'
+
+
+def _kv_row(i: int, pairs) -> str:
+    fvalue = PAIR_SEP.join(f"{k}{KV_SEP}{v}" for k, v in pairs)
+    return f"{1_700_000_000 + i}{FIELD_SEP}host{i}{FIELD_SEP}{fvalue}"
+
+
+@pytest.fixture(scope="module")
+def planted_kv(spark, tmp_path_factory):
+    """12 parseable rows in 4 shapes plus one rejected 2-field row: the hot
+    shape (7, one of them carrying an empty and a 'null' value that must be
+    dropped), a nested-JSON payload (3) and two single-row shapes that tie
+    on count and so are ordered by schema string."""
+    hot = [("host", "web1"), ("status", "200"), ("user", "alice")]
+    rows = [_kv_row(i, hot) for i in range(6)]
+    rows.append(_kv_row(6, hot + [("extra", ""), ("note", "null")]))
+    rows += [_kv_row(7 + i, [("id", str(i)), ("payload", '{"a": 1, "b": [1, 2]}')]) for i in range(3)]
+    rows.append(_kv_row(10, [("w", "true")]))
+    rows.append(_kv_row(11, [("status", "1.5")]))
+    rows.append(f"1700000012{FIELD_SEP}host12")
+    d = tmp_path_factory.mktemp("kv")
+    spark.createDataFrame([(r,) for r in rows], "value string").write.parquet(f"{d}/in")
+    return d
+
+
+def test_parquet_kv_end_to_end(spark, planted_kv):
+    d = planted_kv
+    assert main(["--input", f"{d}/in", "--format", "parquet-kv",
+                 "--output", f"{d}/out"]) == 0
+
+    distinct = sorted(
+        (r["count"], r["percent"], r["schema"])
+        for r in spark.read.parquet(f"{d}/out/distinct").collect()
+    )
+    # the 2-field row is rejected; the empty and 'null' values are dropped,
+    # so their row joins the hot shape
+    assert sum(c for c, _, _ in distinct) == 12
+    assert distinct == [(1, 8, STATUS_NUMBER), (1, 8, W_BOOLEAN), (3, 25, NESTED), (7, 58, HOT)]
+
+    tops = [json.loads(line) for line in open(f"{d}/out/top_schemas.json")]
+    assert [(t["schema"], t["count"], t["percent"]) for t in tops] == [
+        (HOT, 7, 58), (NESTED, 3, 25), (STATUS_NUMBER, 1, 8), (W_BOOLEAN, 1, 8),
+    ]  # the count tie is ordered by schema string
+
+    merged = json.load(open(f"{d}/out/merged_schema.json"))
+    assert merged == {"type": "object", "properties": {
+        "host": {"type": "string"},
+        "status": {"type": "number"},  # integer widened by the number shape
+        "user": {"type": "string"},
+        "id": {"type": "integer"},
+        "payload": json.loads(NESTED)["properties"]["payload"],
+        "w": {"type": "boolean"},
+    }}
+
+
+def test_merge_n_larger_than_top_k(spark, planted_kv):
+    """--merge-n above --top-k merges merge-n shapes, not only the top-k."""
+    d = planted_kv
+    assert main(["--input", f"{d}/in", "--format", "parquet-kv",
+                 "--output", f"{d}/out_m", "--top-k", "1", "--merge-n", "4"]) == 0
+    tops = [json.loads(line) for line in open(f"{d}/out_m/top_schemas.json")]
+    assert [t["schema"] for t in tops] == [HOT]
+    merged = json.load(open(f"{d}/out_m/merged_schema.json"))
+    assert set(merged["properties"]) == {"host", "status", "user", "id", "payload", "w"}
