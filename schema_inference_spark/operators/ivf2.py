@@ -35,19 +35,25 @@ re-analysis pattern (SeqScanAsJson.java:66-77).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from schema_inference_spark.operators.pq import _kmeans_1sub
+from schema_inference_spark.operators.pq import (
+    _by_cell,
+    _group_sorted,
+    _kmeans_1sub,
+    _train_per_cell,
+    _unit_rows,
+)
 from schema_inference_spark.operators.similarity import (
+    _build_index,
+    _persist_side,
+    _probe,
+    _query_index,
+    _read_side,
     _stack_rows,
-    cosine_topk,
-    ivf_assignments,
-    kmeans_train,
 )
 
 FINE_SCHEMA = "coarse_id int, fine_id int, centroid array<double>"
@@ -70,47 +76,25 @@ def train_fine_centroids(
     repeats its last distinct point in the tail centroids (those cells
     simply stay empty at assignment)."""
 
-    def _train(pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
+    def fit(cid: int, sample: np.ndarray) -> list:
+        cb = _kmeans_1sub(sample.astype(np.float64), k_fine, max_iter)
+        return [(cid, f, cb[f].astype(np.float64).tolist()) for f in range(k_fine)]
 
-        cid = int(pdf["coarse_id"].iloc[0])
-        keys = pdf[id_col].map(
-            lambda x: hashlib.md5(str(x).encode()).hexdigest()
-        )
-        order = np.lexsort((pdf[id_col].values, keys.values))
-        pts = _stack_rows(pdf[vec_col].values[order[:train_sample]]).astype(
-            np.float64
-        )
-        cb = _kmeans_1sub(pts, k_fine, max_iter)
-        return pd.DataFrame(
-            [(cid, f, cb[f].astype(np.float64).tolist()) for f in range(k_fine)],
-            columns=["coarse_id", "fine_id", "centroid"],
-        )
-
-    return (
-        assigned.select("coarse_id", id_col, vec_col)
-        .groupBy("coarse_id")
-        .applyInPandas(_train, FINE_SCHEMA)
+    return _train_per_cell(
+        assigned, "coarse_id", id_col, vec_col, train_sample, fit, FINE_SCHEMA
     )
 
 
 def _fine_to_dict(rows) -> dict[int, tuple[np.ndarray, np.ndarray]]:
     """{coarse_id: (fine_id array, unit-row centroid matrix)} — tie rule
     is argmax-first over the fine_id-sorted rows (lowest fine_id wins)."""
-    by_cid: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in rows:
-        by_cid.setdefault(r["coarse_id"], []).append(
-            (r["fine_id"], list(r["centroid"]))
+    return {
+        cid: (
+            np.asarray([r["fine_id"] for r in rs], dtype=np.int32),
+            _unit_rows(np.asarray([r["centroid"] for r in rs], dtype=np.float64), np.float64),
         )
-    out = {}
-    for cid, pairs in by_cid.items():
-        pairs.sort()
-        fids = np.asarray([f for f, _ in pairs], dtype=np.int32)
-        mat = np.asarray([v for _, v in pairs], dtype=np.float64)
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        norms[norms == 0.0] = 1.0
-        out[cid] = (fids, mat / norms[:, None])
-    return out
+        for cid, rs in _group_sorted(rows, "coarse_id", "fine_id").items()
+    }
 
 
 def fine_assignments(
@@ -129,9 +113,8 @@ def fine_assignments(
             return pd.Series([], dtype="int32")
         mat = _stack_rows(vec_s.values).astype(np.float64)
         out = np.empty(n, dtype=np.int32)
-        for cid in pd.unique(cid_s):
-            idx = np.nonzero((cid_s == cid).values)[0]
-            fids, cmat = fine[int(cid)]
+        for cid, idx in _by_cell(cid_s.values):
+            fids, cmat = fine[cid]
             out[idx] = fids[np.argmax(mat[idx] @ cmat.T, axis=1)]
         return pd.Series(out)
 
@@ -153,30 +136,20 @@ def build_ivf2_index(
 ) -> None:
     """Persist the two-level index: vectors/ partitioned by
     (coarse_id, fine_id), coarse centroids/, fine_centroids/."""
-    from schema_inference_spark.sources.iceberg import write_table
 
-    spark = df.sparkSession
-    coarse = kmeans_train(df, k=k_coarse, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
-    assigned = ivf_assignments(df, coarse, id_col, vec_col).withColumnRenamed(
-        "centroid_id", "coarse_id"
+    def encode(assigned: DataFrame) -> DataFrame:
+        assigned = assigned.withColumnRenamed("centroid_id", "coarse_id")
+        fine_df = train_fine_centroids(
+            assigned, k_fine=k_fine, max_iter=fine_max_iter,
+            train_sample=train_sample, id_col=id_col, vec_col=vec_col,
+        )
+        fine = _fine_to_dict(_persist_side(fine_df, path, "fine_centroids"))
+        full = fine_assignments(assigned, fine, vec_col)
+        return full.select(id_col, vec_col, "coarse_id", "fine_id")
+
+    _build_index(
+        df, path, k_coarse, max_iter, id_col, vec_col, encode, keys=("coarse_id", "fine_id")
     )
-    fine_df = train_fine_centroids(
-        assigned, k_fine=k_fine, max_iter=fine_max_iter,
-        train_sample=train_sample, id_col=id_col, vec_col=vec_col,
-    )
-    write_table(fine_df, f"{path}/fine_centroids", mode="overwrite")
-    fine = _fine_to_dict(spark.read.parquet(f"{path}/fine_centroids").collect())
-    full = fine_assignments(assigned, fine, vec_col)
-    write_table(
-        full.select(id_col, vec_col, "coarse_id", "fine_id"),
-        f"{path}/vectors", mode="overwrite",
-        partition_by=("coarse_id", "fine_id"),
-    )
-    coarse_df = spark.createDataFrame(
-        [(cid, vec) for cid, vec in coarse],
-        "coarse_id int, centroid array<double>",
-    )
-    write_table(coarse_df, f"{path}/centroids", mode="overwrite")
 
 
 def query_ivf2_index(
@@ -190,41 +163,14 @@ def query_ivf2_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe the best n_probe (coarse, fine) cells within the
-    n_probe_coarse closest coarse centroids; scan only those partitions."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = math.sqrt(float((q * q).sum()))
-    q_unit = q / qn if qn else q
-
-    coarse = [
-        (r["coarse_id"], np.asarray(r["centroid"], dtype=np.float64))
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    ]
-
-    def cos(c):
-        n = math.sqrt(float((c * c).sum()))
-        return float(q_unit @ c) / n if n else 0.0
-
-    coarse_ids = [
-        cid for cid, _ in sorted(coarse, key=lambda c: (-cos(c[1]), c[0]))[:n_probe_coarse]
-    ]
-    fine_rows = (
-        spark.read.parquet(f"{path}/fine_centroids")
-        .where(F.col("coarse_id").isin(coarse_ids))
-        .collect()
+    n_probe_coarse closest coarse centroids; scan only those partitions.
+    Both picks are ``_probe``'s (−cos, id) rule; no cell -> empty result."""
+    coarse_ids = _probe(_read_side(spark, path, "centroids"), query_vec, n_probe_coarse)
+    fine_rows = _read_side(spark, path, "fine_centroids", "coarse_id", coarse_ids)
+    cells = _probe(
+        (((r["coarse_id"], r["fine_id"]), r["centroid"]) for r in fine_rows),
+        query_vec, n_probe,
     )
-    cells = sorted(
-        (
-            (
-                -cos(np.asarray(r["centroid"], dtype=np.float64)),
-                r["coarse_id"],
-                r["fine_id"],
-            )
-            for r in fine_rows
-        ),
-    )[:n_probe]
-    pred = None
-    for _, c, f_ in cells:
-        clause = (F.col("coarse_id") == c) & (F.col("fine_id") == f_)
-        pred = clause if pred is None else (pred | clause)
-    vectors = spark.read.parquet(f"{path}/vectors").where(pred)
-    return cosine_topk(vectors, query_vec, k, id_col, vec_col)
+    return _query_index(
+        spark, path, query_vec, k, cells, id_col, vec_col, keys=("coarse_id", "fine_id")
+    )

@@ -59,10 +59,15 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from schema_inference_spark.operators.similarity import (
+    _build_index,
+    _cos_to,
+    _fold_rows,
+    _persist_side,
+    _probe,
+    _query_index,
+    _read_side,
     _stack_rows,
-    cosine_topk,
-    ivf_assignments,
-    kmeans_train,
+    _to_matrix_t,
 )
 
 CODEBOOK_SCHEMA = (
@@ -70,12 +75,85 @@ CODEBOOK_SCHEMA = (
 )
 
 
-def _unit_rows(m: np.ndarray) -> np.ndarray:
+def _unit(query_vec) -> np.ndarray:
+    """The query as a float64 unit vector (a zero query stays zero) — the
+    operand of every quantized lane's lookup table or dequantized dot."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    qn = np.sqrt((q * q).sum())
+    return q / qn if qn else q
+
+
+def _unit_rows(m: np.ndarray, dtype=np.float32) -> np.ndarray:
     """Row-normalize to unit L2; all-zero rows stay zero (cosine undefined,
     and a zero subvector must still encode deterministically)."""
     norms = np.sqrt((m.astype(np.float64) ** 2).sum(axis=1))
     norms[norms == 0.0] = 1.0
-    return (m / norms[:, None]).astype(np.float32)
+    return (m / norms[:, None]).astype(dtype)
+
+
+def _by_cell(key: np.ndarray) -> list[tuple[int, np.ndarray]]:
+    """(cell, row indices) for each distinct cell key of a batch."""
+    return [(int(kv), np.nonzero(key == kv)[0]) for kv in pd.unique(key)]
+
+
+def _train_per_cell(
+    assigned: DataFrame, cell: str, id_col: str, vec_col: str, n: int, fit, schema: str
+) -> DataFrame:
+    """Per-cell training in one grouped Arrow pass: ``fit(cell_id, sample)``
+    turns each cell's sample — up to ``n`` vectors in md5(id) order, ties
+    by id, so reproducible across runs and partitionings with no RNG
+    state — into output rows."""
+    import hashlib
+
+    def _train(pdf: pd.DataFrame) -> pd.DataFrame:
+        keys = pdf[id_col].map(lambda x: hashlib.md5(str(x).encode()).hexdigest())
+        order = np.lexsort((pdf[id_col].values, keys.values))
+        # positional columns: applyInPandas matches them to ``schema`` by position
+        return pd.DataFrame(fit(int(pdf[cell].iloc[0]), _stack_rows(pdf[vec_col].values[order[:n]])))
+
+    return assigned.select(cell, id_col, vec_col).groupBy(cell).applyInPandas(_train, schema)
+
+
+def _codes_column(assigned: DataFrame, vec_col: str, out_col: str, encode_cell) -> DataFrame:
+    """One Arrow projection, no shuffle: ``encode_cell(cid, vectors)`` maps
+    one cell's rows of a batch to an (n, width) array, stored per row as a
+    fixed-width binary."""
+
+    @pandas_udf("binary")
+    def _enc(cid_s: pd.Series, vec_s: pd.Series) -> pd.Series:
+        mat = _stack_rows(vec_s.values)
+        rows = np.empty((len(vec_s),), dtype=object)
+        for cid, idx in _by_cell(cid_s.values):
+            for i, row in zip(idx, encode_cell(cid, mat[idx])):
+                rows[i] = row.tobytes()
+        return pd.Series(rows)
+
+    return assigned.withColumn(out_col, _enc(F.col("centroid_id"), F.col(vec_col)))
+
+
+def _decode(cells, dtype) -> np.ndarray:
+    """Fixed-width binary cells -> (n, width) array: one join, one
+    zero-copy frombuffer."""
+    return np.frombuffer(b"".join(cells), dtype=dtype).reshape(len(cells), -1)
+
+
+def _lut(q_unit: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """ADC lookup table of one cell: (m, ncodes) per-subspace dots of the
+    unit query against its (m, ncodes, sub_d) codebook."""
+    m, _, sub_d = cb.shape
+    return np.einsum("ms,mcs->mc", q_unit.reshape(m, sub_d), cb.astype(np.float64))
+
+
+def _adc_sum(luts: dict[int, np.ndarray], key: np.ndarray, codes: np.ndarray) -> pd.Series:
+    """ADC kernel: per row, the float64 sum of the m entries its codes pick
+    from ``luts[key]`` — the 16-add replacement for the 64-mul dot. Each
+    row's value depends only on its own codes and table, so the grouping
+    (by cell, or by (query, cell) in the batch path) never changes it."""
+    out = np.empty(len(codes), dtype=np.float64)
+    for kv, idx in _by_cell(key):
+        lut = luts[kv]
+        out[idx] = lut[np.arange(lut.shape[0])[None, :], _decode(codes[idx], np.uint8)].sum(axis=1)
+    return pd.Series(out)
 
 
 def _kmeans_1sub(pts: np.ndarray, ncodes: int, max_iter: int) -> np.ndarray:
@@ -132,16 +210,8 @@ def pq_train_codebooks(
     Lloyd's per subspace. d % m must be 0 (checked at encode/query too).
     """
 
-    def _train(pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-
-        cid = int(pdf["centroid_id"].iloc[0])
-        keys = pdf[id_col].map(
-            lambda x: hashlib.md5(str(x).encode()).hexdigest()
-        )
-        order = np.lexsort((pdf[id_col].values, keys.values))
-        take = order[:train_sample]
-        mat = _unit_rows(_stack_rows(pdf[vec_col].values[take]))
+    def fit(cid: int, sample: np.ndarray) -> list:
+        mat = _unit_rows(sample)
         d = mat.shape[1]
         if d % m != 0:
             raise ValueError(f"dim {d} not divisible by m={m}")
@@ -151,35 +221,31 @@ def pq_train_codebooks(
             cb = _kmeans_1sub(mat[:, j * sub_d : (j + 1) * sub_d], ncodes, max_iter)
             for c in range(ncodes):
                 out.append((cid, j, c, cb[c].tolist()))
-        return pd.DataFrame(
-            out, columns=["centroid_id", "subspace", "code", "codeword"]
-        )
+        return out
 
-    return (
-        assigned.select("centroid_id", id_col, vec_col)
-        .groupBy("centroid_id")
-        .applyInPandas(_train, CODEBOOK_SCHEMA)
+    return _train_per_cell(
+        assigned, "centroid_id", id_col, vec_col, train_sample, fit, CODEBOOK_SCHEMA
     )
 
 
-def _codebooks_to_dict(rows) -> dict[int, np.ndarray]:
-    """Driver-side reshape of the (bounded, tiny) codebook table into
-    {centroid_id: (m, ncodes, sub_d) float32}."""
-    by_cid: dict[int, dict[tuple[int, int], list[float]]] = {}
-    for r in rows:
-        by_cid.setdefault(r["centroid_id"], {})[(r["subspace"], r["code"])] = list(
-            r["codeword"]
-        )
-    out: dict[int, np.ndarray] = {}
-    for cid, entries in by_cid.items():
-        m = 1 + max(j for j, _ in entries)
-        ncodes = 1 + max(c for _, c in entries)
-        sub_d = len(next(iter(entries.values())))
-        arr = np.zeros((m, ncodes, sub_d), dtype=np.float32)
-        for (j, c), vec in entries.items():
-            arr[j, c] = vec
-        out[cid] = arr
+def _group_sorted(rows, cell: str, *order: str) -> dict[int, list]:
+    """Driver-side regroup of a small per-cell table (codebooks/, scales/,
+    fine_centroids/): {cell: its rows sorted by ``order``}."""
+    out: dict[int, list] = {}
+    for r in sorted(rows, key=lambda r: [r[c] for c in order]):
+        out.setdefault(r[cell], []).append(r)
     return out
+
+
+def _codebooks_to_dict(rows) -> dict[int, np.ndarray]:
+    """The codebook table (complete, as pq_train_codebooks writes it) as
+    {centroid_id: (m, ncodes, sub_d) float32}."""
+    return {
+        cid: np.asarray([r["codeword"] for r in rs], dtype=np.float32).reshape(
+            1 + rs[-1]["subspace"], 1 + rs[-1]["code"], -1
+        )
+        for cid, rs in _group_sorted(rows, "centroid_id", "subspace", "code").items()
+    }
 
 
 def pq_encode(
@@ -192,42 +258,34 @@ def pq_encode(
     as an m-byte binary — one Arrow projection, no shuffle. Codes pick
     the squared-L2-nearest codeword per subspace (ties -> lowest code)."""
 
-    @pandas_udf("binary")
-    def _enc(cid_s: pd.Series, vec_s: pd.Series) -> pd.Series:
-        if len(vec_s) == 0:
-            return pd.Series([], dtype=object)
-        mat = _unit_rows(_stack_rows(vec_s.values))
-        codes_by_cid: dict[int, np.ndarray] = {}
-        for cid in pd.unique(cid_s):
-            idx = (cid_s == cid).values
-            cb = codebooks[int(cid)].astype(np.float64)  # (m, ncodes, sub_d)
-            m, ncodes, sub_d = cb.shape
-            sub = mat[idx].reshape(idx.sum(), m, sub_d).astype(np.float64)
-            cn2 = (cb * cb).sum(axis=2)  # (m, ncodes)
-            codes = np.empty((len(sub), m), dtype=np.uint8)
-            # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2 ; ||x||^2 constant per
-            # row. The dot is an s-unrolled elementwise fold (fixed order
-            # s=0..sub_d-1, per-element, no GEMM tiles) — 2.5-2.8x faster
-            # than einsum here AND bit-stable under any batch geometry,
-            # which the cross-width identity checks require (BLAS edge
-            # tiles may round differently per geometry — the
-            # ivf_assignments GEMM-path caveat).
-            for j in range(m):
-                sj = sub[:, j, :]
-                cj = cb[j]  # (ncodes, sub_d)
-                d = sj[:, 0, None] * cj[None, :, 0]
-                for t in range(1, sub_d):
-                    d += sj[:, t, None] * cj[None, :, t]
-                codes[:, j] = np.argmin(cn2[j][None, :] - 2.0 * d, axis=1)
-            codes_by_cid[int(cid)] = codes
-        rows = np.empty((len(vec_s),), dtype=object)
-        for cid, codes in codes_by_cid.items():
-            idx = np.nonzero((cid_s == cid).values)[0]
-            for i, row in zip(idx, codes):
-                rows[i] = row.tobytes()
-        return pd.Series(rows)
+    def encode_cell(cid: int, vecs: np.ndarray) -> np.ndarray:
+        if cid not in codebooks:
+            raise ValueError(
+                f"no trained PQ codebook for centroid_id {cid} (codebooks "
+                f"cover {sorted(codebooks)}): train on a sample of every cell"
+            )
+        cb = codebooks[cid].astype(np.float64)  # (m, ncodes, sub_d)
+        m, ncodes, sub_d = cb.shape
+        sub = _unit_rows(vecs).reshape(len(vecs), m, sub_d).astype(np.float64)
+        cn2 = (cb * cb).sum(axis=2)  # (m, ncodes)
+        codes = np.empty((len(sub), m), dtype=np.uint8)
+        # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2 ; ||x||^2 constant per
+        # row. The dot is an s-unrolled elementwise fold (fixed order
+        # s=0..sub_d-1, per-element, no GEMM tiles) — 2.5-2.8x faster
+        # than einsum here AND bit-stable under any batch geometry,
+        # which the cross-width identity checks require (BLAS edge
+        # tiles may round differently per geometry — the
+        # ivf_assignments GEMM-path caveat).
+        for j in range(m):
+            sj = sub[:, j, :]
+            cj = cb[j]  # (ncodes, sub_d)
+            d = sj[:, 0, None] * cj[None, :, 0]
+            for t in range(1, sub_d):
+                d += sj[:, t, None] * cj[None, :, t]
+            codes[:, j] = np.argmin(cn2[j][None, :] - 2.0 * d, axis=1)
+        return codes
 
-    return assigned.withColumn(out_col, _enc(F.col("centroid_id"), F.col(vec_col)))
+    return _codes_column(assigned, vec_col, out_col, encode_cell)
 
 
 def build_pq_index(
@@ -248,28 +306,17 @@ def build_pq_index(
     centroid_id: the codes are the bulk-scan lane, the raw column the
     re-rank lane in the SAME files so column pruning splits them),
     centroids/, codebooks/."""
-    from schema_inference_spark.sources.iceberg import write_table
 
-    spark = df.sparkSession
-    centroids = kmeans_train(df, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
-    assigned = ivf_assignments(df, centroids, id_col, vec_col)
-    cb_df = pq_train_codebooks(
-        assigned, m=m, ncodes=ncodes, train_sample=train_sample,
-        max_iter=pq_max_iter, id_col=id_col, vec_col=vec_col,
-    )
-    write_table(cb_df, f"{path}/codebooks", mode="overwrite")
-    codebooks = _codebooks_to_dict(spark.read.parquet(f"{path}/codebooks").collect())
-    encoded = pq_encode(assigned, codebooks, vec_col=vec_col)
-    write_table(
-        encoded.select(id_col, vec_col, "centroid_id", "codes"),
-        f"{path}/vectors", mode="overwrite", partition_by=("centroid_id",),
-    )
-    cents_df = spark.createDataFrame(
-        [(cid, vec) for cid, vec in centroids],
-        "centroid_id int, centroid array<double>",
-    )
-    write_table(cents_df, f"{path}/centroids", mode="overwrite")
-    return centroids
+    def encode(assigned: DataFrame) -> DataFrame:
+        cb_df = pq_train_codebooks(
+            assigned, m=m, ncodes=ncodes, train_sample=train_sample,
+            max_iter=pq_max_iter, id_col=id_col, vec_col=vec_col,
+        )
+        codebooks = _codebooks_to_dict(_persist_side(cb_df, path, "codebooks"))
+        encoded = pq_encode(assigned, codebooks, vec_col=vec_col)
+        return encoded.select(id_col, vec_col, "centroid_id", "codes")
+
+    return _build_index(df, path, k, max_iter, id_col, vec_col, encode)
 
 
 def query_pq_index_batch(
@@ -295,105 +342,61 @@ def query_pq_index_batch(
     tie rules; asserted bit-for-bit in tests).
 
     Scale shape: the scan is still partition-pruned to the union of
-    probes; the broadcast side is n_queries x n_probe rows; both windows
-    shuffle on qid (bounded by over_retrieve*k rows per query after the
-    cut); the exact re-rank reads the raw column only for candidate
-    rows. For thousands of concurrent queries this is the right plan —
-    one scan amortized across the batch.
+    probes; the broadcast side is n_queries x n_probe rows. Only the
+    re-rank window is bounded (over_retrieve*k rows per query): the
+    candidate-cut window shuffles EVERY fanned row — each qid's reducer
+    receives all rows of its probed partitions, raw vector column
+    included — so its shuffle grows with n_queries x n_probe x cell size.
+    One scan is still amortized across the whole batch.
     """
-    import math
-
     from pyspark.sql import Window
-
-    from schema_inference_spark.operators.similarity import (
-        _fold_many,
-        _fold_rows,
-        _to_matrix_t,
-    )
 
     if not query_vecs:
         return spark.createDataFrame(
             [], f"qid int, {id_col} bigint, cosine_sim double"
         )
 
-    cents = [
-        (r["centroid_id"], list(r["centroid"]))
-        for r in spark.read.parquet(f"{path}/centroids").collect()
+    cents = _read_side(spark, path, "centroids")
+    probe_pairs = [
+        (qid, cid)
+        for qid, qv in enumerate(query_vecs)
+        for cid in _probe(cents, qv, n_probe)
     ]
-
-    def cos(q_unit, b):
-        dot = sum(x * y for x, y in zip(q_unit, b))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / nb if nb else 0.0
-
-    q_units: list[np.ndarray] = []
-    probe_pairs: list[tuple[int, int]] = []
-    probe_ids_all: set[int] = set()
-    for qid, qv in enumerate(query_vecs):
-        q = np.asarray(qv, dtype=np.float64)
-        qn = math.sqrt(float((q * q).sum()))
-        qu = q / qn if qn else q
-        q_units.append(qu)
-        for cid, _ in sorted(cents, key=lambda c: -cos(qu, c[1]))[:n_probe]:
-            probe_pairs.append((qid, cid))
-            probe_ids_all.add(cid)
-
+    probe_ids_all = sorted({cid for _, cid in probe_pairs})
     codebooks = _codebooks_to_dict(
-        spark.read.parquet(f"{path}/codebooks")
-        .where(F.col("centroid_id").isin(sorted(probe_ids_all)))
-        .collect()
+        _read_side(spark, path, "codebooks", "centroid_id", probe_ids_all)
     )
-    luts: dict[tuple[int, int], np.ndarray] = {}
-    for qid, cid in probe_pairs:
-        cb = codebooks[cid]
-        m, _, sub_d = cb.shape
-        luts[(qid, cid)] = np.einsum(
-            "ms,mcs->mc", q_units[qid].reshape(m, sub_d), cb.astype(np.float64)
-        )
+    # one int key per (qid, cid) pair, so the batch ADC groups like the
+    # single-query one
+    stride = 1 + max(probe_ids_all, default=0)
+    q_units = [_unit(qv) for qv in query_vecs]
+    luts = {
+        qid * stride + cid: _lut(q_units[qid], codebooks[cid])
+        for qid, cid in probe_pairs
+    }
 
     @pandas_udf("double")
     def _adc(qid_s: pd.Series, cid_s: pd.Series, codes_s: pd.Series) -> pd.Series:
-        n = len(codes_s)
-        if n == 0:
-            return pd.Series([], dtype=float)
-        out = np.empty(n, dtype=np.float64)
-        key = pd.DataFrame({"q": qid_s.values, "c": cid_s.values})
-        for (qid, cid), grp in key.groupby(["q", "c"], sort=False):
-            idx = grp.index.to_numpy()
-            lut = luts[(int(qid), int(cid))]
-            m = lut.shape[0]
-            codes = np.frombuffer(
-                b"".join(codes_s.values[i] for i in idx), dtype=np.uint8
-            ).reshape(len(idx), m)
-            out[idx] = lut[np.arange(m)[None, :], codes].sum(axis=1)
-        return pd.Series(out)
+        key = qid_s.values.astype(np.int64) * stride + cid_s.values
+        return _adc_sum(luts, key, codes_s.values)
 
-    # the exact re-rank kernel: same sequential fold as cosine_topk /
-    # cosine_to_query_udf, applied per qid sub-batch (folds are row-local,
-    # so batching cannot change any value)
+    # the exact re-rank kernel of cosine_topk, applied per qid sub-batch
+    # (folds are row-local, so batching cannot change any value)
     q_mat = np.asarray([np.asarray(v, dtype=np.float64) for v in query_vecs])
     q_norms = np.sqrt(_fold_rows(q_mat.T.copy(), q_mat.T.copy()))
 
     @pandas_udf("double")
     def _exact(qid_s: pd.Series, vec_s: pd.Series) -> pd.Series:
-        n = len(vec_s)
-        if n == 0:
-            return pd.Series([], dtype=float)
-        out = np.empty(n, dtype=np.float64)
-        for qid in pd.unique(qid_s):
-            idx = np.nonzero((qid_s == qid).values)[0]
-            mt = _to_matrix_t(vec_s.iloc[idx])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out[idx] = _fold_many(mt, q_mat[int(qid)][None, :])[0] / (
-                    np.sqrt(_fold_rows(mt, mt)) * q_norms[int(qid)]
-                )
+        out = np.empty(len(vec_s), dtype=np.float64)
+        for qid, idx in _by_cell(qid_s.values):
+            out[idx] = _cos_to(_to_matrix_t(vec_s.iloc[idx]), q_mat[qid], q_norms[qid])
         return pd.Series(out)
 
     probe_df = F.broadcast(
         spark.createDataFrame(probe_pairs, "qid int, centroid_id int")
     )
     vectors = spark.read.parquet(f"{path}/vectors").where(
-        F.col("centroid_id").isin(sorted(probe_ids_all))
+        F.col("centroid_id").isin(probe_ids_all)
     )
     fanned = vectors.join(probe_df, "centroid_id")
     scored = fanned.withColumn(
@@ -443,12 +446,9 @@ def sq_train_scales(
 
 
 def _scales_to_dict(rows) -> dict[int, np.ndarray]:
-    by_cid: dict[int, dict[int, float]] = {}
-    for r in rows:
-        by_cid.setdefault(r["centroid_id"], {})[r["dim"]] = r["scale"]
     return {
-        cid: np.asarray([dims[i] for i in sorted(dims)], dtype=np.float64)
-        for cid, dims in by_cid.items()
+        cid: np.asarray([r["scale"] for r in rs], dtype=np.float64)
+        for cid, rs in _group_sorted(rows, "centroid_id", "dim").items()
     }
 
 
@@ -471,30 +471,15 @@ def sq_encode(
     if dtype == "int8" and scales is None:
         raise ValueError("int8 quantization requires trained scales")
 
-    @pandas_udf("binary")
-    def _enc(cid_s: pd.Series, vec_s: pd.Series) -> pd.Series:
-        n = len(vec_s)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        mat = _stack_rows(vec_s.values).astype(np.float64)
-        rows = np.empty((n,), dtype=object)
+    def encode_cell(cid: int, vecs: np.ndarray) -> np.ndarray:
+        mat = vecs.astype(np.float64)
         if dtype == "float16":
-            half = mat.astype(np.float16)
-            for i in range(n):
-                rows[i] = half[i].tobytes()
-            return pd.Series(rows)
-        for cid in pd.unique(cid_s):
-            idx = np.nonzero((cid_s == cid).values)[0]
-            sc = scales[int(cid)].copy()
-            sc[sc == 0.0] = 1.0
-            q = np.clip(np.rint(mat[idx] / sc[None, :] * 127.0), -127, 127).astype(
-                np.int8
-            )
-            for j, i in enumerate(idx):
-                rows[i] = q[j].tobytes()
-        return pd.Series(rows)
+            return mat.astype(np.float16)
+        sc = scales[cid].copy()
+        sc[sc == 0.0] = 1.0
+        return np.clip(np.rint(mat / sc[None, :] * 127.0), -127, 127).astype(np.int8)
 
-    return assigned.withColumn(out_col, _enc(F.col("centroid_id"), F.col(vec_col)))
+    return _codes_column(assigned, vec_col, out_col, encode_cell)
 
 
 def sq_cosine_scores(
@@ -508,9 +493,7 @@ def sq_cosine_scores(
     for scalar quantization (the dequantize + dot runs in one Arrow
     kernel; float64 accumulate via the GEMM is fine here because the lane
     is approximate by construction and re-ranked exactly)."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.sqrt((q * q).sum())
-    q_unit = q / qn if qn else q
+    q_unit = _unit(query_vec)
 
     @pandas_udf("double")
     def _score(cid_s: pd.Series, codes_s: pd.Series) -> pd.Series:
@@ -518,23 +501,18 @@ def sq_cosine_scores(
         if n == 0:
             return pd.Series([], dtype=float)
         out = np.empty(n, dtype=np.float64)
+        codes = codes_s.values
         if dtype == "float16":
-            mat = np.frombuffer(b"".join(codes_s.values), dtype=np.float16).reshape(
-                n, -1
-            ).astype(np.float64)
+            groups = [(np.arange(n), None)]
+        else:
+            groups = [(idx, scales[cid] / 127.0) for cid, idx in _by_cell(cid_s.values)]
+        for idx, sc in groups:
+            mat = _decode(codes[idx], np.dtype(dtype)).astype(np.float64)
+            if sc is not None:
+                mat = mat * sc[None, :]
             norms = np.sqrt((mat * mat).sum(axis=1))
             norms[norms == 0.0] = 1.0
-            out[:] = (mat @ q_unit) / norms
-        else:
-            for cid in pd.unique(cid_s):
-                idx = np.nonzero((cid_s == cid).values)[0]
-                sc = scales[int(cid)] / 127.0
-                mat = np.frombuffer(
-                    b"".join(codes_s.values[i] for i in idx), dtype=np.int8
-                ).reshape(len(idx), -1).astype(np.float64) * sc[None, :]
-                norms = np.sqrt((mat * mat).sum(axis=1))
-                norms[norms == 0.0] = 1.0
-                out[idx] = (mat @ q_unit) / norms
+            out[idx] = (mat @ q_unit) / norms
         return pd.Series(out)
 
     return codes_df.withColumn(out_col, _score(F.col("centroid_id"), F.col("codes")))
@@ -550,29 +528,19 @@ def build_sq_index(
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Scalar-quantized IVF index: same three-table layout as the PQ index
-    (vectors/ partitioned by centroid_id carrying raw + qcodes, centroids/,
+    (vectors/ partitioned by centroid_id carrying raw + codes, centroids/,
     and for int8 a scales/ table)."""
-    from schema_inference_spark.sources.iceberg import write_table
 
-    spark = df.sparkSession
-    centroids = kmeans_train(df, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
-    assigned = ivf_assignments(df, centroids, id_col, vec_col)
-    scales = None
-    if dtype == "int8":
-        scales_df = sq_train_scales(assigned, vec_col)
-        write_table(scales_df, f"{path}/scales", mode="overwrite")
-        scales = _scales_to_dict(spark.read.parquet(f"{path}/scales").collect())
-    encoded = sq_encode(assigned, dtype=dtype, scales=scales, vec_col=vec_col)
-    write_table(
-        encoded.select(id_col, vec_col, "centroid_id", F.col("qcodes").alias("codes")),
-        f"{path}/vectors", mode="overwrite", partition_by=("centroid_id",),
-    )
-    cents_df = spark.createDataFrame(
-        [(cid, vec) for cid, vec in centroids],
-        "centroid_id int, centroid array<double>",
-    )
-    write_table(cents_df, f"{path}/centroids", mode="overwrite")
-    return centroids
+    def encode(assigned: DataFrame) -> DataFrame:
+        scales = None
+        if dtype == "int8":
+            scales = _scales_to_dict(
+                _persist_side(sq_train_scales(assigned, vec_col), path, "scales")
+            )
+        encoded = sq_encode(assigned, dtype=dtype, scales=scales, vec_col=vec_col, out_col="codes")
+        return encoded.select(id_col, vec_col, "centroid_id", "codes")
+
+    return _build_index(df, path, k, max_iter, id_col, vec_col, encode)
 
 
 def query_sq_index(
@@ -589,46 +557,17 @@ def query_sq_index(
     """Scalar-quantized probe: prune to n_probe partitions, score the
     dequantized codes column, over-retrieve, exact re-rank on raw — the
     same two-lane shape as query_pq_index with a cheaper bulk lane."""
-    import math
-
-    cents = [
-        (r["centroid_id"], list(r["centroid"]))
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    ]
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / nb if nb else 0.0
-
-    probe_ids = [
-        cid for cid, _ in sorted(cents, key=lambda c: -cos(query_vec, c[1]))[:n_probe]
-    ]
+    probe_ids = _probe(_read_side(spark, path, "centroids"), query_vec, n_probe)
     scales = None
     if dtype == "int8":
         scales = _scales_to_dict(
-            spark.read.parquet(f"{path}/scales")
-            .where(F.col("centroid_id").isin(probe_ids))
-            .collect()
+            _read_side(spark, path, "scales", "centroid_id", probe_ids)
         )
-    vectors = spark.read.parquet(f"{path}/vectors")
-    scored = sq_cosine_scores(
-        vectors.where(F.col("centroid_id").isin(probe_ids)).select(
-            id_col, "centroid_id", "codes"
-        ),
-        query_vec, dtype, scales,
+    return _query_index(
+        spark, path, query_vec, k, probe_ids, id_col, vec_col,
+        bulk=lambda codes: sq_cosine_scores(codes, query_vec, dtype, scales, "_score"),
+        over_retrieve=over_retrieve,
     )
-    cand_ids = [
-        r[id_col]
-        for r in scored.orderBy(F.col("sq_score").desc(), F.col(id_col))
-        .limit(over_retrieve * k)
-        .select(id_col)
-        .collect()
-    ]
-    rerank = vectors.where(
-        F.col("centroid_id").isin(probe_ids) & F.col(id_col).isin(cand_ids)
-    )
-    return cosine_topk(rerank, query_vec, k, id_col, vec_col)
 
 
 def adc_scores(
@@ -641,19 +580,7 @@ def adc_scores(
 
     @pandas_udf("double")
     def _score(cid_s: pd.Series, codes_s: pd.Series) -> pd.Series:
-        n = len(codes_s)
-        if n == 0:
-            return pd.Series([], dtype=float)
-        out = np.empty(n, dtype=np.float64)
-        for cid in pd.unique(cid_s):
-            idx = np.nonzero((cid_s == cid).values)[0]
-            lut = luts[int(cid)]  # (m, ncodes) float64
-            m = lut.shape[0]
-            codes = np.frombuffer(
-                b"".join(codes_s.values[i] for i in idx), dtype=np.uint8
-            ).reshape(len(idx), m)
-            out[idx] = lut[np.arange(m)[None, :], codes].sum(axis=1)
-        return pd.Series(out)
+        return _adc_sum(luts, cid_s.values, codes_s.values)
 
     return codes_df.withColumn(out_col, _score(F.col("centroid_id"), F.col("codes")))
 
@@ -673,53 +600,14 @@ def query_pq_index(
     the top over_retrieve*k candidate ids (bounded collect); (4) exact
     re-rank just those rows on the raw column. Ties in the candidate cut
     break by vec_id so the candidate SET is deterministic."""
-    import math
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = math.sqrt(float((q * q).sum()))
-    q_unit = q / qn if qn else q
-
-    cents = [
-        (r["centroid_id"], list(r["centroid"]))
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    ]
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / nb if nb else 0.0
-
-    probe_ids = [
-        cid for cid, _ in sorted(cents, key=lambda c: -cos(q_unit, c[1]))[:n_probe]
-    ]
-
+    probe_ids = _probe(_read_side(spark, path, "centroids"), query_vec, n_probe)
     codebooks = _codebooks_to_dict(
-        spark.read.parquet(f"{path}/codebooks")
-        .where(F.col("centroid_id").isin(probe_ids))
-        .collect()
+        _read_side(spark, path, "codebooks", "centroid_id", probe_ids)
     )
-    luts: dict[int, np.ndarray] = {}
-    for cid, cb in codebooks.items():
-        m, _, sub_d = cb.shape
-        luts[cid] = np.einsum(
-            "ms,mcs->mc", q_unit.reshape(m, sub_d), cb.astype(np.float64)
-        )
-
-    vectors = spark.read.parquet(f"{path}/vectors")
-    scored = adc_scores(
-        vectors.where(F.col("centroid_id").isin(probe_ids)).select(
-            id_col, "centroid_id", "codes"
-        ),
-        luts,
+    q_unit = _unit(query_vec)
+    luts = {cid: _lut(q_unit, cb) for cid, cb in codebooks.items()}
+    return _query_index(
+        spark, path, query_vec, k, probe_ids, id_col, vec_col,
+        bulk=lambda codes: adc_scores(codes, luts, "_score"),
+        over_retrieve=over_retrieve,
     )
-    cand_rows = (
-        scored.orderBy(F.col("adc_score").desc(), F.col(id_col))
-        .limit(over_retrieve * k)
-        .select(id_col)
-        .collect()
-    )
-    cand_ids = [r[id_col] for r in cand_rows]
-    rerank = vectors.where(
-        F.col("centroid_id").isin(probe_ids) & F.col(id_col).isin(cand_ids)
-    )
-    return cosine_topk(rerank, query_vec, k, id_col, vec_col)

@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from schema_inference_spark.sources.iceberg import write_table
+
 
 def _to_matrix(s: pd.Series) -> np.ndarray:
     """Arrow list<float> batch -> (n, d) float64 matrix. float32 -> float64
@@ -131,12 +133,16 @@ def cosine_to_query_udf(query_vec: list[float]):
 
     @pandas_udf("double")
     def _cos(a: pd.Series) -> pd.Series:
-        mt = _to_matrix_t(a)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sim = _fold_many(mt, q[None, :])[0] / (np.sqrt(_fold_rows(mt, mt)) * qn)
-        return pd.Series(sim)
+        return pd.Series(_cos_to(_to_matrix_t(a), q, qn))
 
     return _cos
+
+
+def _cos_to(mt: np.ndarray, q: np.ndarray, qn: float) -> np.ndarray:
+    """Exact fold cosine of every column of a (d, n) batch to ``q`` (norm
+    ``qn``) — the re-rank kernel of every index query."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _fold_many(mt, q[None, :])[0] / (np.sqrt(_fold_rows(mt, mt)) * qn)
 
 
 def cosine_expr(a: Column, b: Column, decimals: int = 6) -> Column:
@@ -337,11 +343,6 @@ def srp_buckets(
     """Attach the SRP bucket column — the production LSH blocking key.
     At scale ``bucket`` becomes the table's partition/cluster key."""
     return df.withColumn("bucket", srp_bucket_udf(n_planes, seed)(F.col(vec_col)))
-
-
-# back-compat alias: pre-r3 name for the bucketing entry point (now SRP)
-def sign_lsh_buckets(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return srp_buckets(df, vec_col)
 
 
 def srp_band_buckets(
@@ -566,20 +567,108 @@ def cosine_topk_ivf(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k probing the ``n_probe`` centroids closest to the query."""
-    import math
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb)
-
-    probe = sorted(centroids, key=lambda c: -cos(query_vec, c[1]))[:n_probe]
-    probe_ids = [cid for cid, _ in probe]
+    probe_ids = _probe(centroids, query_vec, n_probe)
     assigned = ivf_assignments(df, centroids, id_col, vec_col)
     return cosine_topk(
         assigned.where(F.col("centroid_id").isin(probe_ids)), query_vec, k, id_col, vec_col
     )
+
+
+# --- persisted IVF index core: one lifecycle under every layout (raw here,
+# scalar/product-quantized in operators/pq.py, two-level in operators/ivf2.py)
+
+
+def _probe(rows, query_vec, n: int) -> list:
+    """The one probe rule: ids of the ``n`` cells closest to the query,
+    ordered by (−cos, id). ``rows`` holds (id, centroid) pairs — a
+    centroids/ table's rows as collected; an id may be a tuple (ivf2's
+    (coarse_id, fine_id) cells). cos is the sequential-fold
+    dot(q, c) / (|q|·|c|) — the oracle's cosine_sql doubles, so its
+    ``ORDER BY cosine DESC, cid ASC`` picks the same cells — and a zero
+    norm scores 0."""
+    rows = list(rows)
+    if not rows:
+        return []
+    cmat = np.asarray([c for _, c in rows], dtype=np.float64)
+    q = np.broadcast_to(np.asarray(query_vec, dtype=np.float64), cmat.shape)
+    den = np.sqrt(_seq_dot(q[:1], q[:1])[0]) * np.sqrt(_seq_dot(cmat, cmat))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.where(den == 0.0, 0.0, _seq_dot(q, cmat) / den)
+    order = sorted(range(len(rows)), key=lambda i: (-cos[i], rows[i][0]))
+    return [rows[i][0] for i in order[:n]]
+
+
+def _read_side(spark, path: str, table: str, key: str | None = None, ids=()) -> list:
+    """Collect one of the index's small tables (centroids/, codebooks/,
+    scales/, fine_centroids/), or only its rows whose ``key`` is in ``ids``."""
+    df = spark.read.parquet(f"{path}/{table}")
+    return (df if key is None else df.where(F.col(key).isin(ids))).collect()
+
+
+def _persist_side(df: DataFrame, path: str, table: str) -> list:
+    """Write a trained side table and collect it back, so encoding uses
+    exactly the persisted values a query will read."""
+    write_table(df, f"{path}/{table}", mode="overwrite")
+    return _read_side(df.sparkSession, path, table)
+
+
+def _build_index(
+    df: DataFrame, path: str, k: int, max_iter: int, id_col: str, vec_col: str,
+    encode=None, keys: tuple[str, ...] = ("centroid_id",),
+) -> list[tuple[int, list[float]]]:
+    """The one build body: kmeans_train -> ivf_assignments -> optional
+    ``encode(assigned)`` (returns the columns to persist: a ``codes`` lane,
+    or ivf2's finer cell key; persists any trained side table first) ->
+    vectors/ PARTITIONED BY the cell ``keys`` -> centroids/ keyed by
+    ``keys[0]``. The partitioned layout is what makes a probe an index
+    read (parquet partition pruning, asserted on the query plans in
+    tests)."""
+    centroids = kmeans_train(df, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
+    vectors = ivf_assignments(df, centroids, id_col, vec_col)
+    if encode is not None:
+        vectors = encode(vectors)
+    # Iceberg analog: vectors table partitioned by the cell keys in the spec
+    write_table(vectors, f"{path}/vectors", mode="overwrite", partition_by=keys)
+    cents_df = df.sparkSession.createDataFrame(
+        [(cid, vec) for cid, vec in centroids], f"{keys[0]} int, centroid array<double>"
+    )
+    write_table(cents_df, f"{path}/centroids", mode="overwrite")
+    return centroids
+
+
+def _query_index(
+    spark, path: str, query_vec: list[float], k: int, cells: list,
+    id_col: str, vec_col: str, keys: tuple[str, ...] = ("centroid_id",),
+    bulk=None, over_retrieve: int = 1,
+) -> DataFrame:
+    """The one two-lane query: scan ONLY the probed ``cells`` of vectors/
+    (partition filters on ``keys``; no cells -> the empty result). With a
+    ``bulk`` lane (codes DataFrame -> same rows plus a ``_score`` column)
+    keep the top over_retrieve*k ids by (score DESC, id) — a bounded
+    collect, and a deterministic candidate SET — then re-rank just those
+    rows exactly on the raw column; without one, brute force over the
+    cells."""
+    if len(keys) == 1:
+        pred = F.col(keys[0]).isin(cells)
+    else:
+        pred = F.lit(False)
+        for cell in cells:
+            clause = F.lit(True)
+            for key, v in zip(keys, cell):
+                clause = clause & (F.col(key) == v)
+            pred = pred | clause
+    vectors = spark.read.parquet(f"{path}/vectors").where(pred)
+    if bulk is not None:
+        scored = bulk(vectors.select(id_col, "centroid_id", "codes"))
+        cand_ids = [
+            r[id_col]
+            for r in scored.orderBy(F.col("_score").desc(), F.col(id_col))
+            .limit(over_retrieve * k)
+            .select(id_col)
+            .collect()
+        ]
+        vectors = vectors.where(F.col(id_col).isin(cand_ids))
+    return cosine_topk(vectors, query_vec, k, id_col, vec_col)
 
 
 def build_ivf_index(
@@ -593,22 +682,8 @@ def build_ivf_index(
     """Build-once side of the ANN lifecycle: train centroids (kmeans_train),
     assign every vector, and store the table PARTITIONED BY centroid_id
     with the centroid matrix alongside. A probe query then reads only
-    n_probe/k of the data via parquet partition pruning — the layout that
-    makes IVF an INDEX rather than a full-scan filter (asserted on the
-    query plan in tests)."""
-    from schema_inference_spark.sources.iceberg import write_table
-
-    spark = df.sparkSession
-    centroids = kmeans_train(df, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
-    assigned = ivf_assignments(df, centroids, id_col, vec_col)
-    # Iceberg analog: vectors table partitioned by centroid_id in the spec
-    write_table(assigned, f"{path}/vectors", mode="overwrite",
-                partition_by=("centroid_id",))
-    cents_df = spark.createDataFrame(
-        [(cid, vec) for cid, vec in centroids], "centroid_id int, centroid array<double>"
-    )
-    write_table(cents_df, f"{path}/centroids", mode="overwrite")
-    return centroids
+    n_probe/k of the data."""
+    return _build_index(df, path, k, max_iter, id_col, vec_col)
 
 
 def query_ivf_index(
@@ -622,25 +697,8 @@ def query_ivf_index(
 ) -> DataFrame:
     """Query-many side: pick the n_probe closest centroids driver-side
     (tiny centroid table), scan ONLY their partitions, brute-force within."""
-    import math
-
-    cents = [
-        (r["centroid_id"], list(r["centroid"]))
-        for r in spark.read.parquet(f"{path}/centroids").collect()
-    ]
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        return dot / (
-            math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b))
-        )
-
-    probe = sorted(cents, key=lambda c: -cos(query_vec, c[1]))[:n_probe]
-    probe_ids = [cid for cid, _ in probe]
-    vectors = spark.read.parquet(f"{path}/vectors").where(
-        F.col("centroid_id").isin(probe_ids)
-    )
-    return cosine_topk(vectors, query_vec, k, id_col, vec_col)
+    probe_ids = _probe(_read_side(spark, path, "centroids"), query_vec, n_probe)
+    return _query_index(spark, path, query_vec, k, probe_ids, id_col, vec_col)
 
 
 def embedding_near_dup_pairs(

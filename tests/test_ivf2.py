@@ -127,3 +127,14 @@ def test_ivf2_fine_training_layout_proof(spark, emb):
         )
 
     assert snap(assigned.repartition(1)) == snap(assigned.repartition(6, "vec_id"))
+
+
+def test_ivf2_empty_probe_returns_empty(spark, emb, ivf2_index):
+    """No probed cell — n_probe=0, or n_probe_coarse=0 which leaves no
+    fine-centroid rows — is an empty (vec_id, cosine_sim) result, not a
+    crash on a missing scan predicate."""
+    q = _query_vec(emb)
+    for kw in ({"n_probe": 0}, {"n_probe_coarse": 0}):
+        got = query_ivf2_index(spark, ivf2_index, q, k=5, **kw)
+        assert got.columns == ["vec_id", "cosine_sim"]
+        assert got.collect() == [], kw
