@@ -61,6 +61,13 @@ def sf_of(sf_dir: str) -> float:
         return 0.1
 
 
+def images_cache_path(n: int, cache_root: str = "/tmp/spark_graft_bench_cache") -> str:
+    """Where ``ensure_images_parquet`` caches the n-image corpus at the
+    current ``BENCH_DIMS_SCALE``."""
+    scale = float(os.environ.get("BENCH_DIMS_SCALE", "4.0"))
+    return f"{cache_root}/images_n{n}_s{scale:g}"
+
+
 def ensure_images_parquet(spark, n: int, cache_root: str = "/tmp/spark_graft_bench_cache"):
     """Generate-once, read-from-parquet corpus (plus clean snapshot profile).
 
@@ -71,7 +78,7 @@ def ensure_images_parquet(spark, n: int, cache_root: str = "/tmp/spark_graft_ben
     from schema_inference_spark.datagen.images import generate_image_corpus, images_spark_df
 
     scale = float(os.environ.get("BENCH_DIMS_SCALE", "4.0"))
-    path = f"{cache_root}/images_n{n}_s{scale:g}"
+    path = images_cache_path(n, cache_root)
     if not os.path.exists(f"{path}/_done"):
         corpus = generate_image_corpus(n, n_parts=32, drift_scale=scale)
         images, captions = images_spark_df(spark, corpus)

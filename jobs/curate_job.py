@@ -2,7 +2,7 @@
 """Corpus curation as one resumable spark-submit job: near-dup dedup ->
 dedup groups -> leakage-safe split (-> optional PII redaction) ->
 sequence packing. The production shape of tests/test_curation_pipeline.py
-and the fifth scaling axis (bench_curation_scaling.py, 0.96 N-vs-4N).
+and the fifth scaling axis (bench_scaling.py curation, 0.96 N-vs-4N).
 
     spark-submit --py-files /tmp/schema_inference_spark.zip \
         jobs/curate_job.py \

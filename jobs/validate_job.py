@@ -35,9 +35,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--run-id", default=f"run-{int(time.time())}")
     ap.add_argument("--no-pixels", action="store_true")
     ap.add_argument("--psnr-min-db", type=float, default=40.0)
-    # bench instrumentation (bench_submit_scaling.py): after the production
-    # run, re-run the validation phase N more times and print a one-line
-    # `BENCH {json}` with the best suite time. 0 = off (production default).
+    # bench instrumentation (the submit axis of bench_scaling.py): after the
+    # production run, re-run the validation phase N more times and print a
+    # one-line `BENCH {json}` with the best suite time. 0 = off (production
+    # default).
     ap.add_argument("--bench-rounds", type=int, default=0)
     args = ap.parse_args(argv)
 

@@ -15,6 +15,30 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def session_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The engine's ``spark.*`` settings: what ``get_spark`` applies, and
+    what a launcher passes as ``spark-submit --conf`` flags."""
+    if shuffle_partitions is None:
+        shuffle_partitions = int(
+            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+        )
+    return {
+        # AQE: runtime partition coalescing + skew-join splitting. This is the
+        # modern replacement for the reference's manual `-pa` knob.
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        # Arrow for every pandas UDF / toPandas hop (no per-row pickling).
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        # Deterministic timestamps vs the DuckDB oracle.
+        "spark.sql.session.timeZone": "UTC",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    }
+
+
 def get_spark(
     app_name: str = "schema_inference_spark",
     master: str | None = None,
@@ -40,29 +64,8 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             pkg_root + (os.pathsep + existing if existing else "")
         )
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
-
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        # AQE: runtime partition coalescing + skew-join splitting. This is the
-        # modern replacement for the reference's manual `-pa` knob.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow for every pandas UDF / toPandas hop (no per-row pickling).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Deterministic timestamps vs the DuckDB oracle.
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    )
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in {**session_conf(shuffle_partitions), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
