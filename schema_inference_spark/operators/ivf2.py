@@ -54,6 +54,7 @@ from schema_inference_spark.operators.similarity import (
     _query_index,
     _read_side,
     _stack_rows,
+    centroids_schema,
 )
 
 FINE_SCHEMA = "coarse_id int, fine_id int, centroid array<double>"
@@ -143,7 +144,7 @@ def build_ivf2_index(
             assigned, k_fine=k_fine, max_iter=fine_max_iter,
             train_sample=train_sample, id_col=id_col, vec_col=vec_col,
         )
-        fine = _fine_to_dict(_persist_side(fine_df, path, "fine_centroids"))
+        fine = _fine_to_dict(_persist_side(fine_df, path, "fine_centroids", FINE_SCHEMA))
         full = fine_assignments(assigned, fine, vec_col)
         return full.select(id_col, vec_col, "coarse_id", "fine_id")
 
@@ -165,8 +166,9 @@ def query_ivf2_index(
     """Probe the best n_probe (coarse, fine) cells within the
     n_probe_coarse closest coarse centroids; scan only those partitions.
     Both picks are ``_probe``'s (−cos, id) rule; no cell -> empty result."""
-    coarse_ids = _probe(_read_side(spark, path, "centroids"), query_vec, n_probe_coarse)
-    fine_rows = _read_side(spark, path, "fine_centroids", "coarse_id", coarse_ids)
+    cents = _read_side(spark, path, "centroids", centroids_schema("coarse_id"))
+    coarse_ids = _probe(cents, query_vec, n_probe_coarse)
+    fine_rows = _read_side(spark, path, "fine_centroids", FINE_SCHEMA, "coarse_id", coarse_ids)
     cells = _probe(
         (((r["coarse_id"], r["fine_id"]), r["centroid"]) for r in fine_rows),
         query_vec, n_probe,

@@ -18,13 +18,14 @@ Until r5 these were documented swap points; they are now real kernels:
   64 x float32 at the reference shape). No shuffle: rows already carry
   ``centroid_id`` from IVF assignment.
 * ``build_pq_index`` / ``query_pq_index`` — the build-once/query-many
-  lifecycle. A query reads ONLY the probed partitions' (vec_id, codes)
-  columns (partition pruning + column pruning), scores codes with an ADC
-  lookup table (m adds per row instead of a d-mul dot), over-retrieves
-  ``over_retrieve * k`` candidates, then re-ranks JUST those rows
-  exactly on the raw column — the raw vectors are read only for
-  candidates, so the bulk scan touches ~16x less data while recall@k
-  returns to the exact-probe level.
+  lifecycle. A query is one plan over ONLY the probed partitions
+  (partition pruning): one scan reads (vec_id, centroid_id, codes, raw)
+  and only centroid_id and codes cross into Python, where an ADC lookup
+  table scores them (m adds per row instead of a d-mul dot); the top
+  ``over_retrieve * k`` rows per task and then overall are re-ranked
+  exactly on the raw column in the JVM, so recall@k returns to the
+  exact-probe level. The raw column is read with the codes, but never
+  serialized to Python and never shuffled beyond the per-task top-n.
 
 Public provenance: product quantization with asymmetric distance
 computation follows Jegou, Douze & Schmid, "Product Quantization for
@@ -42,9 +43,9 @@ Scale notes (the 100 TB story): codebooks are tiny by construction
 (k_ivf x m x ncodes x (d/m) floats — ~0.5 MB at k=8, m=16, ncodes=256,
 d=64) and ship in UDF closures like the IVF centroid matrix; training
 reads a bounded per-partition sample; encoding and scoring are
-single-pass Arrow projections; the only driver-side collect in the query
-path is the bounded over_retrieve*k candidate id list (same bound class
-as every top-k in this repo). Reference provenance: the reference engine
+single-pass Arrow projections; the query path collects only the probed
+cells' side-table rows and the k result rows (same bound class as every
+top-k in this repo). Reference provenance: the reference engine
 has no ANN surface — this extends the curation family the brief asks
 for; the persisted-index lifecycle mirrors build_ivf_index
 (operators/similarity.py), whose layout the reference's persisted-output
@@ -60,19 +61,20 @@ from pyspark.sql.functions import pandas_udf
 
 from schema_inference_spark.operators.similarity import (
     _build_index,
-    _cos_to,
-    _fold_rows,
+    _cosine_fold,
     _persist_side,
     _probe,
     _query_index,
+    _query_norm,
     _read_side,
     _stack_rows,
-    _to_matrix_t,
+    centroids_schema,
 )
 
 CODEBOOK_SCHEMA = (
     "centroid_id int, subspace int, code int, codeword array<float>"
 )
+SCALES_SCHEMA = "centroid_id int, dim int, scale double"
 
 
 def _unit(query_vec) -> np.ndarray:
@@ -312,7 +314,7 @@ def build_pq_index(
             assigned, m=m, ncodes=ncodes, train_sample=train_sample,
             max_iter=pq_max_iter, id_col=id_col, vec_col=vec_col,
         )
-        codebooks = _codebooks_to_dict(_persist_side(cb_df, path, "codebooks"))
+        codebooks = _codebooks_to_dict(_persist_side(cb_df, path, "codebooks", CODEBOOK_SCHEMA))
         encoded = pq_encode(assigned, codebooks, vec_col=vec_col)
         return encoded.select(id_col, vec_col, "centroid_id", "codes")
 
@@ -329,15 +331,18 @@ def query_pq_index_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Query-many serving path: answer a BATCH of queries in one Spark
-    job — per-query ``query_pq_index`` calls serialize on driver
-    scheduling (two jobs per query: candidate cut + re-rank), which the
-    PQ scaling bench showed dominates small probes. Shape: one codes
-    scan filtered to the union of all probed partitions, fanned out per
-    probing query by a broadcast join against the tiny (qid,
-    centroid_id) probe map, ADC-scored with per-(qid, cid) lookup
-    tables, candidate-cut and re-ranked with two windows partitioned by
-    qid. Returns (qid, vec_id, cosine_sim) — per qid, EXACTLY the rows
+    """Query-many serving path: answer a BATCH of queries in one plan —
+    per-query ``query_pq_index`` calls serialize on driver scheduling
+    (four jobs per query: the centroids/ and codebooks/ collects, the
+    vectors/ schema read and the query plan), which the PQ scaling bench
+    showed dominates small probes. Shape: one scan filtered to the union
+    of all probed partitions, fanned out per probing query by a
+    broadcast join against the tiny (qid, centroid_id) probe map,
+    ADC-scored with per-(qid, cid) lookup tables, candidate-cut and
+    re-ranked with two windows partitioned by qid; the re-rank is the
+    single query's ``_cosine_fold``, with each query's vector and norm
+    joined in from a broadcast (qid, _q, _qn) frame. Returns (qid,
+    vec_id, cosine_sim) — per qid, EXACTLY the rows
     ``query_pq_index(query_vecs[qid], ...)`` returns (same kernels, same
     tie rules; asserted bit-for-bit in tests).
 
@@ -356,7 +361,7 @@ def query_pq_index_batch(
             [], f"qid int, {id_col} bigint, cosine_sim double"
         )
 
-    cents = _read_side(spark, path, "centroids")
+    cents = _read_side(spark, path, "centroids", centroids_schema())
     probe_pairs = [
         (qid, cid)
         for qid, qv in enumerate(query_vecs)
@@ -364,7 +369,7 @@ def query_pq_index_batch(
     ]
     probe_ids_all = sorted({cid for _, cid in probe_pairs})
     codebooks = _codebooks_to_dict(
-        _read_side(spark, path, "codebooks", "centroid_id", probe_ids_all)
+        _read_side(spark, path, "codebooks", CODEBOOK_SCHEMA, "centroid_id", probe_ids_all)
     )
     # one int key per (qid, cid) pair, so the batch ADC groups like the
     # single-query one
@@ -380,17 +385,12 @@ def query_pq_index_batch(
         key = qid_s.values.astype(np.int64) * stride + cid_s.values
         return _adc_sum(luts, key, codes_s.values)
 
-    # the exact re-rank kernel of cosine_topk, applied per qid sub-batch
-    # (folds are row-local, so batching cannot change any value)
-    q_mat = np.asarray([np.asarray(v, dtype=np.float64) for v in query_vecs])
-    q_norms = np.sqrt(_fold_rows(q_mat.T.copy(), q_mat.T.copy()))
-
-    @pandas_udf("double")
-    def _exact(qid_s: pd.Series, vec_s: pd.Series) -> pd.Series:
-        out = np.empty(len(vec_s), dtype=np.float64)
-        for qid, idx in _by_cell(qid_s.values):
-            out[idx] = _cos_to(_to_matrix_t(vec_s.iloc[idx]), q_mat[qid], q_norms[qid])
-        return pd.Series(out)
+    # the single query's re-rank fold, with each candidate's query vector
+    # and norm joined in from a broadcast (qid, _q, _qn) frame
+    q_df = F.broadcast(spark.createDataFrame(
+        [(qid, q.tolist(), qn) for qid, (q, qn) in enumerate(map(_query_norm, query_vecs))],
+        "qid int, _q array<double>, _qn double",
+    ))
 
     probe_df = F.broadcast(
         spark.createDataFrame(probe_pairs, "qid int, centroid_id int")
@@ -410,8 +410,8 @@ def query_pq_index_batch(
         .where(F.col("rn") <= over_retrieve * k)
         .drop("rn")
     )
-    exact = cands.withColumn(
-        "cosine_sim", F.round(_exact(F.col("qid"), F.col(vec_col)), 6)
+    exact = cands.join(q_df, "qid").withColumn(
+        "cosine_sim", F.round(_cosine_fold(F.col(vec_col), F.col("_q"), F.col("_qn")), 6)
     )
     topk_w = Window.partitionBy("qid").orderBy(
         F.col("cosine_sim").desc(), F.col(id_col)
@@ -535,7 +535,7 @@ def build_sq_index(
         scales = None
         if dtype == "int8":
             scales = _scales_to_dict(
-                _persist_side(sq_train_scales(assigned, vec_col), path, "scales")
+                _persist_side(sq_train_scales(assigned, vec_col), path, "scales", SCALES_SCHEMA)
             )
         encoded = sq_encode(assigned, dtype=dtype, scales=scales, vec_col=vec_col, out_col="codes")
         return encoded.select(id_col, vec_col, "centroid_id", "codes")
@@ -557,11 +557,11 @@ def query_sq_index(
     """Scalar-quantized probe: prune to n_probe partitions, score the
     dequantized codes column, over-retrieve, exact re-rank on raw — the
     same two-lane shape as query_pq_index with a cheaper bulk lane."""
-    probe_ids = _probe(_read_side(spark, path, "centroids"), query_vec, n_probe)
+    probe_ids = _probe(_read_side(spark, path, "centroids", centroids_schema()), query_vec, n_probe)
     scales = None
     if dtype == "int8":
         scales = _scales_to_dict(
-            _read_side(spark, path, "scales", "centroid_id", probe_ids)
+            _read_side(spark, path, "scales", SCALES_SCHEMA, "centroid_id", probe_ids)
         )
     return _query_index(
         spark, path, query_vec, k, probe_ids, id_col, vec_col,
@@ -596,13 +596,15 @@ def query_pq_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ probe: (1) pick n_probe centroids driver-side; (2) scan ONLY
-    those partitions' (vec_id, codes) columns and ADC-score them; (3) keep
-    the top over_retrieve*k candidate ids (bounded collect); (4) exact
-    re-rank just those rows on the raw column. Ties in the candidate cut
-    break by vec_id so the candidate SET is deterministic."""
-    probe_ids = _probe(_read_side(spark, path, "centroids"), query_vec, n_probe)
+    those partitions and ADC-score their codes (only centroid_id and codes
+    go to Python); (3) keep the top over_retrieve*k rows, a per-task top-n
+    before a single-partition shuffle; (4) exact re-rank those rows on
+    the raw column, natively in the same plan. Steps 2-4 are one Spark
+    job. Ties in the candidate cut break by vec_id so the candidate SET
+    is deterministic."""
+    probe_ids = _probe(_read_side(spark, path, "centroids", centroids_schema()), query_vec, n_probe)
     codebooks = _codebooks_to_dict(
-        _read_side(spark, path, "codebooks", "centroid_id", probe_ids)
+        _read_side(spark, path, "codebooks", CODEBOOK_SCHEMA, "centroid_id", probe_ids)
     )
     q_unit = _unit(query_vec)
     luts = {cid: _lut(q_unit, cb) for cid, cb in codebooks.items()}

@@ -21,7 +21,10 @@ dimension-by-dimension — the SAME sequential IEEE-754 fold as DuckDB's
 across the whole Arrow batch (d numpy ops per batch instead of an
 interpreted per-row HOF: Spark 4.1.2 evaluates ``transform``/``aggregate``
 lambdas row-at-a-time interpreted — the round-1 20x MinHash lesson, and
-VERDICT r1 flagged cosine as the remaining offender).
+VERDICT r1 flagged cosine as the remaining offender). The one native fold,
+``_cosine_fold``, re-ranks an index query's over_retrieve·k candidates:
+at that size the Python stage's worker round trip, not the fold, is the
+cost.
 """
 
 from __future__ import annotations
@@ -125,24 +128,45 @@ def _cosine_pair_udf(a: Column, b: Column) -> Column:
     return _cos2(a, b)
 
 
+def _query_norm(query_vec) -> tuple[np.ndarray, float]:
+    """The query as float64 and its sequential-fold norm."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    return q, float(np.sqrt(_seq_dot(q[None, :], q[None, :])[0]))
+
+
 def cosine_to_query_udf(query_vec: list[float]):
     """Column fn: cosine(vec_col, query_vec); the query vector ships once in
     the serialized closure (executor-side broadcast), not as plan literals."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.sqrt(_seq_dot(q[None, :], q[None, :])[0]))
+    q, qn = _query_norm(query_vec)
 
     @pandas_udf("double")
     def _cos(a: pd.Series) -> pd.Series:
-        return pd.Series(_cos_to(_to_matrix_t(a), q, qn))
+        mt = _to_matrix_t(a)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return pd.Series(_fold_many(mt, q[None, :])[0] / (np.sqrt(_fold_rows(mt, mt)) * qn))
 
     return _cos
 
 
-def _cos_to(mt: np.ndarray, q: np.ndarray, qn: float) -> np.ndarray:
-    """Exact fold cosine of every column of a (d, n) batch to ``q`` (norm
-    ``qn``) — the re-rank kernel of every index query."""
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return _fold_many(mt, q[None, :])[0] / (np.sqrt(_fold_rows(mt, mt)) * qn)
+def _cosine_fold(vec: Column, q: Column, qn: Column) -> Column:
+    """``cosine_to_query_udf``'s kernel as a native expression over the
+    array columns ``vec`` and ``q`` (``qn`` = the query's norm): the same
+    j-ascending multiply-then-add folds, sqrt and divide, so the doubles
+    are bitwise equal. The lambdas run interpreted, row at a time, so this
+    is the re-rank of an index query (over_retrieve·k rows), never a bulk
+    scan. A zero denominator divides as IEEE does (x/0 -> ±inf) instead
+    of raising Spark's ANSI divide-by-zero error, and a NaN — 0/0, e.g. a
+    zero row or a zero query — is null, as the UDF's NaN arrives through
+    Arrow."""
+
+    def fold(a: Column, b: Column) -> Column:
+        terms = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
+        return F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
+
+    dot = fold(vec, q)
+    den = F.sqrt(fold(vec, vec)) * qn
+    ratio = F.when(den != 0, dot / den).when(dot != 0, F.signum(dot) * float("inf"))
+    return F.nanvl(ratio, F.lit(None).cast("double"))
 
 
 def cosine_expr(a: Column, b: Column, decimals: int = 6) -> Column:
@@ -173,9 +197,14 @@ def cosine_topk(
 
     One Arrow-batched numpy projection + TakeOrderedAndProject; O(n*d),
     zero shuffle, embarrassingly partition-parallel at any scale."""
-    cos = cosine_to_query_udf(query_vec)
+    return _top_by_cosine(df, cosine_to_query_udf(query_vec)(F.col(vec_col)), k, id_col)
+
+
+def _top_by_cosine(df: DataFrame, cos: Column, k: int, id_col: str) -> DataFrame:
+    """(id, cosine_sim) of the top k rows of ``df`` by (cosine DESC, id),
+    the cosine rounded to 6 places."""
     return (
-        df.select(id_col, F.round(cos(F.col(vec_col)), 6).alias("cosine_sim"))
+        df.select(id_col, F.round(cos, 6).alias("cosine_sim"))
         .orderBy(F.desc("cosine_sim"), F.asc(id_col))
         .limit(k)
     )
@@ -598,18 +627,31 @@ def _probe(rows, query_vec, n: int) -> list:
     return [rows[i][0] for i in order[:n]]
 
 
-def _read_side(spark, path: str, table: str, key: str | None = None, ids=()) -> list:
+def centroids_schema(key: str = "centroid_id") -> str:
+    """DDL of an index's centroids/ table; ``key`` is the layout's first
+    cell key (ivf2's is ``coarse_id``)."""
+    return f"{key} int, centroid array<double>"
+
+
+def _read_side(spark, path: str, table: str, schema: str, key: str | None = None, ids=()) -> list:
     """Collect one of the index's small tables (centroids/, codebooks/,
-    scales/, fine_centroids/), or only its rows whose ``key`` is in ``ids``."""
-    df = spark.read.parquet(f"{path}/{table}")
+    scales/, fine_centroids/), or only its rows whose ``key`` is in ``ids``.
+    ``schema`` is the table's declared DDL — the one its writer uses — so
+    the read plans no schema-inference job. (A declared column the files
+    lack would read back as nulls, silently: never retype a DDL here.)"""
+    df = spark.read.schema(schema).parquet(f"{path}/{table}")
     return (df if key is None else df.where(F.col(key).isin(ids))).collect()
 
 
-def _persist_side(df: DataFrame, path: str, table: str) -> list:
+def _persist_side(df: DataFrame, path: str, table: str, schema: str) -> list:
     """Write a trained side table and collect it back, so encoding uses
-    exactly the persisted values a query will read."""
+    exactly the persisted values a query will read. ``df`` must have the
+    declared ``schema`` every later read uses."""
+    declared = df.sparkSession.createDataFrame([], schema).schema
+    if [(f.name, f.dataType) for f in df.schema] != [(f.name, f.dataType) for f in declared]:
+        raise ValueError(f"{table}/ is {df.schema.simpleString()}, declared {schema!r}")
     write_table(df, f"{path}/{table}", mode="overwrite")
-    return _read_side(df.sparkSession, path, table)
+    return _read_side(df.sparkSession, path, table, schema)
 
 
 def _build_index(
@@ -630,7 +672,7 @@ def _build_index(
     # Iceberg analog: vectors table partitioned by the cell keys in the spec
     write_table(vectors, f"{path}/vectors", mode="overwrite", partition_by=keys)
     cents_df = df.sparkSession.createDataFrame(
-        [(cid, vec) for cid, vec in centroids], f"{keys[0]} int, centroid array<double>"
+        [(cid, vec) for cid, vec in centroids], centroids_schema(keys[0])
     )
     write_table(cents_df, f"{path}/centroids", mode="overwrite")
     return centroids
@@ -642,12 +684,17 @@ def _query_index(
     bulk=None, over_retrieve: int = 1,
 ) -> DataFrame:
     """The one two-lane query: scan ONLY the probed ``cells`` of vectors/
-    (partition filters on ``keys``; no cells -> the empty result). With a
-    ``bulk`` lane (codes DataFrame -> same rows plus a ``_score`` column)
-    keep the top over_retrieve*k ids by (score DESC, id) — a bounded
-    collect, and a deterministic candidate SET — then re-rank just those
-    rows exactly on the raw column; without one, brute force over the
-    cells."""
+    (partition filters on ``keys``; no cells -> the empty result). Without
+    a ``bulk`` lane, brute force over the cells. With one (codes DataFrame
+    -> same rows plus a ``_score`` column), one plan does the rest: the
+    scan reads (id, centroid_id, codes, raw) once and only centroid_id and
+    codes cross into Python; the top over_retrieve*k rows by (score DESC,
+    id) — a per-task top-n, then a single-partition shuffle of at most
+    that many rows per task — are re-ranked exactly on the raw column in
+    the JVM (``_cosine_fold``), and the top k by (cosine DESC, id) come
+    back. Ids are unique in vectors/ (one row per vector): the cut keeps
+    exactly over_retrieve*k rows, so a repeated id would take two
+    candidate slots."""
     if len(keys) == 1:
         pred = F.col(keys[0]).isin(cells)
     else:
@@ -658,17 +705,16 @@ def _query_index(
                 clause = clause & (F.col(key) == v)
             pred = pred | clause
     vectors = spark.read.parquet(f"{path}/vectors").where(pred)
-    if bulk is not None:
-        scored = bulk(vectors.select(id_col, "centroid_id", "codes"))
-        cand_ids = [
-            r[id_col]
-            for r in scored.orderBy(F.col("_score").desc(), F.col(id_col))
-            .limit(over_retrieve * k)
-            .select(id_col)
-            .collect()
-        ]
-        vectors = vectors.where(F.col(id_col).isin(cand_ids))
-    return cosine_topk(vectors, query_vec, k, id_col, vec_col)
+    if bulk is None:
+        return cosine_topk(vectors, query_vec, k, id_col, vec_col)
+    q, qn = _query_norm(query_vec)
+    cands = (
+        bulk(vectors.select(id_col, "centroid_id", "codes", vec_col))
+        .orderBy(F.col("_score").desc(), F.col(id_col))
+        .limit(over_retrieve * k)
+    )
+    cos = _cosine_fold(F.col(vec_col), F.lit(q.tolist()), F.lit(qn))
+    return _top_by_cosine(cands, cos, k, id_col)
 
 
 def build_ivf_index(
@@ -697,7 +743,7 @@ def query_ivf_index(
 ) -> DataFrame:
     """Query-many side: pick the n_probe closest centroids driver-side
     (tiny centroid table), scan ONLY their partitions, brute-force within."""
-    probe_ids = _probe(_read_side(spark, path, "centroids"), query_vec, n_probe)
+    probe_ids = _probe(_read_side(spark, path, "centroids", centroids_schema()), query_vec, n_probe)
     return _query_index(spark, path, query_vec, k, probe_ids, id_col, vec_col)
 
 
