@@ -65,7 +65,7 @@ from schema_inference_spark.operators.pq import (
 from schema_inference_spark.operators.profile import profile_images
 from schema_inference_spark.operators.sampling import leakage_safe_split
 from schema_inference_spark.operators.similarity import (
-    _probe, cosine_topk, ivf_assignments,
+    _probe, _query_index, cosine_topk, ivf_assignments,
 )
 from schema_inference_spark.session import get_spark, session_conf
 from schema_inference_spark.sources.iceberg import write_table
@@ -439,10 +439,11 @@ K_COARSE, M, NCODES = 64, 16, 64
 
 
 @functools.cache
-def pq_index(spark, n: int) -> tuple[DataFrame, list, dict, DataFrame]:
+def pq_index(spark, n: int) -> tuple[DataFrame, list, dict, str]:
     """The ANN corpus, per-cell codebooks trained once on a deterministic
     1-in-20 sample (the production shape: kmeans bounded by train_sample)
-    and the encoded index, persisted partitioned by centroid_id."""
+    and the encoded index, persisted partitioned by centroid_id under the
+    returned root."""
     vecs, centroids = _vectors(spark, n, K_COARSE)
     root = f"/tmp/spark_graft_pq_idx_v1_{n}_k{K_COARSE}_m{M}_c{NCODES}"
     built = os.path.exists(f"{root}/_done")
@@ -458,11 +459,11 @@ def pq_index(spark, n: int) -> tuple[DataFrame, list, dict, DataFrame]:
         write_table(encoded.select("vec_id", "embedding", "centroid_id", "codes"),
                     f"{root}/vectors", mode="overwrite", partition_by=("centroid_id",))
         open(f"{root}/_done", "w").write("ok")
-    return vecs, centroids, codebooks, spark.read.parquet(f"{root}/vectors")
+    return vecs, centroids, codebooks, root
 
 
 def pq(spark, n: int) -> dict:
-    vecs, centroids, codebooks, index_vecs = pq_index(spark, n)
+    vecs, centroids, codebooks, root = pq_index(spark, n)
     # BUILD lane: assignment + PQ encode over the full corpus, forced by a
     # crc32-of-codes checksum: encode is a pure per-row function given the
     # shared codebooks, so the checksum must be bit-equal at every width
@@ -471,18 +472,16 @@ def pq(spark, n: int) -> dict:
                   F.count(F.lit(1)).alias("c")).collect()[0]
     if chk["c"] != n:
         raise SystemExit(f"pq encoded {chk['c']} of {n} vectors")
-    # PROBE lane: per query, ADC over the pruned index, then exact re-rank
-    # of the top 80
+    # PROBE lane: per query, the one-plan query over the pruned index: ADC
+    # cut of the top 80 by (score DESC, id), exact re-rank to the top 10
     probes = []
     for i, (_, q) in enumerate(centroids[:4]):
         pids = _probe(centroids, q, 2)
-        pruned = index_vecs.where(F.col("centroid_id").isin(pids))
         luts = {cid: _lut(_unit(q), codebooks[cid]) for cid in pids}
-        scored = adc_scores(pruned.select("vec_id", "centroid_id", "codes"), luts)
-        cand = [r["vec_id"] for r in
-                scored.orderBy(F.col("adc_score").desc(), "vec_id").limit(80).collect()]
-        probes.append(cosine_topk(pruned.where(F.col("vec_id").isin(cand)), q, k=10)
-                      .withColumn("qid", F.lit(i)))
+        probes.append(_query_index(
+            spark, root, q, 10, pids, "vec_id", "embedding",
+            bulk=lambda c: adc_scores(c, luts, "_score"), over_retrieve=8,
+        ).withColumn("qid", F.lit(i)))
     return {"checksum": int(chk["s"]), "rows": int(chk["c"]), "topk": _topk(probes)}
 
 

@@ -31,7 +31,8 @@ Outputs under --output:
   merged_schema.json  the A8 superset schema
   protos/          one row per .proto file (file_name, content) parquet
 
-Exit 0 on success; 1 if no parseable rows were found.
+Exit 0 on success; 1 if no parseable rows were found; 2 on a usage error
+(argparse), such as a --top-k or --merge-n below 1.
 """
 
 from __future__ import annotations
@@ -41,14 +42,21 @@ import json
 import sys
 
 
+def _at_least_one(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--format", default="sequencefile",
                     choices=("sequencefile", "text", "json-docs", "parquet-kv"))
     ap.add_argument("--output", required=True)
-    ap.add_argument("--top-k", type=int, default=20)  # Constants.java:16 collects 20
-    ap.add_argument("--merge-n", type=int, default=10)  # merges top 10
+    ap.add_argument("--top-k", type=_at_least_one, default=20)  # Constants.java:16 collects 20
+    ap.add_argument("--merge-n", type=_at_least_one, default=10)  # merges top 10
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -75,11 +83,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.format == "sequencefile":
         rows = read_sequencefile_values(spark, args.input)
-    elif args.format == "text":
-        rows = spark.read.text(args.input).withColumnRenamed("value", "value")
     elif args.format == "parquet-kv":
         rows = spark.read.parquet(args.input).select("value")
-    else:  # json-docs
+    else:  # text, json-docs: one row per line
         rows = spark.read.text(args.input)
 
     if args.format == "json-docs":

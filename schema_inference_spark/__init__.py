@@ -11,8 +11,7 @@ idiomatic Spark DataFrame pipeline:
   integrity, distribution drift, pixel/caption invariants) over an
   image+caption table at 10^12-image design scale;
 * training-data-pipeline operators: dedup (exact / MinHash-LSH / SimHash /
-  n-gram Jaccard / embedding cosine), similarity search, text analysis,
-  multimodal column plumbing.
+  n-gram Jaccard / embedding cosine), similarity search, text analysis.
 
 Design rules (enforced throughout):
   - DataFrame/SQL first; Catalyst does pushdown/pruning/join selection.

@@ -149,10 +149,6 @@ def _minhash_expr(col: Column, seed: int, k: int = 3) -> Column:
     return F.array_min(F.transform(_shingle_hashes_expr(col, k), lambda h: _perm_expr(h, seed)))
 
 
-def _minhash_from_hashes(hashes_col: Column, seed: int) -> Column:
-    return F.array_min(F.transform(hashes_col, lambda h: _perm_expr(h, seed)))
-
-
 def shingle_hashes_sql(expr: str, k: int = 3) -> str:
     return (
         f"list_transform({shingles_sql(expr, k)}, "
@@ -273,10 +269,3 @@ def hamming_distance_expr(a: Column, b: Column, n_bits: int = SIMHASH_BITS) -> C
     (fingerprints are non-negative, so two's-complement popcount is exact)."""
     del n_bits  # popcount covers the full word
     return F.bit_count(a.bitwiseXOR(b))
-
-
-def hamming_distance_sql(a: str, b: str, n_bits: int = SIMHASH_BITS) -> str:
-    """DuckDB counterpart: xor() function ('#' is Postgres-only and DuckDB
-    rejects it — ADVICE r1), bit_count over the BIGINT result."""
-    del n_bits
-    return f"bit_count(xor(({a})::BIGINT, ({b})::BIGINT))"

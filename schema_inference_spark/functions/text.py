@@ -53,8 +53,7 @@ def bpe_ish_token_count_sql(expr: str) -> str:
 # Packing and chunking budgets are defined in TOKENS, and production budgets
 # come from the real model tokenizer — which does not exist in this sandbox
 # (VERDICT r4 Missing #3: ``bpe_ish`` is an honest approximation). The
-# counter is therefore a POLICY, the same swap-point pattern as the
-# multimodal codec policy (multimodal/stubs.py): named counters map to
+# counter is therefore a POLICY, a swap point: named counters map to
 # (Column expr builder, DuckDB SQL builder); production registers its real
 # tokenizer once — e.g. an Arrow pandas UDF wrapping tiktoken/sentencepiece,
 # ``register_token_counter("bpe", lambda c: my_pandas_udf(c))`` — and every

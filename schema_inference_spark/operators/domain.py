@@ -31,42 +31,6 @@ def schema_mismatches(df: DataFrame, declared: T.StructType) -> list[str]:
     return problems
 
 
-def schema_evolution_problems(
-    old: T.StructType, new: T.StructType, widenings: dict[str, tuple[str, ...]] | None = None
-) -> list[str]:
-    """Backward-compatibility check between two declared schema versions
-    (the relational analog of the reference's proto-evolution concern:
-    emitted message hierarchies must stay readable by old consumers).
-
-    Compatible changes: adding NULLABLE columns, widening a type along the
-    allowed lattice (int->bigint, float->double, anything->string by
-    default). Incompatible: dropping columns, narrowing, adding non-null
-    columns, nullable -> non-null tightening.
-    """
-    widenings = widenings or {
-        "int": ("bigint",),
-        "float": ("double",),
-        "int_to_str": (),
-    }
-    problems: list[str] = []
-    old_fields = {f.name: f for f in old.fields}
-    new_fields = {f.name: f for f in new.fields}
-    for name, f in old_fields.items():
-        if name not in new_fields:
-            problems.append(f"dropped column {name}")
-            continue
-        nf = new_fields[name]
-        ot, nt = f.dataType.simpleString(), nf.dataType.simpleString()
-        if ot != nt and nt not in widenings.get(ot, ()) and nt != "string":
-            problems.append(f"incompatible type change {name}: {ot} -> {nt}")
-        if f.nullable and not nf.nullable:
-            problems.append(f"nullability tightened on {name}")
-    for name, nf in new_fields.items():
-        if name not in old_fields and not nf.nullable:
-            problems.append(f"new non-nullable column {name}")
-    return problems
-
-
 def domain_violations(
     images: DataFrame,
     fmt_domain: tuple[str, ...] = ("png", "jpeg", "webp"),

@@ -21,7 +21,7 @@ reference's quote-per-inferred-type JSON assembly step entirely.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FIELD_SEP = "\x01"  # ^A
@@ -64,28 +64,3 @@ def parse_delimited(df: DataFrame, col: str = "value", drop_empty: bool = True) 
             & ~v.rlike("[^\\x00-\\x7F]"),
         )
     return parsed.drop("_nf").withColumn("kv", kv)
-
-
-def kv_shape_expr(kv: Column) -> Column:
-    """Canonical shape string of a parsed KV map (same canon as
-    functions/json_shape.flat_json_shape_expr, minus the JSON parse)."""
-    from schema_inference_spark.functions.type_inference import infer_json_type_expr
-
-    entries = F.transform(
-        F.array_sort(F.map_entries(kv)),
-        lambda e: F.concat(
-            F.lit('"'),
-            e["key"],
-            F.lit('":{"type":"'),
-            infer_json_type_expr(e["value"]),
-            F.lit('"}'),
-        ),
-    )
-    return F.concat(
-        F.lit('{"type":"object","properties":{'), F.array_join(entries, ","), F.lit("}}")
-    )
-
-
-def display_remap(col: Column) -> Column:
-    """^A -> |, ^B -> =, ^C -> ,  (reference ProcessTextColumn4.java:52-58)."""
-    return F.translate(col, FIELD_SEP + KV_SEP + PAIR_SEP, "|=,")

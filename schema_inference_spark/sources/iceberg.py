@@ -8,31 +8,22 @@ Iceberg runtime jar, so every call degrades explicitly:
 * ``read_table`` / ``write_table`` — Iceberg when available, parquet-dir
   fallback otherwise (identical relational contract; the rest of the
   engine is storage-agnostic by construction);
-* ``append_table`` — ``writeTo(t).append()`` | parquet mode('append');
-* ``replace_table`` — ``writeTo(t).createOrReplace()`` | the safe
-  tmp-then-swap parquet rewrite (parquet cannot be overwritten in place
-  while being read; Iceberg's replace is atomic by itself);
-* ``merge_upsert`` — ``MERGE INTO t USING s ON keys WHEN MATCHED THEN
-  UPDATE WHEN NOT MATCHED THEN INSERT`` | anti-join + union + replace.
+* ``append_table`` — ``writeTo(t).append()`` | parquet mode('append').
 
 Every would-be-Iceberg write in the engine routes through this module
 (r3 audit; grep '\\.write\\.' finds table writes only here). The full
 call-site -> Iceberg mapping table lives in SCALE.md §Iceberg. Writers
 that are deliberately NOT tables (and stay outside this boundary): the
 persisted-profile JSON files in operators/shapes.py (reference S3-JSON
-output parity), Spark bucketed tables in sources/bucketed.py (engine
-bucketing, Iceberg analog = sorted/bucketed partition spec), and /tmp
-staging artifacts in bench/datagen.
+output parity) and /tmp staging artifacts in bench/datagen.
 
-Remaining behavioral deltas at the storage layer, and where they land:
-  - snapshot time travel  -> snapshot_id column filtering (plans/snapshot)
+Remaining behavioral delta at the storage layer, and where it lands:
   - hidden partitioning   -> explicit ``part``/``centroid_id`` columns
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -75,88 +66,3 @@ def write_table(
 def append_table(df: DataFrame, identifier: str) -> None:
     """Iceberg ``writeTo(t).append()`` (ACID append) | parquet append."""
     write_table(df, identifier, mode="append")
-
-
-def replace_table(spark: SparkSession, df: DataFrame, identifier: str) -> DataFrame:
-    """Iceberg ``writeTo(t).createOrReplace()`` | safe tmp-then-swap parquet
-    rewrite (a direct overwrite would truncate the files a self-referencing
-    plan is still reading). Returns the re-read table."""
-    if "/" not in identifier and iceberg_available(spark):
-        df.writeTo(identifier).createOrReplace()
-        return read_table(spark, identifier)
-    import shutil
-
-    tmp = f"{identifier}.tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(identifier)
-    # drop the staging copy: leaving it doubles storage per managed table
-    # and a glob-based consumer beside the real dir would read stale rows
-    shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(identifier)
-
-
-def _align_to_target(source: DataFrame, target: DataFrame, key_cols: tuple[str, ...]) -> DataFrame:
-    """One column contract for BOTH merge branches (Iceberg `UPDATE SET * /
-    INSERT *` requires source ≡ target columns; the parquet emulation must
-    not silently accept what the real runtime would reject): extra source
-    columns raise, missing non-key source columns become typed nulls, and
-    the projection fixes target column order."""
-    missing_keys = [c for c in key_cols if c not in source.columns]
-    if missing_keys:
-        raise ValueError(f"merge source lacks key columns {missing_keys}")
-    extra = [c for c in source.columns if c not in target.columns]
-    if extra:
-        raise ValueError(
-            f"merge source has columns {extra} absent from the target — "
-            "Iceberg MERGE ... UPDATE SET * would reject this; evolve the "
-            "target schema first (replace_table) or drop the columns"
-        )
-    tgt_types = {f.name: f.dataType for f in target.schema.fields}
-    return source.select(
-        *[
-            F.col(c) if c in source.columns else F.lit(None).cast(tgt_types[c]).alias(c)
-            for c in target.columns
-        ]
-    )
-
-
-def merge_upsert(
-    spark: SparkSession,
-    identifier: str,
-    source: DataFrame,
-    key_cols: tuple[str, ...],
-) -> DataFrame:
-    """Iceberg ``MERGE INTO target USING source ON keys WHEN MATCHED THEN
-    UPDATE * WHEN NOT MATCHED THEN INSERT *`` | the idiomatic emulation:
-    target rows whose key appears in the source are replaced (broadcast
-    anti join — the source key set is small by construction), the union is
-    rewritten via replace_table. Both branches share the `_align_to_target`
-    column contract, so sandbox-green inputs cannot mis-merge on a real
-    Iceberg runtime. Returns the merged table."""
-    import os
-
-    if "/" not in identifier and iceberg_available(spark):
-        source = _align_to_target(source, read_table(spark, identifier), key_cols)
-        # per-call unique view name, dropped after the MERGE: a fixed name
-        # would collide across interleaved merges in one session and leak
-        # into the catalog
-        view = f"_merge_source_{id(source):x}"
-        source.createOrReplaceTempView(view)
-        try:
-            on = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-            spark.sql(
-                f"MERGE INTO {identifier} t USING {view} s ON {on} "
-                "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-            )
-        finally:
-            spark.catalog.dropTempView(view)
-        return read_table(spark, identifier)
-    if os.path.exists(identifier):
-        current = spark.read.parquet(identifier)
-        source = _align_to_target(source, current, key_cols)
-        keys = source.select(*key_cols).distinct()
-        kept = current.join(F.broadcast(keys), list(key_cols), "left_anti")
-        merged = kept.unionByName(source)
-    else:
-        merged = source
-    return replace_table(spark, merged, identifier)

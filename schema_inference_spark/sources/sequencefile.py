@@ -46,13 +46,3 @@ def _to_text(v) -> str:
     if isinstance(v, bytes):
         return v.decode("utf-8", errors="replace")
     return str(v)
-
-
-def scan_delimited_sequencefile(
-    spark: SparkSession, path: str, min_partitions: int | None = None
-) -> DataFrame:
-    """SequenceFile -> parsed (ts, hostname, fvalue, kv) frame — the
-    reference's full S1+P1+P2 input stage as one call."""
-    from schema_inference_spark.sources.delimited import parse_delimited
-
-    return parse_delimited(read_sequencefile_values(spark, path, min_partitions), "value")

@@ -1,16 +1,13 @@
-"""As-of join semantics, salted non-reducible aggregation, snapshot upsert,
-HLL accuracy."""
+"""As-of join semantics, salted non-reducible aggregation, HLL accuracy."""
 
 from __future__ import annotations
 
 import datetime as dt
-import tempfile
 
 from pyspark.sql import functions as F
 
 from schema_inference_spark.operators.asof import asof_join
 from schema_inference_spark.operators.salting import salted_exemplars
-from schema_inference_spark.plans.snapshot import load_snapshot, upsert_snapshot
 
 
 def _ts(m):
@@ -61,49 +58,6 @@ def test_salted_exemplars_null_key_and_null_values(spark):
     assert out[None]["n_rows"] == 4 and out[None]["exemplars"] == ["n0", "n1", "n2"]
     assert out[7]["n_rows"] == 9 and out[7]["exemplars"] == ["a", "b", "c"]
     assert out[8]["n_rows"] == 2 and out[8]["exemplars"] == []
-
-
-def test_snapshot_upsert_lifecycle(spark):
-    p1 = spark.createDataFrame([(0, 10), (1, 20)], "part int, n_rows long")
-    p2 = spark.createDataFrame([(1, 25), (2, 30)], "part int, n_rows long")
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/snap"
-        assert load_snapshot(spark, path, "s1") is None
-        upsert_snapshot(spark, path, p1, "s1")
-        first = {r["part"]: r["n_rows"] for r in load_snapshot(spark, path, "s1").collect()}
-        assert first == {0: 10, 1: 20}
-        upsert_snapshot(spark, path, p2, "s1")  # part 1 replaced, part 2 added
-        second = {r["part"]: r["n_rows"] for r in load_snapshot(spark, path, "s1").collect()}
-        assert second == {0: 10, 1: 25, 2: 30}
-        upsert_snapshot(spark, path, p1, "s2")  # other snapshot untouched
-        assert {r["part"]: r["n_rows"] for r in load_snapshot(spark, path, "s1").collect()} == second
-
-
-def test_merge_upsert_column_contract(spark):
-    """Both merge branches share one column contract (ADVICE r3): extra
-    source columns raise (what Iceberg `UPDATE SET *` would do), missing
-    non-key columns become typed nulls in target column order."""
-    import pytest
-
-    from schema_inference_spark.sources.iceberg import merge_upsert
-
-    base = spark.createDataFrame([(0, 10, "a"), (1, 20, "b")], "part int, n_rows long, tag string")
-    with tempfile.TemporaryDirectory() as d:
-        path = f"{d}/tbl"
-        merge_upsert(spark, path, base, ("part",))
-        # missing non-key column -> typed null, target column order kept
-        missing = spark.createDataFrame([(1, 99)], "part int, n_rows long")
-        merged = merge_upsert(spark, path, missing, ("part",))
-        assert merged.columns == ["part", "n_rows", "tag"]
-        rows = {r["part"]: (r["n_rows"], r["tag"]) for r in merged.collect()}
-        assert rows == {0: (10, "a"), 1: (99, None)}
-        # extra source column -> loud failure, not a silent schema widen
-        extra = spark.createDataFrame([(2, 5, "c", True)], "part int, n_rows long, tag string, odd boolean")
-        with pytest.raises(ValueError, match="absent from the target"):
-            merge_upsert(spark, path, extra, ("part",))
-        # source without the key column -> loud failure
-        with pytest.raises(ValueError, match="key columns"):
-            merge_upsert(spark, path, base.drop("part"), ("part",))
 
 
 def test_hll_within_tolerance(spark, sf_dir):

@@ -4,13 +4,7 @@ values) — written fresh, not copied."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from schema_inference_spark.sources.delimited import (
-    display_remap,
-    kv_shape_expr,
-    parse_delimited,
-)
+from schema_inference_spark.sources.delimited import parse_delimited
 
 A, B, C = "\x01", "\x02", "\x03"
 
@@ -35,30 +29,6 @@ def test_parse_and_clean(spark):
     assert first["ts"] == "1589500000" and first["hostname"] == "host-1"
     assert first["kv"] == {"eventType": "CHAMPION_KILL", "gameId": "123", "dmg": "45.5"}
     assert out[2]["kv"] == {"c": "ok"}  # empty + 'null' values dropped
-
-
-def test_kv_shape_matches_json_path(spark):
-    """The map-direct shape equals the shape of the equivalent JSON doc."""
-    import json
-
-    from schema_inference_spark.functions.json_shape import flat_json_shape_expr
-
-    df = spark.createDataFrame([(ROWS[0],)], "value string")
-    parsed = parse_delimited(df)
-    via_map = parsed.select(kv_shape_expr(F.col("kv")).alias("s")).collect()[0]["s"]
-
-    doc = json.dumps({"eventType": "CHAMPION_KILL", "gameId": "123", "dmg": "45.5"})
-    jdf = spark.createDataFrame([(doc,)], "doc string")
-    via_json = jdf.select(flat_json_shape_expr(F.col("doc")).alias("s")).collect()[0]["s"]
-    assert via_map == via_json
-    assert '"dmg":{"type":"number"}' in via_map
-    assert '"gameId":{"type":"integer"}' in via_map
-
-
-def test_display_remap(spark):
-    df = spark.createDataFrame([(ROWS[0],)], "value string")
-    remapped = df.select(display_remap(F.col("value")).alias("r")).collect()[0]["r"]
-    assert remapped == "1589500000|host-1|eventType=CHAMPION_KILL,gameId=123,dmg=45.5"
 
 
 def test_production_value_hygiene(spark):

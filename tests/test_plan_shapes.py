@@ -118,42 +118,6 @@ def test_hll_profile_single_scan_no_expand(spark, sf_dir):
             assert est[key] == v
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """SCALE.md layout claim made real: co-bucketed tables join with ZERO
-    Exchange on either side (bucket-aligned SortMergeJoin). This is the
-    plan that removes the suite's largest shuffle at 10^12 rows."""
-    from schema_inference_spark.sources.bucketed import bucketed_join, write_bucketed
-
-    images = spark.range(0, 2000).selectExpr(
-        "id AS image_id", "id % 7 AS w", "id % 5 AS h"
-    )
-    captions = spark.range(0, 2000).selectExpr(
-        "id AS image_id", "concat('cap-', id) AS caption"
-    )
-    write_bucketed(images, "t_images_b", "image_id", 4, path=f"{tmp_path}/imgs")
-    write_bucketed(captions, "t_captions_b", "image_id", 4, path=f"{tmp_path}/caps")
-    # tiny test tables would broadcast; force the sort-merge path the big
-    # tables would take so the bucketing property is what's asserted
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "t_images_b", "t_captions_b", "image_id")
-        assert joined.count() == 2000
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        # control: the same join WITHOUT bucketing must show an Exchange,
-        # proving the assertion above is meaningful
-        plain = images.join(captions, "image_id")
-        plain.collect()
-        assert "Exchange" in plan_of(plain)
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_images_b")
-        spark.sql("DROP TABLE IF EXISTS t_captions_b")
-
-
 def test_no_interpreted_hof_anywhere_in_registry(spark, sf_dir):
     """VERDICT r2 #1: Spark 4.1.2 evaluates higher-order-function lambdas
     (transform/filter/aggregate) interpreted, row-at-a-time — the measured

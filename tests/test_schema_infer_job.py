@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import os
 import tempfile
 
 import pytest
@@ -145,3 +146,17 @@ def test_merge_n_larger_than_top_k(spark, planted_kv):
     assert [t["schema"] for t in tops] == [HOT]
     merged = json.load(open(f"{d}/out_m/merged_schema.json"))
     assert set(merged["properties"]) == {"host", "status", "user", "id", "payload", "w"}
+
+
+@pytest.mark.parametrize("flag,value", [
+    ("--top-k", "0"), ("--merge-n", "0"), ("--top-k", "-1"), ("--merge-n", "-1"),
+])
+def test_counts_below_one_are_usage_errors(planted_kv, flag, value):
+    """A top-k or merge-n below 1 is a usage error (exit 2) raised before
+    any output is written, not a "no parseable rows" verdict on good input."""
+    d = planted_kv
+    out = f"{d}/out_bad{flag}{value}"
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", f"{d}/in", "--format", "parquet-kv", "--output", out, flag, value])
+    assert exc.value.code == 2
+    assert not os.path.exists(f"{out}/distinct")

@@ -11,10 +11,8 @@ import tempfile
 from pyspark.sql import functions as F
 
 from schema_inference_spark.functions.json_shape import make_kv_shape_udf
-from schema_inference_spark.sources.sequencefile import (
-    read_sequencefile_values,
-    scan_delimited_sequencefile,
-)
+from schema_inference_spark.sources.delimited import parse_delimited
+from schema_inference_spark.sources.sequencefile import read_sequencefile_values
 
 FVALUES = "/root/reference/src/test/resources/fvalues.txt"
 EXPECTED_TREE = "/root/reference/src/test/resources/json/12.json"
@@ -41,7 +39,7 @@ def test_sequencefile_reference_row_to_schema_tree(spark):
     raw = open(FVALUES, encoding="utf-8").read().strip("\n")
     with tempfile.TemporaryDirectory() as d:
         _write_seqfile(spark, f"{d}/seq", [raw, "not-three-fields", ""])
-        parsed = scan_delimited_sequencefile(spark, f"{d}/seq")
+        parsed = parse_delimited(read_sequencefile_values(spark, f"{d}/seq"), "value")
         rows = parsed.collect()
         assert len(rows) == 1  # malformed rows dropped (P1/P4 semantics)
         assert rows[0]["hostname"] == "10-181-208-32"

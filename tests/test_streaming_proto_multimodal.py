@@ -1,19 +1,9 @@
-"""Streaming/batch equivalence, proto emission, multimodal plumbing."""
+"""Streaming/batch equivalence and proto emission."""
 
 from __future__ import annotations
 
 import tempfile
 
-import pytest
-from pyspark.sql import functions as F
-
-from schema_inference_spark.datagen import codec
-from schema_inference_spark.multimodal.stubs import (
-    extract_image_features,
-    frame_concat,
-    resize_images,
-    sample_video_frames,
-)
 from schema_inference_spark.operators.proto import (
     concat_proto_files,
     proto_hierarchy,
@@ -97,47 +87,6 @@ def test_proto_concat_order_safe(spark):
     ]
 
 
-@pytest.fixture(scope="module")
-def small_images(spark):
-    rows = []
-    for i in range(10):
-        px = codec.reference_pixels(f"m{i}", 16, 16)
-        rows.append((f"m{i}", codec.encode_image(px, "png")))
-    rows.append(("bad", b"\x00\x01\x02"))
-    return spark.createDataFrame(rows, "image_id string, bytes binary")
-
-
-def test_image_feature_extraction(small_images):
-    feats = extract_image_features(small_images).collect()
-    assert len(feats) == 10  # bad payload skipped
-    for r in feats:
-        assert r["w"] == 16 and r["h"] == 16
-        assert 0 <= r["mean_luma"] <= 255 and r["std_luma"] > 0 and r["edge_energy"] > 0
-
-
-def test_resize_roundtrip(small_images):
-    resized = resize_images(small_images, 8, 8).collect()
-    assert len(resized) == 10
-    w, h, px = codec.decode_image(resized[0]["bytes"])
-    assert (w, h) == (8, 8)
-
-
-def test_video_frame_sampling(spark):
-    frames = [codec.encode_image(codec.reference_pixels(f"f{i}", 8, 8), "png") for i in range(25)]
-    df = spark.createDataFrame([("v0", frame_concat(frames))], "video_id string, bytes binary")
-    sampled = sample_video_frames(df, every_n=10).collect()
-    assert [r["frame_index"] for r in sampled] == [0, 10, 20]
-    for r in sampled:
-        w, h, _ = codec.decode_image(r["frame_bytes"])
-        assert (w, h) == (8, 8)
-
-
-def test_video_unknown_container_raises(spark):
-    df = spark.createDataFrame([("v1", b"RIFFxxxxWEBP")], "video_id string, bytes binary")
-    with pytest.raises(Exception, match="NotImplementedError|non-engine"):
-        sample_video_frames(df, every_n=1).collect()
-
-
 def test_metadata_envelope_injected(spark):
     """Reference TransformProtobufHierarchy.createMetadataFileWriter:244-252
     injects a ts/hostname/dt/h envelope message into every hierarchy."""
@@ -212,63 +161,3 @@ def test_streaming_session_windows_equal_batch(spark, sf_dir):
             .collect()
         }
     assert streamed == batch
-
-
-def test_audio_feature_extraction(spark):
-    """Engine-codec audio decode + features: a pure 440Hz sine has
-    RMS ~ A/sqrt(2) and zero-crossing rate ~ 2f/sr; silence has zero
-    everything; a foreign container is skipped at the swap point."""
-    import numpy as np
-
-    from schema_inference_spark.multimodal.stubs import (
-        encode_audio,
-        extract_audio_features,
-    )
-
-    sr = 16000
-    t = np.arange(sr) / sr  # 1 second
-    sine = 0.5 * np.sin(2 * np.pi * 440 * t)
-    silence = np.zeros(sr // 2)
-    rows = [
-        ("sine", encode_audio(sine, sr)),
-        ("silence", encode_audio(silence, sr)),
-        ("foreign", b"RIFF....WAVE"),  # real WAV magic: not the engine codec
-    ]
-    df = spark.createDataFrame(rows, "audio_id string, bytes binary")
-    got = {r["audio_id"]: r for r in extract_audio_features(df).collect()}
-
-    assert set(got) == {"sine", "silence"}  # foreign skipped, not crashed
-    s = got["sine"]
-    assert abs(s["duration_sec"] - 1.0) < 1e-9
-    assert abs(s["rms"] - 0.5 / np.sqrt(2)) < 0.01
-    assert abs(s["zero_crossing_rate"] - 2 * 440 / sr) < 0.005
-    assert 0.49 < s["peak"] < 0.501  # int16 quantization can tip just past 0.5
-    z = got["silence"]
-    assert z["rms"] == 0.0 and z["peak"] == 0.0
-
-
-def test_video_temporal_features(spark):
-    """Static video -> zero frame delta; alternating-content video -> large
-    delta; foreign container skipped."""
-    import numpy as np
-
-    from schema_inference_spark.datagen import codec
-    from schema_inference_spark.multimodal.stubs import (
-        extract_video_features,
-        frame_concat,
-    )
-
-    px_a = codec.reference_pixels("vidA", 16, 16)
-    px_b = 255 - px_a
-    static = frame_concat([codec.encode_image(px_a, "png")] * 4)
-    flicker = frame_concat(
-        [codec.encode_image(px_a if i % 2 == 0 else px_b, "png") for i in range(4)]
-    )
-    rows = [("static", static), ("flicker", flicker), ("foreign", b"\x00\x01\x02\x03mp4")]
-    df = spark.createDataFrame(rows, "video_id string, bytes binary")
-    got = {r["video_id"]: r for r in extract_video_features(df).collect()}
-
-    assert set(got) == {"static", "flicker"}
-    assert got["static"]["n_frames"] == 4
-    assert got["static"]["max_frame_delta"] == 0.0
-    assert got["flicker"]["mean_frame_delta"] > 50.0  # inverted frames
