@@ -10,9 +10,11 @@ only over the tiny top-k set; order-safe proto assembly).
 The raw rows are read, and the per-row shape UDF run, exactly once: in the
 one Spark action that writes ``distinct``. Top-k is then read back from
 that persisted table (a few thousand rows, not the corpus) — the
-reference's own SeqScanAsJson re-analysis path — fetching
-max(top-k, merge-n) rows so that ``--merge-n`` larger than ``--top-k``
-still merges merge-n shapes.
+reference's own SeqScanAsJson re-analysis path — by its declared DDL, so
+the read-back infers no schema, fetching max(top-k, merge-n) rows so that
+``--merge-n`` larger than ``--top-k`` still merges merge-n shapes. The
+proto line table is an Arrow local relation: writing ``protos`` runs no
+Python stage.
 
     spark-submit --py-files /tmp/schema_inference_spark.zip \
         jobs/schema_infer_job.py \
@@ -73,7 +75,11 @@ def main(argv: list[str] | None = None) -> int:
         proto_lines_df,
         with_metadata_message,
     )
-    from schema_inference_spark.operators.shapes import shape_counts, top_k_counts
+    from schema_inference_spark.operators.shapes import (
+        SHAPE_COUNTS_SCHEMA,
+        shape_counts,
+        top_k_counts,
+    )
     from schema_inference_spark.sources.delimited import parse_delimited
     from schema_inference_spark.sources.sequencefile import read_sequencefile_values
     from schema_inference_spark.sources.tables import ensure_utc
@@ -103,7 +109,7 @@ def main(argv: list[str] | None = None) -> int:
     write_table(shape_counts(shaped, F.col("schema")), distinct, mode="overwrite")
 
     top = top_k_counts(
-        read_table(spark, distinct), max(args.top_k, args.merge_n)
+        read_table(spark, distinct, SHAPE_COUNTS_SCHEMA), max(args.top_k, args.merge_n)
     ).collect()
     if not top:
         print("no parseable rows found")

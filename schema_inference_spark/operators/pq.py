@@ -70,6 +70,7 @@ from schema_inference_spark.operators.similarity import (
     _stack_rows,
     centroids_schema,
 )
+from schema_inference_spark.sources.tables import local_frame
 
 CODEBOOK_SCHEMA = (
     "centroid_id int, subspace int, code int, codeword array<float>"
@@ -357,9 +358,7 @@ def query_pq_index_batch(
     from pyspark.sql import Window
 
     if not query_vecs:
-        return spark.createDataFrame(
-            [], f"qid int, {id_col} bigint, cosine_sim double"
-        )
+        return local_frame(spark, [], f"qid int, {id_col} bigint, cosine_sim double")
 
     cents = _read_side(spark, path, "centroids", centroids_schema())
     probe_pairs = [
@@ -387,14 +386,13 @@ def query_pq_index_batch(
 
     # the single query's re-rank fold, with each candidate's query vector
     # and norm joined in from a broadcast (qid, _q, _qn) frame
-    q_df = F.broadcast(spark.createDataFrame(
+    q_df = F.broadcast(local_frame(
+        spark,
         [(qid, q.tolist(), qn) for qid, (q, qn) in enumerate(map(_query_norm, query_vecs))],
         "qid int, _q array<double>, _qn double",
     ))
 
-    probe_df = F.broadcast(
-        spark.createDataFrame(probe_pairs, "qid int, centroid_id int")
-    )
+    probe_df = F.broadcast(local_frame(spark, probe_pairs, "qid int, centroid_id int"))
     vectors = spark.read.parquet(f"{path}/vectors").where(
         F.col("centroid_id").isin(probe_ids_all)
     )

@@ -17,13 +17,17 @@ tables and whole-file concatenations). Semantics preserved:
   with a partition-count-independent aggregate.
 
 The schema walk runs on the driver (schemas are top-k-merged dicts, tiny by
-construction); only the line/file tables are distributed.
+construction). The line table it yields is one Arrow local relation
+(``sources.tables.local_frame``): reading it starts no Spark job and no
+Python worker, so the file assembly is the first distributed step.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from schema_inference_spark.sources.tables import local_frame
 
 PROTO_TYPE_FOR = {
     "integer": "int32",
@@ -114,8 +118,8 @@ def proto_lines(hierarchy: dict[str, dict[str, str]]) -> list[tuple[str, int, st
 
 
 def proto_lines_df(spark: SparkSession, hierarchy: dict[str, dict[str, str]]) -> DataFrame:
-    return spark.createDataFrame(
-        proto_lines(hierarchy), "file_name string, line_number int, line string"
+    return local_frame(
+        spark, proto_lines(hierarchy), "file_name string, line_number int, line string"
     )
 
 

@@ -41,10 +41,13 @@ from schema_inference_spark.functions.type_inference import merge_schemas
 
 DEFAULT_TOP_K = 20  # reference stream cap (CommonUtils.java:202)
 DEFAULT_MERGE_N = 10  # reference numberOfTopSchemasToMerge (Constants.java:16)
+# the declared DDL of shape_counts' output, which persisted profiles are
+# read back by (a declared column the files lack reads back as nulls)
+SHAPE_COUNTS_SCHEMA = "schema string, count long, percent long"
 
 
 def shape_counts(df: DataFrame, shape_col: Column) -> DataFrame:
-    """DataFrame[schema string, count long, percent long].
+    """DataFrame[SHAPE_COUNTS_SCHEMA]: (schema string, count long, percent long).
 
     ``percent`` uses the reference's integer-division semantics
     (count*100/total with Java int division, CommonUtils.java:245-251).
@@ -105,7 +108,7 @@ def reanalyze_persisted_shapes(spark, path: str, merge_n: int = DEFAULT_MERGE_N)
     raw corpus — the reference's SeqScanAsJson resumability path
     (SeqScanAsJson.java:66-77 re-reads data/distinct and re-merges)."""
     # explicit schema: an empty profile dir has nothing to infer from
-    profile = spark.read.schema("schema string, count long, percent long").json(path)
+    profile = spark.read.schema(SHAPE_COUNTS_SCHEMA).json(path)
     rows = top_k_counts(profile, merge_n).collect()
     schemas = [json.loads(r["schema"]) for r in rows]
     if not schemas:

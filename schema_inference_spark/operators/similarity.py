@@ -34,8 +34,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StructType
 
 from schema_inference_spark.sources.iceberg import write_table
+from schema_inference_spark.sources.tables import local_frame
 
 
 def _to_matrix(s: pd.Series) -> np.ndarray:
@@ -647,7 +649,7 @@ def _persist_side(df: DataFrame, path: str, table: str, schema: str) -> list:
     """Write a trained side table and collect it back, so encoding uses
     exactly the persisted values a query will read. ``df`` must have the
     declared ``schema`` every later read uses."""
-    declared = df.sparkSession.createDataFrame([], schema).schema
+    declared = StructType.fromDDL(schema)
     if [(f.name, f.dataType) for f in df.schema] != [(f.name, f.dataType) for f in declared]:
         raise ValueError(f"{table}/ is {df.schema.simpleString()}, declared {schema!r}")
     write_table(df, f"{path}/{table}", mode="overwrite")
@@ -671,9 +673,7 @@ def _build_index(
         vectors = encode(vectors)
     # Iceberg analog: vectors table partitioned by the cell keys in the spec
     write_table(vectors, f"{path}/vectors", mode="overwrite", partition_by=keys)
-    cents_df = df.sparkSession.createDataFrame(
-        [(cid, vec) for cid, vec in centroids], centroids_schema(keys[0])
-    )
+    cents_df = local_frame(df.sparkSession, centroids, centroids_schema(keys[0]))
     write_table(cents_df, f"{path}/centroids", mode="overwrite")
     return centroids
 

@@ -25,6 +25,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from schema_inference_spark.sources.tables import local_frame
+
 
 @dataclass(frozen=True)
 class RowRule:
@@ -127,8 +129,7 @@ def rule_verdicts(df: DataFrame, violations: DataFrame, rules: list) -> DataFram
     """(rule_name, n_rows, n_violations, passed) — dataset-level verdicts."""
     n_rows = df.count()
     names = [r.name for r in rules]
-    spark = df.sparkSession
-    grid = spark.createDataFrame([(n,) for n in names], "rule_name string")
+    grid = local_frame(df.sparkSession, [(n,) for n in names], "rule_name string")
     counts = violations.groupBy("rule_name").agg(F.count(F.lit(1)).alias("n_violations"))
     return (
         grid.join(counts, "rule_name", "left")

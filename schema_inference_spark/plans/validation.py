@@ -36,6 +36,7 @@ from schema_inference_spark.operators.referential import (
     orphan_violations,
 )
 from schema_inference_spark.operators.uniqueness import duplicate_row_violations
+from schema_inference_spark.sources.tables import local_frame
 
 ROW_CHECKS = (
     "domain_fmt",
@@ -139,7 +140,7 @@ def run_validation(
     # per-partition verdicts: parts x checks grid left-joined to violation
     # counts; the grid derives from the SAME part_rows aggregate (one scan,
     # not a distinct + a groupBy)
-    checks = spark.createDataFrame([(c,) for c in ROW_CHECKS], "check_name string")
+    checks = local_frame(spark, [(c,) for c in ROW_CHECKS], "check_name string")
     part_rows = images.groupBy("part").agg(F.count(F.lit(1)).alias("n_rows"))
     grid = part_rows.select("part").crossJoin(F.broadcast(checks))
     counts = violations.groupBy("part", "check_name").agg(

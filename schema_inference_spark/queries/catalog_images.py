@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 
 from schema_inference_spark.queries import QuerySpec
 from schema_inference_spark.queries.catalog_core import HOURLY_SQL
-from schema_inference_spark.sources.tables import load_table
+from schema_inference_spark.sources.tables import load_table, local_frame
 
 _CORPUS_N = 2000
 _CORPUS_PARTS = 8
@@ -233,7 +233,8 @@ def proto_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     merged = merged_top_schema(ev, flat_json_shape_expr(F.col("props")), merge_n=10)
     lines = proto_lines_df(spark, with_metadata_message(proto_hierarchy(merged)))
-    merged_row = spark.createDataFrame(
+    merged_row = local_frame(
+        spark,
         [("_merged_schema.json", json.dumps(merged, sort_keys=True, separators=(",", ":")))],
         "file_name string, content string",
     )

@@ -7,7 +7,8 @@ Iceberg runtime jar, so every call degrades explicitly:
 * ``iceberg_available(spark)`` — feature-detects the catalog classes;
 * ``read_table`` / ``write_table`` — Iceberg when available, parquet-dir
   fallback otherwise (identical relational contract; the rest of the
-  engine is storage-agnostic by construction);
+  engine is storage-agnostic by construction). ``read_table`` takes the
+  table's declared DDL, so the parquet read infers nothing;
 * ``append_table`` — ``writeTo(t).append()`` | parquet mode('append').
 
 Every would-be-Iceberg write in the engine routes through this module
@@ -34,11 +35,17 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_table(spark: SparkSession, identifier: str) -> DataFrame:
-    """identifier: an Iceberg table name (catalog.db.tbl) or a parquet path."""
+def read_table(spark: SparkSession, identifier: str, schema: str) -> DataFrame:
+    """identifier: an Iceberg table name (catalog.db.tbl) or a parquet path.
+
+    ``schema`` is the table's declared DDL — the one its writer produces.
+    The parquet read uses it instead of inferring the schema from the
+    files, which would cost a Spark job; a declared column the files lack
+    reads back as nulls, with no error, so never retype a DDL here. An
+    Iceberg table carries its own schema, which that branch uses."""
     if "/" not in identifier and iceberg_available(spark):
         return spark.read.format("iceberg").load(identifier)
-    return spark.read.parquet(identifier)
+    return spark.read.schema(schema).parquet(identifier)
 
 
 def write_table(

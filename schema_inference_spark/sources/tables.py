@@ -13,7 +13,10 @@ from __future__ import annotations
 import os
 import threading
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier
 
 TABLES = (
     "region",
@@ -47,6 +50,29 @@ def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A driver-built table (``rows``: a list of tuples) as an Arrow local
+    relation with the declared ``ddl``.
+
+    ``createDataFrame(list, ddl)`` parallelizes pickled rows, and every read
+    of the result is a ``Scan ExistingRDD`` that runs a Python-worker stage
+    (one Spark job, one task per core) however few the rows. An Arrow table
+    plans as a ``LocalTableScan``: collecting it starts no Spark job. Rows
+    are first checked by the verifier ``createDataFrame(list, ddl)`` runs,
+    so a value that does not fit its declared type raises the same error
+    instead of being converted by Arrow (which would truncate 1.5 to 1 in
+    an int column). Arrow is stricter in one place: a non-string value in a
+    string column raises instead of being stringified."""
+    schema = StructType.fromDDL(ddl)
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    table = pa.Table.from_struct_array(
+        pa.array(rows, type=pa.struct(to_arrow_schema(schema)))
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def ensure_utc(spark: SparkSession) -> None:

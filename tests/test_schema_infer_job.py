@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import uuid
 
 import pytest
 
@@ -146,6 +147,22 @@ def test_merge_n_larger_than_top_k(spark, planted_kv):
     assert [t["schema"] for t in tops] == [HOT]
     merged = json.load(open(f"{d}/out_m/merged_schema.json"))
     assert set(merged["properties"]) == {"host", "status", "user", "id", "payload", "w"}
+
+
+def test_parquet_kv_run_is_eight_spark_jobs(spark, planted_kv):
+    """One --format parquet-kv run starts 8 Spark jobs. Reading ``distinct``
+    back by its declared DDL plans no schema-inference job (9 before), and
+    the proto line table is a local relation, not a Python-worker scan."""
+    d = planted_kv
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        assert main(["--input", f"{d}/in", "--format", "parquet-kv",
+                     "--output", f"{d}/out_jobs"]) == 0
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 8
 
 
 @pytest.mark.parametrize("flag,value", [

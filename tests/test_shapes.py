@@ -7,21 +7,26 @@ from __future__ import annotations
 import json
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from schema_inference_spark.functions.json_shape import (
     canonical_shape_string,
     flat_json_shape_expr,
     flat_json_shape_sql,
     json_shape_of,
+    make_kv_shape_udf,
     make_shape_udf,
 )
 from schema_inference_spark.operators.shapes import (
+    SHAPE_COUNTS_SCHEMA,
     merged_top_schema,
     shape_counts,
     shape_exemplars,
     top_shapes,
 )
+from schema_inference_spark.sources.delimited import FIELD_SEP, KV_SEP, parse_delimited
 
 
 def test_flat_shape_expr_basic(spark):
@@ -177,3 +182,33 @@ def test_merged_shape_agrees_with_spark_native_json_inference(spark):
     MAP = {"integer": "bigint", "number": "double", "string": "string", "boolean": "boolean"}
     for name, sub in merged["properties"].items():
         assert MAP[sub["type"]] == native_types[name], (name, sub, native_types)
+
+
+@pytest.mark.parametrize("fmt", ["parquet-kv", "json-docs"])
+def test_shape_counts_schema_is_the_declared_ddl(spark, tmp_path, fmt):
+    """Persisted profiles are read back by SHAPE_COUNTS_SCHEMA instead of
+    inferring it. A declared column the files lack would read back as
+    nulls with no error, so shape_counts must produce exactly that DDL for
+    both of the job's shape columns, and a written profile must read the
+    same both ways."""
+    if fmt == "json-docs":
+        rows = spark.createDataFrame([('{"a": 1}',), ('{"b": "x"}',), ("nope",)], "value string")
+        shaped = rows.select(flat_json_shape_expr(F.col("value")).alias("schema"))
+    else:
+        rows = spark.createDataFrame(
+            [(f"1{FIELD_SEP}h{FIELD_SEP}a{KV_SEP}1",), (f"2{FIELD_SEP}h",)], "value string"
+        )
+        shaped = parse_delimited(rows, "value").select(
+            make_kv_shape_udf()(F.col("kv")).alias("schema")
+        )
+    counts = shape_counts(shaped, F.col("schema"))
+    declared = StructType.fromDDL(SHAPE_COUNTS_SCHEMA)
+    assert [(f.name, f.dataType) for f in counts.schema] == [
+        (f.name, f.dataType) for f in declared
+    ]
+    counts.write.parquet(f"{tmp_path}/distinct")
+    by_ddl = spark.read.schema(SHAPE_COUNTS_SCHEMA).parquet(f"{tmp_path}/distinct")
+    inferred = spark.read.parquet(f"{tmp_path}/distinct")
+    assert by_ddl.schema == inferred.schema
+    rows = by_ddl.collect()
+    assert rows and sorted(rows) == sorted(inferred.collect())
