@@ -462,6 +462,13 @@ def pq_index(spark, n: int) -> tuple[DataFrame, list, dict, str]:
     return vecs, centroids, codebooks, root
 
 
+# what build_index's manifest would say of the vectors/ table pq_index writes
+PQ_MANIFEST = {
+    "two_level": False, "id_col": "vec_id", "vec_col": "embedding",
+    "vectors": "vec_id bigint, embedding array<float>, codes binary, centroid_id int",
+}
+
+
 def pq(spark, n: int) -> dict:
     vecs, centroids, codebooks, root = pq_index(spark, n)
     # BUILD lane: assignment + PQ encode over the full corpus, forced by a
@@ -479,7 +486,7 @@ def pq(spark, n: int) -> dict:
         pids = _probe(centroids, q, 2)
         luts = {cid: _lut(_unit(q), codebooks[cid]) for cid in pids}
         probes.append(_query_index(
-            spark, root, q, 10, pids, "vec_id", "embedding",
+            spark, root, PQ_MANIFEST, q, 10, pids,
             bulk=lambda c: adc_scores(c, luts, "_score"), over_retrieve=8,
         ).withColumn("qid", F.lit(i)))
     return {"checksum": int(chk["s"]), "rows": int(chk["c"]), "topk": _topk(probes)}

@@ -1,38 +1,46 @@
-"""Quantized-vector kernels inside IVF partitions — ALL THREE rungs of
-the ANN memory ladder (SCALE.md "ANN memory at 10^9-10^12"): float16
-(2x) and int8 scalar quantization (4x) via ``sq_*``/``build_sq_index``/
-``query_sq_index``, and product quantization (16x) via the ``pq_*``
-family below.
+"""The persisted IVF index: one entry point, ``build_index`` /
+``query_index``, over every codec and level, plus the codec kernels —
+ALL THREE rungs of the ANN memory ladder (SCALE.md "ANN memory at
+10^9-10^12"): float16 (2x) and int8 scalar quantization (4x) via the
+``sq_*`` kernels, and product quantization (16x) via the ``pq_*`` family.
 
-Until r5 these were documented swap points; they are now real kernels:
-
-* ``pq_train_codebooks`` — per-IVF-partition codebooks (m subspaces x
-  ncodes centroids each), trained DISTRIBUTEDLY with one
+* ``pq_train_codebooks`` — per-IVF-cell codebooks (m subspaces x ncodes
+  centroids each), trained DISTRIBUTEDLY with one
   ``groupBy(centroid_id).applyInPandas`` pass. Training is a pure
-  function of each partition's data (deterministic hash-ordered sample,
-  rows sorted before any float fold), so codebooks are bit-identical
-  under any physical layout — the r4 packing lesson applied from the
-  start.
-* ``pq_encode`` — one Arrow projection mapping each vector to m uint8
-  codes packed as an m-byte ``binary`` column (16x smaller than the raw
-  64 x float32 at the reference shape). No shuffle: rows already carry
-  ``centroid_id`` from IVF assignment.
-* ``build_pq_index`` / ``query_pq_index`` — the build-once/query-many
-  lifecycle. A query is one plan over ONLY the probed partitions
-  (partition pruning): one scan reads (vec_id, centroid_id, codes, raw)
-  and only centroid_id and codes cross into Python, where an ADC lookup
-  table scores them (m adds per row instead of a d-mul dot); the top
-  ``over_retrieve * k`` rows per task and then overall are re-ranked
-  exactly on the raw column in the JVM, so recall@k returns to the
-  exact-probe level. The raw column is read with the codes, but never
-  serialized to Python and never shuffled beyond the per-task top-n.
+  function of each cell's data (deterministic hash-ordered sample, rows
+  sorted before any float fold), so codebooks are bit-identical under
+  any physical layout — the r4 packing lesson applied from the start.
+  The int8 scales and the two-level fine centroids are trained the
+  same way, per coarse cell.
+* ``pq_encode`` / ``sq_encode`` — one Arrow projection mapping each
+  vector to a fixed-width ``binary`` code (m bytes for pq: 16x smaller
+  than the raw 64 x float32 at the reference shape). No shuffle: rows
+  already carry ``centroid_id`` from IVF assignment.
+* ``build_index`` / ``query_index`` — the build-once/query-many
+  lifecycle. ``codec`` (raw, float16, int8, pq) and ``k_fine`` (two-level
+  cells: nlist = k x k_fine partitions while no single k-means sees more
+  than one coarse cell's sample — SCALE.md's 10^12 shape) are
+  configuration: every codec lane keys on the coarse ``centroid_id``, so
+  two-level x any codec needs no code of its own. The build writes a
+  manifest (index.json) last; a query reads it, probes, and runs one plan
+  over ONLY the probed partitions (partition pruning): one scan reads
+  (vec_id, centroid_id, codes, raw) and only centroid_id and codes cross
+  into Python, where an ADC lookup table (pq) or a dequantized dot (sq)
+  scores them; the top ``over_retrieve * k`` rows per task and then
+  overall are re-ranked exactly on the raw column in the JVM, so recall@k
+  returns to the exact-probe level. The raw column is read with the
+  codes, but never serialized to Python and never shuffled beyond the
+  per-task top-n. ``build_pq_index`` / ``query_pq_index`` /
+  ``query_pq_index_batch`` keep the pq names perfbench calls.
 
 Public provenance: product quantization with asymmetric distance
 computation follows Jegou, Douze & Schmid, "Product Quantization for
 Nearest Neighbor Search" (TPAMI 2011) — the IVFADC layout (coarse
 quantizer + per-cell PQ codes + over-retrieve/re-rank) is the standard
 FAISS-style design; scalar int8 quantization with symmetric per-dim
-scales is the common ANN-serving variant of the same idea.
+scales is the common ANN-serving variant of the same idea; two-level
+coarse quantization is the standard answer to nlist >> one k-means job
+(Jegou et al. TPAMI 2011 §V; FAISS's IVF-on-IVF composite indexes).
 
 Cosine-ADC convention: vectors are unit-normalized BEFORE encoding, so
 ``dot(q_unit, reconstruction(x)) ~= cosine(q, x)`` and the lookup table
@@ -47,12 +55,15 @@ single-pass Arrow projections; the query path collects only the probed
 cells' side-table rows and the k result rows (same bound class as every
 top-k in this repo). Reference provenance: the reference engine
 has no ANN surface — this extends the curation family the brief asks
-for; the persisted-index lifecycle mirrors build_ivf_index
-(operators/similarity.py), whose layout the reference's persisted-output
-re-analysis seeded (SeqScanAsJson.java:66-77).
+for; the persisted build-once/query-many lifecycle is seeded by the
+reference's persisted-output re-analysis (SeqScanAsJson.java:66-77).
 """
 
 from __future__ import annotations
+
+import functools
+import json
+import os
 
 import numpy as np
 import pandas as pd
@@ -60,7 +71,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from schema_inference_spark.operators.similarity import (
-    _build_index,
+    CENTROIDS_SCHEMA,
+    _cell_keys,
     _cosine_fold,
     _persist_side,
     _probe,
@@ -68,14 +80,19 @@ from schema_inference_spark.operators.similarity import (
     _query_norm,
     _read_side,
     _stack_rows,
-    centroids_schema,
+    ivf_assignments,
+    kmeans_train,
 )
+from schema_inference_spark.sources.iceberg import read_table, write_table
 from schema_inference_spark.sources.tables import local_frame
 
 CODEBOOK_SCHEMA = (
     "centroid_id int, subspace int, code int, codeword array<float>"
 )
 SCALES_SCHEMA = "centroid_id int, dim int, scale double"
+FINE_SCHEMA = "centroid_id int, fine_id int, centroid array<double>"
+CODECS = ("raw", "float16", "int8", "pq")
+MANIFEST = "index.json"
 
 
 def _unit(query_vec) -> np.ndarray:
@@ -303,23 +320,11 @@ def build_pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
-    """IVF-PQ build: train coarse centroids (kmeans_train), assign, train
-    per-partition codebooks, encode, and persist three tables —
-    vectors/ (vec_id, raw vector, m-byte codes; partitioned by
-    centroid_id: the codes are the bulk-scan lane, the raw column the
-    re-rank lane in the SAME files so column pruning splits them),
-    centroids/, codebooks/."""
-
-    def encode(assigned: DataFrame) -> DataFrame:
-        cb_df = pq_train_codebooks(
-            assigned, m=m, ncodes=ncodes, train_sample=train_sample,
-            max_iter=pq_max_iter, id_col=id_col, vec_col=vec_col,
-        )
-        codebooks = _codebooks_to_dict(_persist_side(cb_df, path, "codebooks", CODEBOOK_SCHEMA))
-        encoded = pq_encode(assigned, codebooks, vec_col=vec_col)
-        return encoded.select(id_col, vec_col, "centroid_id", "codes")
-
-    return _build_index(df, path, k, max_iter, id_col, vec_col, encode)
+    """``build_index(codec="pq")``, under the name perfbench calls."""
+    return build_index(
+        df, path, "pq", k=k, max_iter=max_iter, m=m, ncodes=ncodes,
+        pq_max_iter=pq_max_iter, train_sample=train_sample, id_col=id_col, vec_col=vec_col,
+    )
 
 
 def query_pq_index_batch(
@@ -332,12 +337,13 @@ def query_pq_index_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Query-many serving path: answer a BATCH of queries in one plan —
-    per-query ``query_pq_index`` calls serialize on driver scheduling
-    (four jobs per query: the centroids/ and codebooks/ collects, the
-    vectors/ schema read and the query plan), which the PQ scaling bench
-    showed dominates small probes. Shape: one scan filtered to the union
-    of all probed partitions, fanned out per probing query by a
+    """Query-many serving path on a flat pq index: answer a BATCH of
+    queries in one plan — per-query ``query_pq_index`` calls serialize on
+    driver scheduling (three jobs per query: the centroids/ and codebooks/
+    collects and the query plan), which the PQ scaling bench showed
+    dominates small probes. As in ``query_pq_index``, the manifest names
+    the columns and gives the vectors/ DDL. Shape: one scan filtered to
+    the union of all probed partitions, fanned out per probing query by a
     broadcast join against the tiny (qid, centroid_id) probe map,
     ADC-scored with per-(qid, cid) lookup tables, candidate-cut and
     re-ranked with two windows partitioned by qid; the re-rank is the
@@ -357,10 +363,14 @@ def query_pq_index_batch(
     """
     from pyspark.sql import Window
 
+    index = _read_manifest(path)
+    if index["codec"] != "pq" or index["two_level"]:
+        raise ValueError(f"{path} is not a flat pq index: {index}")
+    id_col, vec_col = index["id_col"], index["vec_col"]
     if not query_vecs:
         return local_frame(spark, [], f"qid int, {id_col} bigint, cosine_sim double")
 
-    cents = _read_side(spark, path, "centroids", centroids_schema())
+    cents = _read_side(spark, path, "centroids", CENTROIDS_SCHEMA)
     probe_pairs = [
         (qid, cid)
         for qid, qv in enumerate(query_vecs)
@@ -393,7 +403,7 @@ def query_pq_index_batch(
     ))
 
     probe_df = F.broadcast(local_frame(spark, probe_pairs, "qid int, centroid_id int"))
-    vectors = spark.read.parquet(f"{path}/vectors").where(
+    vectors = read_table(spark, f"{path}/vectors", index["vectors"]).where(
         F.col("centroid_id").isin(probe_ids_all)
     )
     fanned = vectors.join(probe_df, "centroid_id")
@@ -516,58 +526,6 @@ def sq_cosine_scores(
     return codes_df.withColumn(out_col, _score(F.col("centroid_id"), F.col("codes")))
 
 
-def build_sq_index(
-    df: DataFrame,
-    path: str,
-    dtype: str = "float16",
-    k: int = 8,
-    max_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Scalar-quantized IVF index: same three-table layout as the PQ index
-    (vectors/ partitioned by centroid_id carrying raw + codes, centroids/,
-    and for int8 a scales/ table)."""
-
-    def encode(assigned: DataFrame) -> DataFrame:
-        scales = None
-        if dtype == "int8":
-            scales = _scales_to_dict(
-                _persist_side(sq_train_scales(assigned, vec_col), path, "scales", SCALES_SCHEMA)
-            )
-        encoded = sq_encode(assigned, dtype=dtype, scales=scales, vec_col=vec_col, out_col="codes")
-        return encoded.select(id_col, vec_col, "centroid_id", "codes")
-
-    return _build_index(df, path, k, max_iter, id_col, vec_col, encode)
-
-
-def query_sq_index(
-    spark,
-    path: str,
-    query_vec: list[float],
-    dtype: str = "float16",
-    k: int = 10,
-    n_probe: int = 2,
-    over_retrieve: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Scalar-quantized probe: prune to n_probe partitions, score the
-    dequantized codes column, over-retrieve, exact re-rank on raw — the
-    same two-lane shape as query_pq_index with a cheaper bulk lane."""
-    probe_ids = _probe(_read_side(spark, path, "centroids", centroids_schema()), query_vec, n_probe)
-    scales = None
-    if dtype == "int8":
-        scales = _scales_to_dict(
-            _read_side(spark, path, "scales", SCALES_SCHEMA, "centroid_id", probe_ids)
-        )
-    return _query_index(
-        spark, path, query_vec, k, probe_ids, id_col, vec_col,
-        bulk=lambda codes: sq_cosine_scores(codes, query_vec, dtype, scales, "_score"),
-        over_retrieve=over_retrieve,
-    )
-
-
 def adc_scores(
     codes_df: DataFrame,
     luts: dict[int, np.ndarray],
@@ -593,21 +551,220 @@ def query_pq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF-PQ probe: (1) pick n_probe centroids driver-side; (2) scan ONLY
-    those partitions and ADC-score their codes (only centroid_id and codes
-    go to Python); (3) keep the top over_retrieve*k rows, a per-task top-n
-    before a single-partition shuffle; (4) exact re-rank those rows on
-    the raw column, natively in the same plan. Steps 2-4 are one Spark
-    job. Ties in the candidate cut break by vec_id so the candidate SET
-    is deterministic."""
-    probe_ids = _probe(_read_side(spark, path, "centroids", centroids_schema()), query_vec, n_probe)
-    codebooks = _codebooks_to_dict(
-        _read_side(spark, path, "codebooks", CODEBOOK_SCHEMA, "centroid_id", probe_ids)
+    """``query_index`` under the name perfbench calls. The manifest names
+    the columns; ``id_col``/``vec_col`` stay only for the signature."""
+    return query_index(spark, path, query_vec, k, n_probe, over_retrieve)
+
+
+# --- two-level cells: fine centroids trained per coarse cell
+
+
+def train_fine_centroids(
+    assigned: DataFrame,
+    k_fine: int = 8,
+    max_iter: int = 6,
+    train_sample: int = 100_000,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Per-coarse-cell fine k-means in one grouped Arrow pass.
+
+    Output rows: (centroid_id, fine_id, centroid). Each group samples up
+    to ``train_sample`` rows by md5(id) order and runs the deterministic
+    Lloyd's kernel over FULL vectors (``_kmeans_1sub`` is
+    dimension-generic), so fine centroids are bit-identical under any
+    physical layout; a group with fewer distinct vectors than k_fine
+    repeats its last distinct point in the tail centroids (those cells
+    simply stay empty at assignment)."""
+
+    def fit(cid: int, sample: np.ndarray) -> list:
+        cb = _kmeans_1sub(sample.astype(np.float64), k_fine, max_iter)
+        return [(cid, f, cb[f].astype(np.float64).tolist()) for f in range(k_fine)]
+
+    return _train_per_cell(
+        assigned, "centroid_id", id_col, vec_col, train_sample, fit, FINE_SCHEMA
     )
-    q_unit = _unit(query_vec)
-    luts = {cid: _lut(q_unit, cb) for cid, cb in codebooks.items()}
-    return _query_index(
-        spark, path, query_vec, k, probe_ids, id_col, vec_col,
-        bulk=lambda codes: adc_scores(codes, luts, "_score"),
-        over_retrieve=over_retrieve,
-    )
+
+
+def _fine_to_dict(rows) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+    """{centroid_id: (fine_id array, unit-row centroid matrix)} — tie rule
+    is argmax-first over the fine_id-sorted rows (lowest fine_id wins)."""
+    return {
+        cid: (
+            np.asarray([r["fine_id"] for r in rs], dtype=np.int32),
+            _unit_rows(np.asarray([r["centroid"] for r in rs], dtype=np.float64), np.float64),
+        )
+        for cid, rs in _group_sorted(rows, "centroid_id", "fine_id").items()
+    }
+
+
+def fine_assignments(
+    assigned: DataFrame,
+    fine: dict[int, tuple[np.ndarray, np.ndarray]],
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Assign each coarse-assigned vector its max-cosine fine centroid —
+    one Arrow projection (per-row norms cancel in the argmax, same
+    argument as ivf_assignments' GEMM path)."""
+
+    @pandas_udf("int")
+    def _assign(cid_s: pd.Series, vec_s: pd.Series) -> pd.Series:
+        n = len(vec_s)
+        if n == 0:
+            return pd.Series([], dtype="int32")
+        mat = _stack_rows(vec_s.values).astype(np.float64)
+        out = np.empty(n, dtype=np.int32)
+        for cid, idx in _by_cell(cid_s.values):
+            fids, cmat = fine[cid]
+            out[idx] = fids[np.argmax(mat[idx] @ cmat.T, axis=1)]
+        return pd.Series(out)
+
+    return assigned.withColumn("fine_id", _assign(F.col("centroid_id"), F.col(vec_col)))
+
+
+# --- the one entry point: build_index / query_index over a manifest
+
+
+def _read_manifest(path: str) -> dict:
+    """The index's manifest, written last by ``build_index``: codec,
+    two_level, id_col, vec_col and the vectors/ DDL. A local JSON file,
+    like the jobs' reports."""
+    try:
+        with open(f"{path}/{MANIFEST}", encoding="utf-8") as f:
+            return json.load(f)
+    except FileNotFoundError:
+        raise ValueError(
+            f"no index at {path}: {MANIFEST} is missing (never built, or a rebuild did not finish)"
+        ) from None
+
+
+def build_index(
+    df: DataFrame,
+    path: str,
+    codec: str = "raw",
+    k_fine: int | None = None,
+    k: int = 8,
+    max_iter: int = 10,
+    fine_max_iter: int = 6,
+    m: int = 16,
+    ncodes: int = 256,
+    pq_max_iter: int = 8,
+    train_sample: int = 100_000,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[tuple[int, list[float]]]:
+    """Build-once side of the ANN lifecycle; returns the coarse centroids.
+
+    kmeans_train (``k`` cells) -> ivf_assignments -> with ``k_fine``, fine
+    centroids per coarse cell (fine_centroids/) and a ``fine_id`` per row
+    -> with a ``codec`` other than raw, its side table per coarse cell
+    (int8 scales/, pq codebooks/) and a ``codes`` lane per row -> vectors/
+    PARTITIONED BY the cell keys (centroid_id, and fine_id when two-level)
+    -> centroids/ -> the manifest, index.json, last. The partitioned
+    layout is what makes a probe an index read (parquet partition pruning,
+    asserted on the query plans in tests). Every per-cell trainer samples
+    up to ``train_sample`` rows of its cell.
+
+    The manifest is the commit marker: the old one is deleted before
+    anything is written, so a build that fails part way leaves no index
+    a query would answer from. It holds what a query reads: codec,
+    two_level, id_col, vec_col and the DDL of vectors/, as inference
+    returns it for the files just written. The flat raw index keeps
+    every input column; the others keep only the columns a query reads.
+    Codecs: float16 (d*2-byte codes), int8 (d bytes, per-cell per-dim
+    scales), pq (m bytes, per-cell codebooks of ``ncodes`` codewords)."""
+    if codec not in CODECS:
+        raise ValueError(f"codec must be one of {CODECS}, got {codec!r}")
+    spark = df.sparkSession
+    if os.path.exists(f"{path}/{MANIFEST}"):
+        os.remove(f"{path}/{MANIFEST}")
+    centroids = kmeans_train(df, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
+    vectors = ivf_assignments(df, centroids, id_col, vec_col)
+    keys = _cell_keys(bool(k_fine))
+    if k_fine:
+        fine_df = train_fine_centroids(
+            vectors, k_fine=k_fine, max_iter=fine_max_iter,
+            train_sample=train_sample, id_col=id_col, vec_col=vec_col,
+        )
+        fine = _fine_to_dict(_persist_side(fine_df, path, "fine_centroids", FINE_SCHEMA))
+        vectors = fine_assignments(vectors, fine, vec_col)
+    lanes = []
+    if codec == "pq":
+        cb_df = pq_train_codebooks(
+            vectors, m=m, ncodes=ncodes, train_sample=train_sample,
+            max_iter=pq_max_iter, id_col=id_col, vec_col=vec_col,
+        )
+        codebooks = _codebooks_to_dict(_persist_side(cb_df, path, "codebooks", CODEBOOK_SCHEMA))
+        vectors, lanes = pq_encode(vectors, codebooks, vec_col=vec_col), ["codes"]
+    elif codec != "raw":
+        scales = None
+        if codec == "int8":
+            scales = _scales_to_dict(
+                _persist_side(sq_train_scales(vectors, vec_col), path, "scales", SCALES_SCHEMA)
+            )
+        vectors = sq_encode(vectors, dtype=codec, scales=scales, vec_col=vec_col, out_col="codes")
+        lanes = ["codes"]
+    if k_fine or lanes:
+        vectors = vectors.select(id_col, vec_col, *keys, *lanes)
+    # Iceberg analog: vectors table partitioned by the cell keys in the spec
+    write_table(vectors, f"{path}/vectors", mode="overwrite", partition_by=keys)
+    cents_df = local_frame(spark, centroids, CENTROIDS_SCHEMA)
+    write_table(cents_df, f"{path}/centroids", mode="overwrite")
+    manifest = {
+        "codec": codec, "two_level": bool(k_fine), "id_col": id_col, "vec_col": vec_col,
+        "vectors": spark.read.parquet(f"{path}/vectors").schema.toDDL(),
+    }
+    with open(f"{path}/{MANIFEST}", "w", encoding="utf-8") as f:
+        json.dump(manifest, f, indent=2)
+    return centroids
+
+
+def query_index(
+    spark,
+    path: str,
+    query_vec: list[float],
+    k: int = 10,
+    n_probe: int = 2,
+    over_retrieve: int = 8,
+    n_probe_coarse: int = 2,
+) -> DataFrame:
+    """Query-many side: the top k (id, cosine_sim) by (cosine DESC, id).
+
+    Reads the manifest, picks the ``n_probe`` closest cells driver-side —
+    for a two-level index, among the fine cells of the ``n_probe_coarse``
+    closest coarse cells; both picks are ``_probe``'s (−cos, id) rule —
+    and collects only the probed cells' codebooks/ or scales/ rows. Then
+    one plan (``_query_index``) scans only those cells of vectors/: brute
+    force for raw, else the codec's bulk lane scores the codes, the top
+    over_retrieve*k are cut and re-ranked exactly on the raw column. No
+    probed cell -> the empty result."""
+    index = _read_manifest(path)
+    cents = _read_side(spark, path, "centroids", CENTROIDS_SCHEMA)
+    if index["two_level"]:
+        coarse = _probe(cents, query_vec, n_probe_coarse)
+        fine_rows = _read_side(spark, path, "fine_centroids", FINE_SCHEMA, "centroid_id", coarse)
+        cells = _probe(
+            (((r["centroid_id"], r["fine_id"]), r["centroid"]) for r in fine_rows),
+            query_vec, n_probe,
+        )
+        cids = sorted({cid for cid, _ in cells})
+    else:
+        cells = cids = _probe(cents, query_vec, n_probe)
+    codec, bulk = index["codec"], None
+    if codec == "pq":
+        q_unit = _unit(query_vec)
+        codebooks = _codebooks_to_dict(
+            _read_side(spark, path, "codebooks", CODEBOOK_SCHEMA, "centroid_id", cids)
+        )
+        luts = {cid: _lut(q_unit, cb) for cid, cb in codebooks.items()}
+        bulk = functools.partial(adc_scores, luts=luts, out_col="_score")
+    elif codec != "raw":
+        scales = None
+        if codec == "int8":
+            scales = _scales_to_dict(
+                _read_side(spark, path, "scales", SCALES_SCHEMA, "centroid_id", cids)
+            )
+        bulk = functools.partial(
+            sq_cosine_scores, query_vec=query_vec, dtype=codec, scales=scales, out_col="_score"
+        )
+    return _query_index(spark, path, index, query_vec, k, cells, bulk, over_retrieve)

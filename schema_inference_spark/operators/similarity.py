@@ -36,8 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StructType
 
-from schema_inference_spark.sources.iceberg import write_table
-from schema_inference_spark.sources.tables import local_frame
+from schema_inference_spark.sources.iceberg import read_table, write_table
 
 
 def _to_matrix(s: pd.Series) -> np.ndarray:
@@ -429,7 +428,7 @@ def cosine_topk_lsh(
     At scale the per-band bucket columns are partition/cluster keys, so
     the scan prunes to ~n_bands/2^planes of the data before distance math.
     For query-heavy workloads prefer the persisted IVF index
-    (build_ivf_index/query_ivf_index): recall-tested, partition-pruned,
+    (operators/pq.py build_index/query_index): recall-tested, partition-pruned,
     and its probe count adapts to the query."""
     q_buckets = [
         srp_bucket_of(query_vec, n_planes, srp_band_seed(seed, b))
@@ -605,18 +604,22 @@ def cosine_topk_ivf(
     )
 
 
-# --- persisted IVF index core: one lifecycle under every layout (raw here,
-# scalar/product-quantized in operators/pq.py, two-level in operators/ivf2.py)
+# --- persisted IVF index core: one lifecycle under every codec and level;
+# the build_index/query_index entry points and the codecs are in
+# operators/pq.py
 
 
 def _probe(rows, query_vec, n: int) -> list:
     """The one probe rule: ids of the ``n`` cells closest to the query,
     ordered by (−cos, id). ``rows`` holds (id, centroid) pairs — a
-    centroids/ table's rows as collected; an id may be a tuple (ivf2's
-    (coarse_id, fine_id) cells). cos is the sequential-fold
-    dot(q, c) / (|q|·|c|) — the oracle's cosine_sql doubles, so its
-    ``ORDER BY cosine DESC, cid ASC`` picks the same cells — and a zero
-    norm scores 0."""
+    centroids/ table's rows as collected; an id may be a tuple (a
+    two-level index's (centroid_id, fine_id) cells). cos is the
+    sequential-fold dot(q, c) / (|q|·|c|) — the oracle's cosine_sql
+    doubles, so its ``ORDER BY cosine DESC, cid ASC`` picks the same cells
+    — and a zero norm scores 0. A negative ``n`` raises (a slice would
+    quietly drop the farthest cells instead)."""
+    if n < 0:
+        raise ValueError(f"probe count must be >= 0, got {n}")
     rows = list(rows)
     if not rows:
         return []
@@ -629,10 +632,12 @@ def _probe(rows, query_vec, n: int) -> list:
     return [rows[i][0] for i in order[:n]]
 
 
-def centroids_schema(key: str = "centroid_id") -> str:
-    """DDL of an index's centroids/ table; ``key`` is the layout's first
-    cell key (ivf2's is ``coarse_id``)."""
-    return f"{key} int, centroid array<double>"
+CENTROIDS_SCHEMA = "centroid_id int, centroid array<double>"
+
+
+def _cell_keys(two_level: bool) -> tuple[str, ...]:
+    """The partition keys of an index's vectors/ table."""
+    return ("centroid_id", "fine_id") if two_level else ("centroid_id",)
 
 
 def _read_side(spark, path: str, table: str, schema: str, key: str | None = None, ids=()) -> list:
@@ -641,7 +646,7 @@ def _read_side(spark, path: str, table: str, schema: str, key: str | None = None
     ``schema`` is the table's declared DDL — the one its writer uses — so
     the read plans no schema-inference job. (A declared column the files
     lack would read back as nulls, silently: never retype a DDL here.)"""
-    df = spark.read.schema(schema).parquet(f"{path}/{table}")
+    df = read_table(spark, f"{path}/{table}", schema)
     return (df if key is None else df.where(F.col(key).isin(ids))).collect()
 
 
@@ -656,45 +661,25 @@ def _persist_side(df: DataFrame, path: str, table: str, schema: str) -> list:
     return _read_side(df.sparkSession, path, table, schema)
 
 
-def _build_index(
-    df: DataFrame, path: str, k: int, max_iter: int, id_col: str, vec_col: str,
-    encode=None, keys: tuple[str, ...] = ("centroid_id",),
-) -> list[tuple[int, list[float]]]:
-    """The one build body: kmeans_train -> ivf_assignments -> optional
-    ``encode(assigned)`` (returns the columns to persist: a ``codes`` lane,
-    or ivf2's finer cell key; persists any trained side table first) ->
-    vectors/ PARTITIONED BY the cell ``keys`` -> centroids/ keyed by
-    ``keys[0]``. The partitioned layout is what makes a probe an index
-    read (parquet partition pruning, asserted on the query plans in
-    tests)."""
-    centroids = kmeans_train(df, k=k, max_iter=max_iter, id_col=id_col, vec_col=vec_col)
-    vectors = ivf_assignments(df, centroids, id_col, vec_col)
-    if encode is not None:
-        vectors = encode(vectors)
-    # Iceberg analog: vectors table partitioned by the cell keys in the spec
-    write_table(vectors, f"{path}/vectors", mode="overwrite", partition_by=keys)
-    cents_df = local_frame(df.sparkSession, centroids, centroids_schema(keys[0]))
-    write_table(cents_df, f"{path}/centroids", mode="overwrite")
-    return centroids
-
-
 def _query_index(
-    spark, path: str, query_vec: list[float], k: int, cells: list,
-    id_col: str, vec_col: str, keys: tuple[str, ...] = ("centroid_id",),
+    spark, path: str, index: dict, query_vec: list[float], k: int, cells: list,
     bulk=None, over_retrieve: int = 1,
 ) -> DataFrame:
     """The one two-lane query: scan ONLY the probed ``cells`` of vectors/
-    (partition filters on ``keys``; no cells -> the empty result). Without
-    a ``bulk`` lane, brute force over the cells. With one (codes DataFrame
-    -> same rows plus a ``_score`` column), one plan does the rest: the
-    scan reads (id, centroid_id, codes, raw) once and only centroid_id and
-    codes cross into Python; the top over_retrieve*k rows by (score DESC,
-    id) — a per-task top-n, then a single-partition shuffle of at most
-    that many rows per task — are re-ranked exactly on the raw column in
-    the JVM (``_cosine_fold``), and the top k by (cosine DESC, id) come
-    back. Ids are unique in vectors/ (one row per vector): the cut keeps
-    exactly over_retrieve*k rows, so a repeated id would take two
-    candidate slots."""
+    (partition filters on the cell keys; no cells -> the empty result),
+    read by the DDL of the ``index`` manifest, so no schema-inference job.
+    Without a ``bulk`` lane, brute force over the cells. With one (codes
+    DataFrame -> same rows plus a ``_score`` column), one plan does the
+    rest: the scan reads (id, centroid_id, codes, raw) once and only
+    centroid_id and codes cross into Python; the top over_retrieve*k rows
+    by (score DESC, id) — a per-task top-n, then a single-partition
+    shuffle of at most that many rows per task — are re-ranked exactly on
+    the raw column in the JVM (``_cosine_fold``), and the top k by
+    (cosine DESC, id) come back. Ids are unique in vectors/ (one row per
+    vector): the cut keeps exactly over_retrieve*k rows, so a repeated id
+    would take two candidate slots."""
+    id_col, vec_col = index["id_col"], index["vec_col"]
+    keys = _cell_keys(index["two_level"])
     if len(keys) == 1:
         pred = F.col(keys[0]).isin(cells)
     else:
@@ -704,7 +689,7 @@ def _query_index(
             for key, v in zip(keys, cell):
                 clause = clause & (F.col(key) == v)
             pred = pred | clause
-    vectors = spark.read.parquet(f"{path}/vectors").where(pred)
+    vectors = read_table(spark, f"{path}/vectors", index["vectors"]).where(pred)
     if bulk is None:
         return cosine_topk(vectors, query_vec, k, id_col, vec_col)
     q, qn = _query_norm(query_vec)
@@ -715,36 +700,6 @@ def _query_index(
     )
     cos = _cosine_fold(F.col(vec_col), F.lit(q.tolist()), F.lit(qn))
     return _top_by_cosine(cands, cos, k, id_col)
-
-
-def build_ivf_index(
-    df: DataFrame,
-    path: str,
-    k: int = 8,
-    max_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Build-once side of the ANN lifecycle: train centroids (kmeans_train),
-    assign every vector, and store the table PARTITIONED BY centroid_id
-    with the centroid matrix alongside. A probe query then reads only
-    n_probe/k of the data."""
-    return _build_index(df, path, k, max_iter, id_col, vec_col)
-
-
-def query_ivf_index(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query-many side: pick the n_probe closest centroids driver-side
-    (tiny centroid table), scan ONLY their partitions, brute-force within."""
-    probe_ids = _probe(_read_side(spark, path, "centroids", centroids_schema()), query_vec, n_probe)
-    return _query_index(spark, path, query_vec, k, probe_ids, id_col, vec_col)
 
 
 def embedding_near_dup_pairs(

@@ -440,18 +440,15 @@ def test_ivf_index_build_query_lifecycle(spark, sf_dir):
     the scan), with the same results as the in-memory IVF path."""
     import tempfile
 
-    from schema_inference_spark.operators.similarity import (
-        build_ivf_index,
-        cosine_topk_ivf,
-        query_ivf_index,
-    )
+    from schema_inference_spark.operators.pq import build_index, query_index
+    from schema_inference_spark.operators.similarity import cosine_topk_ivf
     from schema_inference_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = [float(x) for x in emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]]
     with tempfile.TemporaryDirectory() as d:
-        cents = build_ivf_index(emb, f"{d}/idx", k=8, max_iter=4)
-        got = query_ivf_index(spark, f"{d}/idx", q, k=10, n_probe=2)
+        cents = build_index(emb, f"{d}/idx", k=8, max_iter=4)
+        got = query_index(spark, f"{d}/idx", q, k=10, n_probe=2)
         got_rows = [(r["vec_id"], r["cosine_sim"]) for r in got.collect()]
 
         mem = cosine_topk_ivf(emb, q, cents, k=10, n_probe=2)

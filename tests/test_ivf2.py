@@ -1,16 +1,17 @@
 """Two-level IVF tests — SCALE.md's nlist-at-10^12 shape (coarse x fine
-partition key, no single k-means over the full corpus) as a real kernel.
-Pytest-pinned like the other ANN kernels (iterative training has no SQL
-oracle)."""
+partition key, no single k-means over the full corpus) as a real kernel:
+``build_index(k_fine=...)``. Pytest-pinned like the other ANN kernels
+(iterative training has no SQL oracle); its full-probe exactness, under
+every codec, is tests/test_ivf_index.py::test_full_probe_equals_brute."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from schema_inference_spark.operators.ivf2 import (
-    build_ivf2_index,
-    query_ivf2_index,
+from schema_inference_spark.operators.pq import (
+    build_index,
+    query_index,
     train_fine_centroids,
 )
 from schema_inference_spark.operators.similarity import (
@@ -29,7 +30,7 @@ def emb(spark, sf_dir):
 @pytest.fixture(scope="module")
 def ivf2_index(spark, emb, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("ivf2"))
-    build_ivf2_index(emb, d, k_coarse=4, k_fine=4, max_iter=3, fine_max_iter=4)
+    build_index(emb, d, k=4, k_fine=4, max_iter=3, fine_max_iter=4)
     return d
 
 
@@ -38,23 +39,6 @@ def _query_vec(emb, vec_id=0):
         float(x)
         for x in emb.where(F.col("vec_id") == vec_id).collect()[0]["embedding"]
     ]
-
-
-def test_ivf2_full_probe_equals_brute(spark, emb, ivf2_index):
-    """Probing every (coarse, fine) cell must reproduce the brute-force
-    top-10 exactly — the index only partitions, the within-cell kernel is
-    the exact fold."""
-    q = _query_vec(emb, vec_id=5)
-    got = [
-        (r["vec_id"], r["cosine_sim"])
-        for r in query_ivf2_index(
-            spark, ivf2_index, q, k=10, n_probe_coarse=4, n_probe=16
-        ).collect()
-    ]
-    brute = [
-        (r["vec_id"], r["cosine_sim"]) for r in cosine_topk(emb, q, k=10).collect()
-    ]
-    assert got == brute
 
 
 def test_ivf2_probe_recall_on_clustered_corpus(spark, tmp_path):
@@ -77,11 +61,11 @@ def test_ivf2_probe_recall_on_clustered_corpus(spark, tmp_path):
             rows.append((c * 100 + i, [float(x) for x in p]))
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     path = str(tmp_path / "ivf2c")
-    build_ivf2_index(df, path, k_coarse=4, k_fine=4, max_iter=4, fine_max_iter=4)
+    build_index(df, path, k=4, k_fine=4, max_iter=4, fine_max_iter=4)
     q = [float(x) for x in (centers[2] + 0.05 * rng.normal(size=64))]
     got = {
         r["vec_id"]
-        for r in query_ivf2_index(
+        for r in query_index(
             spark, path, q, k=10, n_probe_coarse=2, n_probe=4
         ).collect()
     }
@@ -94,21 +78,21 @@ def test_ivf2_layout_is_two_level(spark, ivf2_index):
     distinct (coarse, fine) cells than coarse partitions alone, and every
     row carries a fine_id in [0, k_fine)."""
     vec = spark.read.parquet(f"{ivf2_index}/vectors")
-    cells = vec.select("coarse_id", "fine_id").distinct().collect()
+    cells = vec.select("centroid_id", "fine_id").distinct().collect()
     assert len(cells) > 4
     assert all(0 <= r["fine_id"] < 4 for r in cells)
 
 
 def test_ivf2_partition_pruning_on_both_keys(spark, emb, ivf2_index):
-    """A probe's scan must prune on the (coarse_id, fine_id) partition
+    """A probe's scan must prune on the (centroid_id, fine_id) partition
     keys — the OR-of-cells predicate reaches PartitionFilters."""
     q = _query_vec(emb)
-    got = query_ivf2_index(spark, ivf2_index, q, k=5, n_probe_coarse=2, n_probe=3)
+    got = query_index(spark, ivf2_index, q, k=5, n_probe_coarse=2, n_probe=3)
     got.collect()
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     tail = plan.split("PartitionFilters")[1][:300]
-    assert "coarse_id" in tail and "fine_id" in tail, plan
+    assert "centroid_id" in tail and "fine_id" in tail, plan
 
 
 def test_ivf2_fine_training_layout_proof(spark, emb):
@@ -116,13 +100,11 @@ def test_ivf2_fine_training_layout_proof(spark, emb):
     bit-identical under two different physical layouts (the r4 lesson as
     a requirement, same as PQ codebooks and int8 scales)."""
     cents = kmeans_train(emb, k=3, max_iter=2)
-    assigned = ivf_assignments(emb, cents).withColumnRenamed(
-        "centroid_id", "coarse_id"
-    )
+    assigned = ivf_assignments(emb, cents)
 
     def snap(df):
         return sorted(
-            (r["coarse_id"], r["fine_id"], tuple(r["centroid"]))
+            (r["centroid_id"], r["fine_id"], tuple(r["centroid"]))
             for r in train_fine_centroids(df, k_fine=4, max_iter=3).collect()
         )
 
@@ -135,6 +117,6 @@ def test_ivf2_empty_probe_returns_empty(spark, emb, ivf2_index):
     crash on a missing scan predicate."""
     q = _query_vec(emb)
     for kw in ({"n_probe": 0}, {"n_probe_coarse": 0}):
-        got = query_ivf2_index(spark, ivf2_index, q, k=5, **kw)
+        got = query_index(spark, ivf2_index, q, k=5, **kw)
         assert got.columns == ["vec_id", "cosine_sim"]
         assert got.collect() == [], kw

@@ -1,45 +1,49 @@
-"""Persisted IVF index edge cases shared by every layout: how a query picks
-its cells (one probe rule: (−cos, id), a zero norm scores 0), how the
-encoders fail on a cell they cannot encode, and what one query costs in
-Spark jobs and plan shape.
+"""The persisted IVF index through its one entry point, build_index /
+query_index, under every codec x {flat, two-level}: how a query picks its
+cells (one probe rule: (−cos, id), a zero norm scores 0), that a full
+probe is exact, how the encoders fail on a cell they cannot encode, the
+manifest as the build's commit marker, and what one query costs in Spark
+jobs and plan shape.
 
 The probe tests write their indexes by hand, so each controls exactly what
 the centroids/ table holds and in which row order it is stored; the
-schema, job and plan tests query indexes written by the build_* functions.
+exactness, schema, job and plan tests query the indexes build_index
+writes over the embeddings table.
 """
 
 from __future__ import annotations
 
+import json
 import uuid
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from schema_inference_spark.operators.ivf2 import FINE_SCHEMA, build_ivf2_index
 from schema_inference_spark.operators.pq import (
     CODEBOOK_SCHEMA,
+    CODECS,
+    FINE_SCHEMA,
+    MANIFEST,
     SCALES_SCHEMA,
     _codebooks_to_dict,
-    build_pq_index,
-    build_sq_index,
+    build_index,
     pq_encode,
     pq_train_codebooks,
-    query_pq_index,
-    query_sq_index,
+    query_index,
+    query_pq_index_batch,
     sq_encode,
 )
 from schema_inference_spark.operators.similarity import (
+    CENTROIDS_SCHEMA,
     _cosine_fold,
     _query_norm,
-    build_ivf_index,
-    centroids_schema,
     cosine_to_query_udf,
     cosine_topk,
     cosine_topk_ivf,
-    query_ivf_index,
 )
 from schema_inference_spark.sources.iceberg import write_table
+from schema_inference_spark.sources.tables import load_table
 
 CELLS = {
     0: [(0, [1.0, 0.2, 0.0, 0.1]), (1, [0.9, 0.0, 0.3, 0.0]), (2, [1.0, 0.5, 0.5, 0.0])],
@@ -53,10 +57,10 @@ def _vectors(spark):
     return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>, centroid_id int")
 
 
-def _write_index(spark, path, centroids, codec=None):
-    """vectors/ partitioned by centroid_id (with a ``codes`` column for the
-    sq/pq codecs) and centroids/ as ONE file holding ``centroids`` in the
-    given row order."""
+def _write_index(spark, path, centroids, codec="raw"):
+    """A flat index written by hand: vectors/ partitioned by centroid_id
+    (with a ``codes`` column for the sq/pq codecs), centroids/ as ONE file
+    holding ``centroids`` in the given row order, and the manifest."""
     vectors = _vectors(spark)
     if codec == "float16":
         vectors = sq_encode(vectors, "float16", out_col="codes")
@@ -65,9 +69,15 @@ def _write_index(spark, path, centroids, codec=None):
         write_table(cb_df, f"{path}/codebooks", mode="overwrite")
         vectors = pq_encode(vectors, _codebooks_to_dict(cb_df.collect()))
     write_table(vectors, f"{path}/vectors", mode="overwrite", partition_by=("centroid_id",))
-    spark.createDataFrame(
-        centroids, "centroid_id int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    spark.createDataFrame(centroids, CENTROIDS_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/centroids")
+    manifest = {
+        "codec": codec, "two_level": False, "id_col": "vec_id", "vec_col": "embedding",
+        "vectors": spark.read.parquet(f"{path}/vectors").schema.toDDL(),
+    }
+    with open(f"{path}/{MANIFEST}", "w", encoding="utf-8") as f:
+        json.dump(manifest, f)
 
 
 def _ids(df):
@@ -83,10 +93,10 @@ def test_zero_norm_centroid_scores_zero(spark, tmp_path):
 
     path = str(tmp_path / "idx")
     _write_index(spark, path, [(0, zero), (1, e1), (2, e0)])
-    assert _ids(query_ivf_index(spark, path, q, k=10, n_probe=1)) == {20, 21}
-    assert _ids(query_ivf_index(spark, path, q, k=10, n_probe=2)) == {10, 11, 12, 20, 21}
+    assert _ids(query_index(spark, path, q, k=10, n_probe=1)) == {20, 21}
+    assert _ids(query_index(spark, path, q, k=10, n_probe=2)) == {10, 11, 12, 20, 21}
     # orthogonal to every centroid: all score 0 and the lowest id wins
-    assert _ids(query_ivf_index(spark, path, [0.0, 0.0, 0.0, 1.0], k=10, n_probe=1)) == {0, 1, 2}
+    assert _ids(query_index(spark, path, [0.0, 0.0, 0.0, 1.0], k=10, n_probe=1)) == {0, 1, 2}
 
     df = _vectors(spark).drop("centroid_id")
     cents = [(0, zero), (1, e0), (2, e1)]
@@ -102,15 +112,25 @@ def test_probe_tie_breaks_to_lower_id(spark, tmp_path, layout):
     0, for every layout."""
     c = [0.5, 0.5, 0.5, 0.5]
     path = str(tmp_path / layout)
-    _write_index(spark, path, [(1, c), (0, c)], codec=None if layout == "raw" else layout)
+    _write_index(spark, path, [(1, c), (0, c)], codec=layout)
     q = [0.2, 1.0, 0.1, 0.0]  # nearer to cell 1's vectors than to cell 0's
-    if layout == "raw":
-        got = query_ivf_index(spark, path, q, k=10, n_probe=1)
-    elif layout == "float16":
-        got = query_sq_index(spark, path, q, dtype="float16", k=10, n_probe=1)
-    else:
-        got = query_pq_index(spark, path, q, k=10, n_probe=1)
-    assert _ids(got) == {0, 1, 2}
+    assert _ids(query_index(spark, path, q, k=10, n_probe=1)) == {0, 1, 2}
+
+
+def test_negative_probe_count_raises(spark, tmp_path, built):
+    """A negative probe count is an error, not a slice that quietly probes
+    every cell but the farthest: n_probe and, on a two-level index,
+    n_probe_coarse, in the persisted and in the in-memory probe."""
+    path = str(tmp_path / "idx")
+    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]), (2, [0.0, 0.0, 1.0, 0.0])]
+    _write_index(spark, path, cents)
+    q = [1.0, 0.1, 0.0, 0.0]
+    with pytest.raises(ValueError, match="probe count"):
+        query_index(spark, path, q, k=10, n_probe=-1)
+    with pytest.raises(ValueError, match="probe count"):
+        cosine_topk_ivf(_vectors(spark).drop("centroid_id"), q, cents, n_probe=-1)
+    with pytest.raises(ValueError, match="probe count"):
+        query_index(spark, built[("raw", True)], [1.0] * 64, k=10, n_probe_coarse=-1)
 
 
 def test_pq_encode_names_cells_without_codebook(spark):
@@ -128,39 +148,88 @@ def test_pq_encode_names_cells_without_codebook(spark):
     assert "ValueError" in msg and "no trained PQ codebook for centroid_id 1" in msg, msg
 
 
-# --- indexes written by the build_* functions (k=3 cells over the 8 vectors)
+# --- indexes written by build_index: every codec x {flat, two-level} over
+# the embeddings table
 
-SIDE_TABLES = {
-    "raw": {"centroids": centroids_schema()},
-    "float16": {"centroids": centroids_schema()},
-    "int8": {"centroids": centroids_schema(), "scales": SCALES_SCHEMA},
-    "pq": {"centroids": centroids_schema(), "codebooks": CODEBOOK_SCHEMA},
-    "ivf2": {"centroids": centroids_schema("coarse_id"), "fine_centroids": FINE_SCHEMA},
-}
+LAYOUTS = [(codec, two_level) for codec in CODECS for two_level in (False, True)]
+LAYOUT_IDS = [f"{codec}-{'two_level' if two else 'flat'}" for codec, two in LAYOUTS]
+CODE_BYTES = {"float16": lambda d: 2 * d, "int8": lambda d: d, "pq": lambda d: 16}
+# candidates per result row a full probe needs to be exact: the lossier the
+# bulk lane, the more
+OVER_RETRIEVE = {"raw": 1, "float16": 4, "int8": 4, "pq": 8}
 
 
 @pytest.fixture(scope="module")
-def built(spark, tmp_path_factory):
-    df = _vectors(spark).drop("centroid_id")
+def emb(spark, sf_dir):
+    return load_table(spark, sf_dir, "embeddings")
+
+
+@pytest.fixture(scope="module")
+def built(spark, emb, tmp_path_factory):
+    """{(codec, two_level): path}. Flat indexes have 8 cells; two-level
+    ones 4 coarse x 4 fine."""
     root = tmp_path_factory.mktemp("built")
-    paths = {layout: str(root / layout) for layout in SIDE_TABLES}
-    build_ivf_index(df, paths["raw"], k=3, max_iter=2)
-    build_sq_index(df, paths["float16"], "float16", k=3, max_iter=2)
-    build_sq_index(df, paths["int8"], "int8", k=3, max_iter=2)
-    build_pq_index(df, paths["pq"], k=3, m=2, ncodes=2, max_iter=2, pq_max_iter=2)
-    build_ivf2_index(df, paths["ivf2"], k_coarse=2, k_fine=2, max_iter=2, fine_max_iter=2)
+    paths = {}
+    for codec, two_level in LAYOUTS:
+        paths[codec, two_level] = path = str(root / f"{codec}-{int(two_level)}")
+        build_index(
+            emb, path, codec, k_fine=4 if two_level else None, k=4 if two_level else 8,
+            max_iter=3, fine_max_iter=4, m=16, ncodes=16, pq_max_iter=6, train_sample=500,
+        )
     return paths
 
 
-@pytest.mark.parametrize("layout", list(SIDE_TABLES))
+def _query_vec(emb, vec_id):
+    return [float(x) for x in emb.where(F.col("vec_id") == vec_id).collect()[0]["embedding"]]
+
+
+@pytest.mark.parametrize("layout", LAYOUTS, ids=LAYOUT_IDS)
+def test_full_probe_equals_brute(spark, emb, built, layout):
+    """Probing every cell reproduces the brute-force top-10 exactly, ids
+    and cosines: the index only partitions, the lossy bulk lane only
+    over-retrieves, and the re-rank is the exact fold. Codes are m bytes
+    (pq), d bytes (int8) or 2d bytes (float16)."""
+    codec, _ = layout
+    for vec_id in (5, 7):
+        q = _query_vec(emb, vec_id)
+        got = query_index(
+            spark, built[layout], q, k=10, n_probe=16, over_retrieve=OVER_RETRIEVE[codec],
+            n_probe_coarse=4,
+        )
+        brute = cosine_topk(emb, q, k=10)
+        assert [tuple(r) for r in got.collect()] == [tuple(r) for r in brute.collect()], vec_id
+    if codec != "raw":
+        rows = spark.read.parquet(f"{built[layout]}/vectors").select("codes", "embedding").collect()
+        assert rows and all(
+            len(r["codes"]) == CODE_BYTES[codec](len(r["embedding"])) for r in rows
+        )
+
+
+def _side_tables(codec, two_level):
+    tables = {"centroids": CENTROIDS_SCHEMA}
+    if two_level:
+        tables["fine_centroids"] = FINE_SCHEMA
+    if codec == "int8":
+        tables["scales"] = SCALES_SCHEMA
+    if codec == "pq":
+        tables["codebooks"] = CODEBOOK_SCHEMA
+    return tables
+
+
+@pytest.mark.parametrize("layout", LAYOUTS, ids=LAYOUT_IDS)
 def test_declared_side_schemas_match_files(spark, built, layout):
-    """Queries read the side tables with their declared DDL instead of
-    inferring it. A declared column the files lack would come back as
-    nulls with no error, so every table must read identically both ways."""
-    for table, ddl in SIDE_TABLES[layout].items():
-        where = f"{built[layout]}/{table}"
-        declared = spark.read.schema(ddl).parquet(where)
-        inferred = spark.read.parquet(where)
+    """Queries read the side tables with their declared DDL, and vectors/
+    with the manifest's, instead of inferring them. A declared column the
+    files lack would come back as nulls with no error, so every table
+    must read identically both ways."""
+    path = built[layout]
+    with open(f"{path}/{MANIFEST}", encoding="utf-8") as f:
+        manifest = json.load(f)
+    assert manifest["codec"] == layout[0] and manifest["two_level"] == layout[1]
+    tables = {**_side_tables(*layout), "vectors": manifest["vectors"]}
+    for table, ddl in tables.items():
+        declared = spark.read.schema(ddl).parquet(f"{path}/{table}")
+        inferred = spark.read.parquet(f"{path}/{table}")
         assert declared.schema == inferred.schema, (layout, table)
         rows = declared.collect()
         assert rows and sorted(rows) == sorted(inferred.collect()), (layout, table)
@@ -227,38 +296,65 @@ def _collect_counting_jobs(spark, make_df):
     return df, rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("layout", ["pq", "int8"])
-def test_quantized_query_is_four_jobs_one_plan(spark, built, layout):
-    """One quantized-index query is four Spark jobs: the centroids/ and
-    codebooks/ (or scales/) collects, the vectors/ schema read, and one
-    plan that cuts candidates and re-ranks them. That plan scans vectors/
-    once, pruned to the probed cells, and has one Python stage (the bulk
-    lane)."""
-    q = [0.2, 1.0, 0.1, 0.0]
-    if layout == "pq":
-        def make_df():
-            return query_pq_index(spark, built["pq"], q, k=2, n_probe=3)
-    else:
-        def make_df():
-            return query_sq_index(spark, built["int8"], q, dtype="int8", k=2, n_probe=3)
+@pytest.mark.parametrize("layout", LAYOUTS, ids=LAYOUT_IDS)
+def test_index_query_jobs_and_plan(spark, built, layout):
+    """One query is one collect per side table it reads — centroids/,
+    then fine_centroids/ when two-level, then scales/ (int8) or
+    codebooks/ (pq) — plus one plan; vectors/ is read by the manifest's
+    DDL, so no schema-inference job (pq and int8: 3 jobs). That plan scans
+    vectors/ once, pruned on every cell key, and has one Python stage
+    (the bulk lane, or raw's cosine)."""
+    codec, two_level = layout
+    q = [float(x) for x in np.linspace(-1.0, 1.0, 64)]
+
+    def make_df():
+        return query_index(spark, built[layout], q, k=2, n_probe=3, n_probe_coarse=2)
 
     df, rows, jobs = _collect_counting_jobs(spark, make_df)
     assert len(rows) == 2
-    assert jobs == 4
+    assert jobs == 2 + two_level + (codec in ("int8", "pq"))
     plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
     assert plan.count("ArrowEvalPython") == 1, plan
-    assert plan.count("FileScan") == 1 and f"{layout}/vectors" in plan, plan
-    assert "centroid_id" in plan.split("PartitionFilters")[1][:120], plan
+    assert plan.count("FileScan") == 1 and f"{built[layout]}/vectors" in plan, plan
+    pruned = plan.split("PartitionFilters")[1][:300]
+    assert "centroid_id" in pruned and ("fine_id" in pruned) == two_level, plan
 
 
-@pytest.mark.parametrize("layout", ["pq", "float16", "int8"])
-def test_quantized_query_with_no_probe_is_empty(spark, built, layout):
-    """n_probe=0 probes no cell: the empty (vec_id, cosine_sim) result, as
-    query_ivf2_index gives."""
-    q = [0.2, 1.0, 0.1, 0.0]
-    if layout == "pq":
-        got = query_pq_index(spark, built["pq"], q, k=5, n_probe=0)
-    else:
-        got = query_sq_index(spark, built[layout], q, dtype=layout, k=5, n_probe=0)
+@pytest.mark.parametrize("layout", LAYOUTS, ids=LAYOUT_IDS)
+def test_index_query_with_no_probe_is_empty(spark, built, layout):
+    """n_probe=0 probes no cell: the empty (vec_id, cosine_sim) result."""
+    q = [float(x) for x in np.linspace(-1.0, 1.0, 64)]
+    got = query_index(spark, built[layout], q, k=5, n_probe=0)
     assert got.columns == ["vec_id", "cosine_sim"]
     assert got.collect() == []
+
+
+def test_pq_batch_needs_a_flat_pq_index(spark, built):
+    """The batch path serves one layout, flat pq; the manifest of any
+    other is refused before a job starts."""
+    for layout in [("pq", True), ("int8", False)]:
+        with pytest.raises(ValueError, match="not a flat pq index"):
+            query_pq_index_batch(spark, built[layout], [[1.0] * 64])
+
+
+def test_manifest_is_the_commit_marker(spark, tmp_path):
+    """build_index deletes the old manifest before it writes anything and
+    writes the new one last. A rebuild that fails inside training (m does
+    not divide the dim) leaves no index a query would answer from: the
+    query raises, naming the path, instead of reading the old manifest
+    over whatever vectors/ now holds. A path never built raises the same
+    way; an unknown codec is refused before the old index is touched."""
+    df = _vectors(spark).drop("centroid_id")
+    path = str(tmp_path / "idx")
+    q = [0.2, 1.0, 0.1, 0.0]
+    with pytest.raises(ValueError, match=f"no index at {path}"):
+        query_index(spark, path, q)
+    build_index(df, path, "pq", k=3, max_iter=2, m=2, ncodes=2, pq_max_iter=2)
+    assert len(query_index(spark, path, q, k=2).collect()) == 2
+    with pytest.raises(ValueError, match="codec"):
+        build_index(df, path, "int4", k=3, max_iter=2)
+    assert len(query_index(spark, path, q, k=2).collect()) == 2
+    with pytest.raises(Exception, match="not divisible by m=3"):
+        build_index(df, path, "pq", k=3, max_iter=2, m=3, ncodes=2, pq_max_iter=2)
+    with pytest.raises(ValueError, match=f"no index at {path}"):
+        query_index(spark, path, q)

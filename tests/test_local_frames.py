@@ -16,7 +16,7 @@ import os
 import pytest
 from pyspark.sql.types import StructType
 
-from schema_inference_spark.operators.similarity import centroids_schema
+from schema_inference_spark.operators.similarity import CENTROIDS_SCHEMA
 from schema_inference_spark.sources import tables
 from tests.test_ivf_index import _collect_counting_jobs
 
@@ -80,8 +80,7 @@ CASES = {
     ],
     "rule_name string": [("not_null_a",), ("unique_b",), (None,)],
     "check_name string": [("domain_fmt",), ("null_caption",)],
-    centroids_schema(): [(0, [-0.0, 1e-300, R3]), (1, []), (2, [1.0, None])],
-    centroids_schema("coarse_id"): [(0, [R3, -R3]), (7, [0.0])],
+    CENTROIDS_SCHEMA: [(0, [-0.0, 1e-300, R3]), (1, []), (2, [1.0, None])],
     "qid int, vec_id bigint, cosine_sim double": [(0, 2**40, -0.0), (1, -1, R3)],
     "qid int, _q array<double>, _qn double": [(0, [1e-300, -0.0, R3], 1e-300), (1, [0.5], R3)],
     "qid int, centroid_id int": [(0, 3), (0, 1), (2**31 - 1, -(2**31))],
@@ -91,7 +90,7 @@ CASES = {
 
 def test_cases_cover_every_literal_ddl():
     """Every string-literal DDL passed to local_frame in the package has a
-    case above (the two computed ones, centroids_schema(...) and pq's
+    case above (the two that are not literals, CENTROIDS_SCHEMA and pq's
     f-string, are listed by hand)."""
     literal = set()
     for _, tree in _sources():

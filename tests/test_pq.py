@@ -201,51 +201,6 @@ def test_pq_batch_query_equals_per_query(spark, emb, pq_index):
         assert got[qid] == single, f"qid {qid} diverged"
 
 
-def test_sq_float16_full_probe_equals_brute(spark, emb, tmp_path):
-    """Rung 1 (float16, 2x): full-probe over-retrieve + exact re-rank
-    reproduces the brute-force top-10 exactly; codes are d*2 bytes."""
-    from schema_inference_spark.operators.pq import build_sq_index, query_sq_index
-
-    path = str(tmp_path / "sq16")
-    build_sq_index(emb, path, dtype="float16", k=8, max_iter=3)
-    q = _query_vec(emb, vec_id=7)
-    got = [
-        (r["vec_id"], r["cosine_sim"])
-        for r in query_sq_index(
-            spark, path, q, dtype="float16", k=10, n_probe=8, over_retrieve=4
-        ).collect()
-    ]
-    brute = [
-        (r["vec_id"], r["cosine_sim"]) for r in cosine_topk(emb, q, k=10).collect()
-    ]
-    assert got == brute
-    rows = spark.read.parquet(f"{path}/vectors").select("codes", "embedding").collect()
-    assert all(len(r["codes"]) == 2 * len(r["embedding"]) for r in rows)
-
-
-def test_sq_int8_full_probe_equals_brute(spark, emb, tmp_path):
-    """Rung 2 (int8, 4x): per-partition per-dim symmetric scales; the
-    lossy bulk lane plus exact re-rank still reproduces the brute-force
-    top-10 exactly; codes are d bytes."""
-    from schema_inference_spark.operators.pq import build_sq_index, query_sq_index
-
-    path = str(tmp_path / "sq8")
-    build_sq_index(emb, path, dtype="int8", k=8, max_iter=3)
-    q = _query_vec(emb, vec_id=7)
-    got = [
-        (r["vec_id"], r["cosine_sim"])
-        for r in query_sq_index(
-            spark, path, q, dtype="int8", k=10, n_probe=8, over_retrieve=4
-        ).collect()
-    ]
-    brute = [
-        (r["vec_id"], r["cosine_sim"]) for r in cosine_topk(emb, q, k=10).collect()
-    ]
-    assert got == brute
-    rows = spark.read.parquet(f"{path}/vectors").select("codes", "embedding").collect()
-    assert all(len(r["codes"]) == len(r["embedding"]) for r in rows)
-
-
 def test_sq_int8_scales_layout_proof(spark, emb):
     """int8 scales are min/max aggregates — exact and layout-independent;
     require bit-identity under two physical layouts like the codebooks."""
@@ -269,12 +224,12 @@ def test_sq_int8_bulk_lane_tracks_cosine(spark, emb, tmp_path):
     vs exact cosine < 0.02 over the corpus."""
     from schema_inference_spark.operators.pq import (
         _scales_to_dict,
-        build_sq_index,
+        build_index,
         sq_cosine_scores,
     )
 
     path = str(tmp_path / "sq8e")
-    build_sq_index(emb, path, dtype="int8", k=8, max_iter=3)
+    build_index(emb, path, "int8", k=8, max_iter=3)
     q = _query_vec(emb)
     scales = _scales_to_dict(spark.read.parquet(f"{path}/scales").collect())
     vectors = spark.read.parquet(f"{path}/vectors")

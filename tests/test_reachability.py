@@ -28,8 +28,6 @@ ALLOWED = {
     "sign_lsh_bucket_expr": "fixed-coordinate control in the SRP bucket-balance test",
     "persist_shape_profile": "writer of the reference's JSON data/distinct format (COVERAGE S3)",
     "reanalyze_persisted_shapes": "reader of the reference's JSON data/distinct format (COVERAGE S3)",
-    "build_ivf2_index": "two-level IVF, the layout SCALE.md's 10^12 plan relies on",
-    "query_ivf2_index": "two-level IVF, the layout SCALE.md's 10^12 plan relies on",
     "partkey_cardinality_hll": "queries/ function a test exercises directly (HLL accuracy)",
     "price_quantile_sketch": "queries/ function a test exercises directly (quantile sketch)",
 }
