@@ -30,36 +30,15 @@ def md5_long_sql(expr: str) -> str:
 # --- word shingles ---------------------------------------------------------
 
 
-def words_expr(col: Column) -> Column:
-    return F.split(col, " ")
-
-
-def _shingles_expr(col: Column, k: int = 3) -> Column:
-    """k-word shingles as an array<string>; empty array when fewer than k words.
-
-    _private: the ``F.transform`` lambda runs INTERPRETED per row in Spark
-    4.1.2 — corpus-wide shingling must use :func:`exploded_shingles`
-    (VERDICT r3 #9: no public interpreted-HOF entry points)."""
-    words = words_expr(col)
-    return F.when(
-        F.size(words) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - (k - 1)),
-            lambda i: F.array_join(F.slice(words, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def exploded_shingles(df, id_col: str, text: Column, k: int = 3):
     """(id_col, shingle) rows — the whole-stage-codegen shingle path.
 
     ``explode(sequence)`` generates shingle start indices and
     ``array_join(slice(...))`` builds each shingle: every expression is
-    codegen'd, unlike ``_shingles_expr``, whose ``F.transform`` lambda
-    Spark 4.1.2 evaluates interpreted per row (the repo's measured 20x
-    lesson). Docs with fewer than k words produce no rows. This is the form
-    every corpus-wide operator must use; ``_shingles_expr`` remains only as
-    the (private) per-row mirror of the DuckDB oracle SQL.
+    codegen'd, unlike an ``F.transform`` lambda, which Spark 4.1.2
+    evaluates interpreted per row (the repo's measured 20x lesson). Docs
+    with fewer than k words produce no rows. This is the form every
+    corpus-wide operator must use.
     """
     words = F.split(text, " ")
     base = df.select(id_col, words.alias("_w")).where(F.size("_w") >= k)
@@ -126,27 +105,6 @@ def minhash_perm_consts(seed: int) -> tuple[int, int]:
     a = ((1103515245 * (seed + 1) + 12345) % MINHASH_P) | 1
     b = (2654435761 * (seed + 1)) % MINHASH_P
     return a, b
-
-
-def _perm_expr(base: Column, seed: int) -> Column:
-    a, b = minhash_perm_consts(seed)
-    return (F.lit(a) * (base % F.lit(MINHASH_P)) + F.lit(b)) % F.lit(MINHASH_P)
-
-
-def _shingle_hashes_expr(col: Column, k: int = 3) -> Column:
-    """Base 60-bit hashes of the k-shingles. _private: interpreted per-row
-    mirror — the codegen path is operators/dedup (explode form)."""
-    return F.transform(
-        _shingles_expr(col, k),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"),
-    )
-
-
-def _minhash_expr(col: Column, seed: int, k: int = 3) -> Column:
-    """One MinHash permutation. _private: interpreted per-row mirror of the
-    oracle SQL — corpus-wide MinHash is operators/dedup.minhash_signatures
-    (explode+codegen partial-agg min()s; the repo's measured 20x lesson)."""
-    return F.array_min(F.transform(_shingle_hashes_expr(col, k), lambda h: _perm_expr(h, seed)))
 
 
 def shingle_hashes_sql(expr: str, k: int = 3) -> str:

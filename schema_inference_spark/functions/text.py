@@ -56,7 +56,7 @@ def bpe_ish_token_count_sql(expr: str) -> str:
 # counter is therefore a POLICY, a swap point: named counters map to
 # (Column expr builder, DuckDB SQL builder); production registers its real
 # tokenizer once — e.g. an Arrow pandas UDF wrapping tiktoken/sentencepiece,
-# ``register_token_counter("bpe", lambda c: my_pandas_udf(c))`` — and every
+# ``TOKEN_COUNTERS["bpe"] = (lambda c: my_pandas_udf(c), None)`` — and every
 # budget consumer (pack_documents, chunk_documents, jobs/curate_job.py
 # --tokenizer) picks it up by name. sql_fn may be None for counters with no
 # cross-engine twin (a real BPE has none); oracle-checked queries keep using
@@ -76,12 +76,6 @@ def get_token_counter(name: str):
         raise KeyError(
             f"unknown token counter {name!r}; registered: {sorted(TOKEN_COUNTERS)}"
         ) from None
-
-
-def register_token_counter(name: str, expr_fn, sql_fn=None) -> None:
-    """Register a production tokenizer (expr_fn: Column -> Column token
-    count; sql_fn: optional DuckDB twin for oracle-checked paths)."""
-    TOKEN_COUNTERS[name] = (expr_fn, sql_fn)
 
 
 def _stopword_regex(sw: tuple[str, ...]) -> str:
@@ -173,20 +167,6 @@ def lang_id_sql(expr: str) -> str:
         best = f"(CASE WHEN {h} > {best_score} THEN '{lang}' ELSE {best} END)"
         best_score = f"(CASE WHEN {h} > {best_score} THEN {h} ELSE {best_score} END)"
     return best
-
-
-def _fingerprint_expr(col: Column, k: int = 4) -> Column:
-    """Document fingerprint: min 60-bit hash over k-word shingles (the
-    1-permutation MinHash — a content-defined fingerprint robust to
-    reordering of distant parts).
-
-    _private per-row mirror ONLY (routes through an interpreted array
-    fold) — corpus-wide fingerprinting must use
-    :func:`schema_inference_spark.operators.dedup.document_fingerprints`,
-    the explode+codegen aggregation form of the same function."""
-    from schema_inference_spark.functions.hashing import _minhash_expr
-
-    return _minhash_expr(col, seed=997, k=k)
 
 
 def fingerprint_sql(expr: str, k: int = 4) -> str:

@@ -92,9 +92,8 @@ def document_fingerprints(
     df: DataFrame, id_col: str, text_col: str, k: int = 4, seed: int = 997
 ) -> DataFrame:
     """(id, fingerprint): the 1-permutation MinHash content fingerprint on
-    the same explode+codegen aggregation path as minhash_signatures (the
-    per-row ``_fingerprint_expr`` routes through an interpreted array fold —
-    never use it corpus-wide). NULL for docs with fewer than k words."""
+    the same explode+codegen aggregation path as minhash_signatures. NULL
+    for docs with fewer than k words."""
     return _minhash_aggregated(df, id_col, text_col, [(seed, "fingerprint")], k)
 
 

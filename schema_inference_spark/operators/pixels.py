@@ -1,5 +1,9 @@
 """Pixel-level invariants: decode, dimension agreement, PSNR vs reference.
 
+This module computes the per-row facts; the three checks over them are
+rules (plans/validation.py:pixel_rules) that ``apply_rules`` compiles into
+one projection of this UDF's output, so each image is decoded once.
+
 The only Python on the engine's hot path, and it is Arrow-batched: one
 ``mapInPandas`` over (image_id, bytes, w, h, part) yields a compact
 per-row result frame (no pixels leave the UDF). Batches arrive as pandas
@@ -25,7 +29,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from schema_inference_spark.datagen import codec
 
@@ -64,58 +67,17 @@ def _check_batch(batch: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def pixel_check_results(images: DataFrame, part_col: str = "part") -> DataFrame:
+def pixel_check_results(images: DataFrame) -> DataFrame:
     """Per-row pixel check results (compact, no pixel data).
 
     Declared (w, h) are echoed through the UDF so no join back to the table
     is needed — the blob column is read exactly once and the comparison
     columns ride along in the same Arrow batches.
     """
-    narrow = images.select("image_id", "bytes", "w", "h", F.col(part_col).alias("part"))
+    narrow = images.select("image_id", "bytes", "w", "h", "part")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             yield _check_batch(batch)
 
     return narrow.mapInPandas(run, schema=PIXEL_RESULT_SCHEMA)
-
-
-def pixel_violations(
-    images: DataFrame, psnr_min_db: float = 40.0, part_col: str = "part"
-) -> DataFrame:
-    """Violation rows for the three pixel invariants in ONE pass.
-
-    The three checks are emitted as an array of optional structs and
-    exploded — one UDF scan (one decode per image), no union of branches
-    that would each re-run the decode.
-    """
-    r = pixel_check_results(images, part_col)
-    decode_v = F.when(
-        ~F.col("decode_ok"),
-        F.struct(
-            F.lit("pixel_decode").alias("check_name"),
-            F.to_json(F.struct(F.lit("decode failed").alias("reason"))).alias("detail"),
-        ),
-    )
-    dims_v = F.when(
-        F.col("decode_ok")
-        & ((F.col("actual_w") != F.col("w")) | (F.col("actual_h") != F.col("h"))),
-        F.struct(
-            F.lit("pixel_dims").alias("check_name"),
-            F.to_json(F.struct("w", "h", "actual_w", "actual_h")).alias("detail"),
-        ),
-    )
-    psnr_v = F.when(
-        F.col("decode_ok") & (F.col("psnr_db") < psnr_min_db),
-        F.struct(
-            F.lit("pixel_psnr").alias("check_name"),
-            F.to_json(F.struct(F.round("psnr_db", 2).alias("psnr_db"))).alias("detail"),
-        ),
-    )
-    # explode + codegen WHERE, not an interpreted filter() lambda (hot path)
-    viols = F.array(decode_v, dims_v, psnr_v)
-    return r.select("part", "image_id", F.explode(viols).alias("v")).where(
-        F.col("v").isNotNull()
-    ).select(
-        "part", F.col("v.check_name").alias("check_name"), "image_id", F.col("v.detail").alias("detail")
-    )

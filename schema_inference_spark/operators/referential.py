@@ -14,42 +14,32 @@ from pyspark.sql import functions as F
 
 
 def orphan_violations(
-    left: DataFrame,
-    right: DataFrame,
-    check_name: str,
-    key: str = "image_id",
-    part_col: str = "part",
-    broadcast_right: bool = False,
+    left: DataFrame, right: DataFrame, check_name: str, broadcast_right: bool = False
 ) -> DataFrame:
-    """Rows of ``left`` with no match in ``right`` (left_anti)."""
-    rhs = right.select(key).distinct()
+    """Rows of ``left`` whose image_id has no match in ``right`` (left_anti)."""
+    rhs = right.select("image_id").distinct()
     if broadcast_right:
         rhs = F.broadcast(rhs)
-    return left.join(rhs, key, "left_anti").select(
-        F.col(part_col).alias("part"),
+    return left.join(rhs, "image_id", "left_anti").select(
+        "part",
         F.lit(check_name).alias("check_name"),
-        F.col(key).alias("image_id"),
+        "image_id",
         F.to_json(F.struct(F.lit(check_name).alias("reason"))).alias("detail"),
     )
 
 
-def caption_equality_violations(
-    images: DataFrame,
-    captions: DataFrame,
-    check_name: str = "caption_equality",
-    part_col: str = "part",
-) -> DataFrame:
+def caption_equality_violations(images: DataFrame, captions: DataFrame) -> DataFrame:
     """Images whose caption differs from the reference caption (null-safe:
     a null image caption with a present reference caption is a violation)."""
     ref = captions.select(
         F.col("image_id"), F.col("caption").alias("ref_caption")
     )
-    joined = images.select("image_id", "caption", part_col).join(ref, "image_id", "inner")
+    joined = images.select("image_id", "caption", "part").join(ref, "image_id", "inner")
     return (
         joined.where(~F.col("caption").eqNullSafe(F.col("ref_caption")))
         .select(
-            F.col(part_col).alias("part"),
-            F.lit(check_name).alias("check_name"),
+            "part",
+            F.lit("caption_equality").alias("check_name"),
             F.col("image_id"),
             F.to_json(F.struct("caption", "ref_caption")).alias("detail"),
         )

@@ -287,43 +287,17 @@ def srp_bucket_of(vec: list[float], n_planes: int = SRP_PLANES, seed: int = SRP_
     return bucket
 
 
-def srp_bucket_udf(n_planes: int = SRP_PLANES, seed: int = SRP_SEED):
-    """Column fn: SRP bucket id. Hyperplanes are derived from (seed,
-    n_planes, batch width) inside the kernel — the vector dimension never
-    has to be declared, and the same seed always yields the same planes (a
-    few hundred md5s, cached per width). Per batch the work is n_planes
-    sequential-fold dots (the same IEEE-754 fold as the DuckDB oracle,
-    see ``_seq_dot``)."""
-    cache: dict[int, np.ndarray] = {}
-
-    @pandas_udf("int")
-    def _bucket(s: pd.Series) -> pd.Series:
-        mt = _to_matrix_t(s)
-        if mt.shape[1] == 0:
-            return pd.Series([], dtype="int32")
-        dim = mt.shape[0]
-        if dim not in cache:
-            cache[dim] = srp_hyperplanes(n_planes, dim, seed)
-        dots = _fold_many(mt, cache[dim])  # (n_planes, n)
-        acc = np.zeros(mt.shape[1], dtype=np.int64)
-        for j in range(n_planes):
-            # NOT (dot < 0): True for NaN, matching DuckDB's CASE WHEN
-            # dot >= 0 (NaN above all values) — see srp_bucket_of
-            acc |= (~(dots[j] < 0)).astype(np.int64) << j
-        return pd.Series(acc.astype(np.int32))
-
-    return _bucket
-
-
 def srp_band_buckets_udf(
     n_planes: int = SRP_PLANES, n_bands: int = SRP_BANDS, seed: int = SRP_SEED
 ):
     """Column fn: array<int> of per-band SRP buckets (length n_bands).
 
     All bands' planes stack into ONE (n_bands*n_planes, d) constant matrix,
-    so the whole banded signature is a single Arrow pass of
-    n_bands*n_planes sequential-fold dots — the banding costs no extra
-    batch traversals over the single-band kernel."""
+    derived from (seed, n_planes, batch width) inside the kernel and cached
+    per width, so the vector dimension never has to be declared. The whole
+    banded signature is a single Arrow pass of n_bands*n_planes
+    sequential-fold dots (see ``_seq_dot``); ``srp_buckets`` is its
+    one-band case."""
     cache: dict[int, np.ndarray] = {}
 
     @pandas_udf("array<int>")
@@ -372,7 +346,9 @@ def srp_buckets(
 ) -> DataFrame:
     """Attach the SRP bucket column — the production LSH blocking key.
     At scale ``bucket`` becomes the table's partition/cluster key."""
-    return df.withColumn("bucket", srp_bucket_udf(n_planes, seed)(F.col(vec_col)))
+    # band 0 of the banded kernel: srp_band_seed(seed, 0) == seed
+    buckets = srp_band_buckets_udf(n_planes, 1, seed)(F.col(vec_col))
+    return df.withColumn("bucket", F.element_at(buckets, 1))
 
 
 def srp_band_buckets(

@@ -27,35 +27,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
-    """DataFrame[key, dup_count] of keys appearing more than once."""
-    return (
-        df.where(F.col(key).isNotNull())
-        .groupBy(key)
+def duplicate_rows(df: DataFrame, cols: tuple[str, ...], broadcast_keys: bool = True) -> DataFrame:
+    """Rows of ``df`` whose key ``cols`` occur more than once, plus dup_count.
+
+    A key with a null column is never a duplicate: such rows are dropped
+    before the groupBy, so the null group is neither counted nor broadcast
+    (and the inner join back could not match it anyway)."""
+    keyed = df
+    for c in cols:
+        keyed = keyed.where(F.col(c).isNotNull())
+    dups = (
+        keyed.groupBy(*cols)
         .count()
         .where(F.col("count") > 1)
         .withColumnRenamed("count", "dup_count")
     )
-
-
-def duplicate_row_violations(
-    df: DataFrame,
-    key: str,
-    check_name: str,
-    id_col: str = "image_id",
-    part_col: str = "part",
-    broadcast_keys: bool = True,
-) -> DataFrame:
-    """Violation rows (part, check_name, image_id, detail) for duplicated keys."""
-    dups = duplicate_keys(df, key)
     if broadcast_keys:
         dups = F.broadcast(dups)
-    return (
-        df.join(dups, key, "inner")
-        .select(
-            F.col(part_col).alias("part"),
-            F.lit(check_name).alias("check_name"),
-            F.col(id_col).alias("image_id"),
-            F.to_json(F.struct(F.col(key).alias("key"), F.col("dup_count"))).alias("detail"),
-        )
-    )
+    return df.join(dups, list(cols), "inner")

@@ -1,18 +1,17 @@
 """Declarative constraint rules — the user-facing check DSL.
 
-The image suite (plans/validation.py) is a fixed, tuned pipeline; this
-module is the open surface for arbitrary tables: users declare rules, the
-engine compiles them into ONE narrow scan per table (every row-level rule
-becomes an optional struct in a single exploded projection — the same
-one-pass shape as operators/domain.py) plus one aggregation pass for
-dataset-level rules.
+The one check compiler: users declare rules and the engine compiles them
+into ONE narrow scan per table (every row-level rule becomes an optional
+struct in a single exploded projection) plus one aggregation pass per
+dataset-level rule. The image suite (plans/validation.py) declares its
+domain, null, uniqueness and pixel checks here too.
 
 Rule kinds:
-  * ``row_rule(name, condition)``      — violation when condition is FALSE
+  * ``row_rule(name, condition)``      — violation when condition is not TRUE
   * ``not_null(col)`` / ``in_domain(col, values)`` / ``in_range(col, lo, hi)``
-    / ``matches(col, regex)``          — convenience constructors
+    — convenience constructors
   * ``unique(cols)``                   — dataset-level duplicate-key check
-    (partial-agg groupBy, hot-key safe like operators/uniqueness.py)
+    (partial-agg groupBy, hot-key safe: operators/uniqueness.py)
 
 Everything compiles to built-in expressions; the whole rule set stays
 inside whole-stage codegen.
@@ -25,6 +24,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from schema_inference_spark.operators.uniqueness import duplicate_rows
 from schema_inference_spark.sources.tables import local_frame
 
 
@@ -32,7 +32,7 @@ from schema_inference_spark.sources.tables import local_frame
 class RowRule:
     name: str
     condition: Column  # row passes when TRUE
-    evidence: tuple[str, ...] = ()  # columns echoed into the detail payload
+    evidence: tuple = ()  # column names or Columns echoed into the detail payload
 
 
 @dataclass(frozen=True)
@@ -41,7 +41,7 @@ class UniqueRule:
     cols: tuple[str, ...]
 
 
-def row_rule(name: str, condition: Column, evidence: tuple[str, ...] = ()) -> RowRule:
+def row_rule(name: str, condition: Column, evidence: tuple = ()) -> RowRule:
     return RowRule(name, condition, evidence)
 
 
@@ -63,10 +63,6 @@ def in_range(col: str, lo, hi) -> RowRule:
     )
 
 
-def matches(col: str, regex: str) -> RowRule:
-    return RowRule(f"matches_{col}", F.col(col).isNotNull() & F.col(col).rlike(regex), (col,))
-
-
 def unique(*cols: str) -> UniqueRule:
     return UniqueRule("unique_" + "_".join(cols), tuple(cols))
 
@@ -79,8 +75,9 @@ def apply_rules(
 ) -> DataFrame:
     """Violations DataFrame (rule_name, <id_cols...>, detail) for all rules.
 
-    Row rules share one scan; each unique rule adds one partial-agg
-    groupBy + broadcast join back (small dup-key sets)."""
+    Row rules share one scan and flag a row unless their condition is
+    TRUE; each unique rule adds one partial-agg groupBy + (broadcast) join
+    back (operators/uniqueness.py)."""
     row_rules = [r for r in rules if isinstance(r, RowRule)]
     unique_rules = [r for r in rules if isinstance(r, UniqueRule)]
 
@@ -91,7 +88,7 @@ def apply_rules(
                 ~F.coalesce(r.condition, F.lit(False)),
                 F.struct(
                     F.lit(r.name).alias("rule_name"),
-                    F.to_json(F.struct(*[F.col(c) for c in r.evidence]) if r.evidence else F.struct(F.lit(r.name).alias("rule"))).alias("detail"),
+                    F.to_json(F.struct(*r.evidence) if r.evidence else F.struct(F.lit(r.name).alias("rule"))).alias("detail"),
                 ),
             )
             for r in row_rules
@@ -105,18 +102,10 @@ def apply_rules(
         )
 
     for r in unique_rules:
-        dups = (
-            df.groupBy(*r.cols)
-            .count()
-            .where(F.col("count") > 1)
-            .withColumnRenamed("count", "dup_count")
-        )
-        if broadcast_dup_keys:
-            dups = F.broadcast(dups)
-        v = df.join(dups, list(r.cols), "inner").select(
+        v = duplicate_rows(df, r.cols, broadcast_dup_keys).select(
             F.lit(r.name).alias("rule_name"),
             *id_cols,
-            F.to_json(F.struct(*[F.col(c) for c in r.cols], F.col("dup_count"))).alias("detail"),
+            F.to_json(F.struct(*r.cols, "dup_count")).alias("detail"),
         )
         out = v if out is None else out.unionByName(v)
 
@@ -126,16 +115,19 @@ def apply_rules(
 
 
 def rule_verdicts(df: DataFrame, violations: DataFrame, rules: list) -> DataFrame:
-    """(rule_name, n_rows, n_violations, passed) — dataset-level verdicts."""
-    n_rows = df.count()
-    names = [r.name for r in rules]
-    grid = local_frame(df.sparkSession, [(n,) for n in names], "rule_name string")
+    """(rule_name, n_rows, n_violations, passed) — dataset-level verdicts.
+
+    Lazy: the row count is a one-row aggregate in the same plan, so building
+    the frame starts no Spark job."""
+    grid = local_frame(df.sparkSession, [(r.name,) for r in rules], "rule_name string")
+    n_rows = df.agg(F.count(F.lit(1)).alias("n_rows"))
     counts = violations.groupBy("rule_name").agg(F.count(F.lit(1)).alias("n_violations"))
     return (
         grid.join(counts, "rule_name", "left")
+        .crossJoin(n_rows)
         .select(
             "rule_name",
-            F.lit(n_rows).cast("bigint").alias("n_rows"),
+            "n_rows",
             F.coalesce("n_violations", F.lit(0)).cast("bigint").alias("n_violations"),
             (F.coalesce("n_violations", F.lit(0)) == 0).alias("passed"),
         )

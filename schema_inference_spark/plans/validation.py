@@ -5,12 +5,16 @@ distributed aggregation, one evidence table, driver-side artifact emission)
 into a constraint suite over the image+caption table:
 
   stats profile (1 pass, blob-free)  ─┐
-  domain checks (filters)             ├─> violations (unionByName)
-  uniqueness (agg + broadcast join)   │      + per-partition verdicts
+  domain + null rules (one scan)      ├─> violations (unionByName)
+  unique rules (agg + broadcast join) │      + per-partition verdicts
   referential (anti joins)            │      + profile table
   caption equality (inner join)       │
-  pixel invariants (Arrow UDF scan)  ─┘
+  pixel rules (Arrow UDF scan)       ─┘
   drift vs snapshot profile (tiny histogram join)
+
+The domain, null, uniqueness and pixel checks are rules (plans/rules.py)
+compiled by ``apply_rules``; only the cross-table checks have operators of
+their own (operators/referential.py).
 
 Everything stays distributed; the driver only sees verdict aggregates
 (vs the reference's collectAsMap of every distinct schema,
@@ -25,17 +29,18 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from schema_inference_spark.datagen.images import FMT_DOMAIN, IMAGES_SCHEMA
-from schema_inference_spark.operators.domain import domain_violations, schema_mismatches
+from schema_inference_spark.operators.domain import schema_mismatches
 from schema_inference_spark.operators.drift import drift_verdicts
-from schema_inference_spark.operators.pixels import pixel_violations
+from schema_inference_spark.operators.pixels import pixel_check_results
 from schema_inference_spark.operators.profile import profile_images
 from schema_inference_spark.operators.referential import (
     caption_equality_violations,
     orphan_violations,
 )
-from schema_inference_spark.operators.uniqueness import duplicate_row_violations
+from schema_inference_spark.plans.rules import apply_rules, in_domain, row_rule, unique
 from schema_inference_spark.sources.tables import local_frame
 
 ROW_CHECKS = (
@@ -61,7 +66,6 @@ class ValidationConfig:
     ks_threshold: float = 0.25
     check_pixels: bool = True
     broadcast_dup_keys: bool = True
-    declared_schema = IMAGES_SCHEMA
 
 
 @dataclass
@@ -81,27 +85,62 @@ class ValidationResult:
         return salted_exemplars(self.violations, "check_name", "image_id", k=k)
 
 
+def image_rules(fmt_domain: tuple[str, ...]) -> list:
+    """The checks over the images table: the three row rules share one scan,
+    each unique rule is one partial-agg groupBy."""
+    return [
+        in_domain("fmt", fmt_domain),
+        # a null w or h makes the condition null, which flags the row
+        row_rule("domain_dims", (F.col("w") > 0) & (F.col("h") > 0), ("w", "h")),
+        row_rule(
+            "null_caption", F.col("caption").isNotNull(), (F.lit("caption is null").alias("reason"),)
+        ),
+        unique("image_id"),
+        unique("phash"),
+    ]
+
+
+def pixel_rules(psnr_min_db: float) -> list:
+    """The checks over ``pixel_check_results``. Each flags a row only when
+    its violation condition is TRUE (a null comparison is no violation),
+    so the pass condition is ``~coalesce(violation, false)``."""
+
+    def flag(name: str, violation, evidence: tuple):
+        return row_rule(name, ~F.coalesce(violation, F.lit(False)), evidence)
+
+    decoded = F.col("decode_ok")
+    return [
+        flag("pixel_decode", ~decoded, (F.lit("decode failed").alias("reason"),)),
+        flag(
+            "pixel_dims",
+            decoded & ((F.col("actual_w") != F.col("w")) | (F.col("actual_h") != F.col("h"))),
+            ("w", "h", "actual_w", "actual_h"),
+        ),
+        flag(
+            "pixel_psnr",
+            decoded & (F.col("psnr_db") < psnr_min_db),
+            (F.round("psnr_db", 2).alias("psnr_db"),),
+        ),
+    ]
+
+
 def collect_violations(
     images: DataFrame, captions: DataFrame, config: ValidationConfig
 ) -> DataFrame:
     """Union of all row-level violation tables (lazy)."""
-    v = domain_violations(images, config.fmt_domain)
-    v = v.unionByName(
-        duplicate_row_violations(
-            images, "image_id", "unique_image_id", broadcast_keys=config.broadcast_dup_keys
-        )
+    ids = ("part", "image_id")
+    v = apply_rules(
+        images, image_rules(config.fmt_domain), ids, broadcast_dup_keys=config.broadcast_dup_keys
     )
-    v = v.unionByName(
-        duplicate_row_violations(
-            images, "phash", "unique_phash", broadcast_keys=config.broadcast_dup_keys
+    if config.check_pixels:
+        # one decode per image: every pixel rule reads the same UDF output
+        v = v.unionByName(
+            apply_rules(pixel_check_results(images), pixel_rules(config.psnr_min_db), ids)
         )
-    )
+    v = v.select("part", F.col("rule_name").alias("check_name"), "image_id", "detail")
     v = v.unionByName(orphan_violations(images, captions, "ref_orphan_image"))
     v = v.unionByName(orphan_violations(captions, images, "ref_orphan_caption"))
-    v = v.unionByName(caption_equality_violations(images, captions))
-    if config.check_pixels:
-        v = v.unionByName(pixel_violations(images, config.psnr_min_db))
-    return v
+    return v.unionByName(caption_equality_violations(images, captions))
 
 
 def run_validation(
@@ -119,14 +158,8 @@ def run_validation(
     (its count + reduceByKey recomputed the whole parse lineage twice,
     SeqFilesScan.java:284,297)."""
     config = config or ValidationConfig()
-    schema_problems = []
-    if config.declared_schema is not None:
-        import pyspark.sql.types as T
-
-        declared_data_cols = T.StructType(
-            [f for f in config.declared_schema.fields if f.name != "part"]
-        )
-        schema_problems = schema_mismatches(images.drop("part"), declared_data_cols)
+    declared = T.StructType([f for f in IMAGES_SCHEMA.fields if f.name != "part"])
+    schema_problems = schema_mismatches(images.drop("part"), declared)
 
     profile = profile_images(images)
     violations = collect_violations(images, captions, config)

@@ -1,24 +1,18 @@
-"""Structured Streaming front-end for the validation engine.
+"""Structured Streaming front-end.
 
 The reference is strictly batch (hourly partitions, SURVEY.md §2.9); the
 north_rule keeps batch as the core but a streaming ingest path is the
-natural extension for a continuously-landing image table:
+natural extension for continuously-landing tables:
 
 * ``windowed_event_counts`` — watermarked tumbling-window aggregation over
   an event stream (counts + sums per window/event_type). Used with the
   memory sink + ``processAllAvailable`` for deterministic tests; the same
   unbounded plan runs on kafka/file sources in production.
-* ``validate_stream`` — ``foreachBatch`` bridge: every micro-batch runs the
-  SAME batch constraint suite (plans/validation.py) and appends verdicts to
-  the checkpoint table — streaming resumability and batch resumability share
-  one lineage format. This is the idiomatic Spark pattern for reusing a
-  batch pipeline under streaming (no separate streaming operator set to
-  keep in sync).
+* ``run_stream_to_memory`` — drives such a plan to completion against the
+  memory sink.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,33 +60,3 @@ def run_stream_to_memory(
     finally:
         q.stop()
     return spark.sql(f"SELECT * FROM {query_name}")
-
-
-def validate_stream(
-    images_stream: DataFrame,
-    captions: DataFrame,
-    checkpoint_path: str,
-    run_validation_fn: Callable,
-    checkpoint_fn: Callable,
-    checkpoint_location: str,
-) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
-    """Run the batch constraint suite on every micro-batch via foreachBatch.
-
-    Each micro-batch's verdicts append to the same per-partition lineage
-    table that batch runs use, so a consumer cannot tell (nor needs to)
-    whether a partition was validated by the batch or streaming path.
-    """
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        res = run_validation_fn(spark, batch_df, captions)
-        checkpoint_fn(res.verdicts, checkpoint_path, run_id=f"stream-epoch-{epoch_id}")
-
-    return (
-        images_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_location)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -48,10 +48,10 @@ def test_q3_broadcasts_customer_dim(spark, sf_dir):
 
 
 def test_uniqueness_partial_agg_and_broadcast(images_on_disk):
-    from schema_inference_spark.operators.uniqueness import duplicate_row_violations
+    from schema_inference_spark.plans.rules import apply_rules, unique
 
     images, _ = images_on_disk
-    plan = plan_of(duplicate_row_violations(images, "phash", "u"))
+    plan = plan_of(apply_rules(images, [unique("phash")], ("part", "image_id")))
     assert "partial_count" in plan  # hot key combined map-side
     assert "BroadcastHashJoin" in plan  # dup-key set broadcast, big side unshuffled
 
@@ -75,11 +75,29 @@ def test_orphan_check_is_anti_join(images_on_disk):
     assert "LeftAnti" in plan and "Broadcast" in plan
 
 
-def test_pixel_scan_reads_bytes_once(images_on_disk):
-    from schema_inference_spark.operators.pixels import pixel_violations
+def test_suite_row_rules_share_one_scan(images_on_disk):
+    """The suite's domain_fmt, domain_dims and null_caption rules compile to
+    one blob-free scan of images and one explode."""
+    from schema_inference_spark.datagen.images import FMT_DOMAIN
+    from schema_inference_spark.plans.rules import RowRule, apply_rules
+    from schema_inference_spark.plans.validation import image_rules
 
     images, _ = images_on_disk
-    plan = plan_of(pixel_violations(images))
+    rules = [r for r in image_rules(FMT_DOMAIN) if isinstance(r, RowRule)]
+    assert [r.name for r in rules] == ["domain_fmt", "domain_dims", "null_caption"]
+    plan = plan_of(apply_rules(images, rules, ("part", "image_id")))
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
+    assert len(scans) == 1 and "bytes" not in scans[0], plan
+    assert plan.count("Generate explode") == 1, plan
+
+
+def test_pixel_scan_reads_bytes_once(images_on_disk):
+    from schema_inference_spark.operators.pixels import pixel_check_results
+    from schema_inference_spark.plans.rules import apply_rules
+    from schema_inference_spark.plans.validation import pixel_rules
+
+    images, _ = images_on_disk
+    plan = plan_of(apply_rules(pixel_check_results(images), pixel_rules(40.0), ("part", "image_id")))
     # exactly one scan carries the blob column
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
     assert sum("bytes" in s for s in scans) == 1

@@ -1,12 +1,13 @@
 """Dead-code guard: every top-level ``def``/``class`` in the package and the
 jobs must be reached from non-test code.
 
-A name counts as reached if it appears as a word anywhere in a non-test
-source file — a package module, ``jobs/``, the bench scripts, ``tools/``,
-``perfbench/`` or ``__spark_entry__.py`` — other than its own ``def`` line.
-That is a word grep, not a call graph, so a dynamic lookup by string
-(the ``queries/`` registry, an ``importlib`` path) still counts as long as
-the name is written out somewhere. No Spark session is needed.
+A name counts as reached if the code of a non-test source file — a package
+module, ``jobs/``, the bench scripts, ``tools/``, ``perfbench/`` or
+``__spark_entry__.py`` — uses it: as a ``Name``, an ``Attribute``, an
+imported name, or a string constant shaped like an identifier (a registry
+lookup by name). The walk is over each file's syntax tree, so a mention in a
+docstring or comment does not count. It is not a call graph: a use inside
+another unreached definition still counts. No Spark session is needed.
 """
 
 from __future__ import annotations
@@ -30,7 +31,10 @@ ALLOWED = {
     "reanalyze_persisted_shapes": "reader of the reference's JSON data/distinct format (COVERAGE S3)",
     "partkey_cardinality_hll": "queries/ function a test exercises directly (HLL accuracy)",
     "price_quantile_sketch": "queries/ function a test exercises directly (quantile sketch)",
+    "infer_json_type_expr": "Catalyst formulation the Python shape lattice is tested against",
 }
+
+IDENTIFIER = re.compile(r"[A-Za-z_]\w*")
 
 
 def _py_files(root: str):
@@ -47,28 +51,43 @@ def _reader_files() -> list[str]:
 
 
 def _definitions():
-    """Yield (name, rel path, def line number, source) per top-level def/class."""
+    """Yield (name, rel path, def line number) per top-level def/class."""
     for root in DEFINING_ROOTS:
         for path in _py_files(root):
             with open(path, encoding="utf-8") as fh:
                 src = fh.read()
             for node in ast.parse(src).body:
                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                    yield node.name, os.path.relpath(path, REPO), node.lineno, src
+                    yield node.name, os.path.relpath(path, REPO), node.lineno
+
+
+def used_names(src: str) -> Counter:
+    """Uses of each name in the code of ``src`` (docstrings and comments
+    are not code)."""
+    used = Counter()
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.Name):
+            used[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            used[node.attr] += 1
+        elif isinstance(node, ast.alias):
+            used.update(node.name.split("."))
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and IDENTIFIER.fullmatch(node.value)
+        ):
+            used[node.value] += 1
+    return used
 
 
 def unreached() -> dict[str, str]:
-    """{name: "path:line"} for every top-level def/class no reader mentions."""
-    words = Counter()
+    """{name: "path:line"} for every top-level def/class no reader uses."""
+    used = Counter()
     for path in _reader_files():
         with open(path, encoding="utf-8") as fh:
-            words.update(re.findall(r"\w+", fh.read()))
-    found = {}
-    for name, rel, lineno, src in _definitions():
-        own = re.findall(r"\w+", src.splitlines()[lineno - 1]).count(name)
-        if words[name] <= own:
-            found[name] = f"{rel}:{lineno}"
-    return found
+            used.update(used_names(fh.read()))
+    return {name: f"{rel}:{lineno}" for name, rel, lineno in _definitions() if not used[name]}
 
 
 def test_every_definition_is_reached():
@@ -79,3 +98,16 @@ def test_every_definition_is_reached():
 def test_allowlist_names_only_existing_definitions():
     gone = sorted(set(ALLOWED) - {name for name, *_ in _definitions()})
     assert not gone, f"allowlisted names no longer defined; drop them: {gone}"
+
+
+def test_docstring_or_comment_mention_is_not_a_use():
+    src = (
+        "def caller():\n"
+        '    """Runs helper() on every row."""\n'
+        "    # helper is applied below\n"
+        "    return 1\n"
+    )
+    assert used_names(src)["helper"] == 0
+    assert used_names("helper(1)")["helper"] == 1
+    assert used_names("from m import helper")["helper"] == 1
+    assert used_names("REGISTRY['helper']")["helper"] == 1

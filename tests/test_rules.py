@@ -8,7 +8,6 @@ from schema_inference_spark.plans.rules import (
     apply_rules,
     in_domain,
     in_range,
-    matches,
     not_null,
     row_rule,
     rule_verdicts,
@@ -36,7 +35,7 @@ def _rules():
         not_null("status"),
         in_domain("status", ("active", "closed")),
         in_range("price", 0.0, 100.0),
-        matches("email", r"^[^@]+@[^@]+\.[a-z]+$"),
+        row_rule("email_format", F.col("email").rlike(r"^[^@]+@[^@]+\.[a-z]+$"), ("email",)),
         unique("id"),
         row_rule("price_even_dollars", F.col("price") % 1 == 0, ("price",)),
     ]
@@ -51,7 +50,7 @@ def test_rule_violations(spark):
     assert ("domain_status", "r3") in got
     assert ("not_null_status", "r4") in got
     assert ("domain_status", "r4") in got  # null fails domain too
-    assert ("matches_email", "r4") in got
+    assert ("email_format", "r4") in got
     assert sum(1 for n, i in got if n == "unique_id" and i == "r5") == 1  # distinct pairs; both rows matched
     # clean row appears nowhere
     assert not any(i == "r1" for _, i in got)
@@ -67,6 +66,26 @@ def test_rule_verdicts(spark):
     assert verdicts["price_even_dollars"]["passed"]  # all prices integral
     assert not verdicts["range_price"]["passed"]
     assert all(r["n_rows"] == 6 for r in verdicts.values())
+
+
+def test_rule_verdicts_starts_no_job(spark):
+    """The row count is part of the verdict plan: building the frame starts
+    no Spark job, and the verdicts keep their schema."""
+    import uuid
+
+    df = _df(spark)
+    rules = _rules()
+    sc = spark.sparkContext
+    group = f"lazy-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        verdicts = rule_verdicts(df, apply_rules(df, rules, id_cols=("id",)), rules)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert verdicts.schema.simpleString() == (
+        "struct<rule_name:string,n_rows:bigint,n_violations:bigint,passed:boolean>"
+    )
 
 
 def test_single_scan_for_row_rules(spark):

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from schema_inference_spark.operators.proto import (
     concat_proto_files,
     proto_hierarchy,
@@ -18,32 +16,6 @@ def test_streaming_equals_batch(spark, sf_dir):
     batch = {tuple(r) for r in hourly_event_windows(spark, sf_dir).collect()}
     stream = {tuple(r) for r in streaming_hourly_windows(spark, sf_dir).collect()}
     assert batch == stream and len(batch) > 0
-
-
-def test_streaming_validation_foreachbatch(spark):
-    from schema_inference_spark.datagen.images import generate_image_corpus, images_spark_df
-    from schema_inference_spark.plans.checkpoint import write_checkpoint
-    from schema_inference_spark.plans.validation import run_validation
-    from schema_inference_spark.streaming.validate_stream import validate_stream
-
-    corpus = generate_image_corpus(400, n_parts=2)
-    images, captions = images_spark_df(spark, corpus)
-    with tempfile.TemporaryDirectory() as d:
-        images.write.mode("overwrite").parquet(f"{d}/in")
-        stream = spark.readStream.schema(images.schema).parquet(f"{d}/in")
-        q = validate_stream(
-            stream,
-            captions,
-            checkpoint_path=f"{d}/ckpt",
-            run_validation_fn=run_validation,
-            checkpoint_fn=write_checkpoint,
-            checkpoint_location=f"{d}/stream_ck",
-        )
-        q.awaitTermination(120)
-        ckpt = spark.read.parquet(f"{d}/ckpt")
-        rows = ckpt.collect()
-        assert {r["part"] for r in rows} == {0, 1}
-        assert all(r["run_id"].startswith("stream-epoch-") for r in rows)
 
 
 NESTED = {

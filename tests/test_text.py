@@ -50,9 +50,12 @@ def test_quality_score_ranges(spark):
 
 
 def test_fingerprint_stability_and_sensitivity(spark):
+    from schema_inference_spark.operators.dedup import document_fingerprints
+
     base = "alpha bravo charlie delta echo foxtrot golf hotel"
-    df = spark.createDataFrame([(base,), (base,), (base + " extra",)], "text string")
-    rows = [r["fp"] for r in df.select(TX._fingerprint_expr(F.col("text")).alias("fp")).collect()]
+    df = spark.createDataFrame([(0, base), (1, base), (2, base + " extra")], "id int, text string")
+    fps = {r["id"]: r["fingerprint"] for r in document_fingerprints(df, "id", "text").collect()}
+    rows = [fps[i] for i in range(3)]
     assert rows[0] == rows[1]  # deterministic
     # appending text can only add shingles -> fingerprint (min-hash) <= original
     assert rows[2] <= rows[0]

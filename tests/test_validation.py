@@ -122,3 +122,64 @@ def test_profile_never_reads_bytes(spark, corpus):
         read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
         assert read_schema, plan
         assert "bytes" not in read_schema[0]
+
+
+def test_violation_details_on_planted_rows(spark):
+    """The violations table's schema and every check's detail payload, one
+    planted row per check (two for a duplicated key). Null phash keys are
+    never duplicates."""
+    import json
+
+    from schema_inference_spark.datagen import codec
+    from schema_inference_spark.datagen.images import CAPTIONS_SCHEMA, IMAGES_SCHEMA
+
+    def img(image_id, fmt="png", w=8, h=8, caption="c", phash=None, part=0, buf=None, step=None):
+        if buf is None:
+            px = codec.reference_pixels(image_id, 8, 8)
+            buf = codec.encode_image(px, "jpeg", step) if step else codec.encode_image(px, "png")
+        return (image_id, buf, w, h, fmt, caption, phash, part)
+
+    rows = [
+        img("ok"),
+        img("bad_fmt", fmt="bmp"),
+        img("bad_dims", w=0),
+        img("no_caption", caption=None, phash=1),
+        img("dup", phash=2),
+        img("dup", phash=3, part=1),
+        img("hot_a", phash=7),
+        img("hot_b", phash=7, part=1),
+        img("orphan", phash=4),
+        img("corrupt", buf=b"not an image", phash=5),
+        img("blurry", fmt="jpeg", step=codec.BAD_QUALITY_STEP, phash=6),
+    ]
+    images = spark.createDataFrame(rows, IMAGES_SCHEMA)
+    ref_captions = {r[0]: ("ref" if r[0] == "no_caption" else "c", r[7]) for r in rows}
+    del ref_captions["orphan"]
+    ref_captions["lonely"] = ("c", 1)
+    captions = spark.createDataFrame(
+        [(i, c, p) for i, (c, p) in ref_captions.items()], CAPTIONS_SCHEMA
+    )
+
+    res = run_validation(spark, images, captions)
+    assert res.violations.schema.simpleString() == (
+        "struct<part:int,check_name:string,image_id:string,detail:string>"
+    )
+    _w, _h, px = codec.decode_image(rows[-1][1])
+    psnr = round(codec.psnr(px, codec.reference_pixels("blurry", 8, 8)), 2)
+    want = sorted([
+        (0, "domain_fmt", "bad_fmt", '{"fmt":"bmp"}'),
+        (0, "domain_dims", "bad_dims", '{"w":0,"h":8}'),
+        (0, "null_caption", "no_caption", '{"reason":"caption is null"}'),
+        (0, "caption_equality", "no_caption", '{"ref_caption":"ref"}'),
+        (0, "unique_image_id", "dup", '{"image_id":"dup","dup_count":2}'),
+        (1, "unique_image_id", "dup", '{"image_id":"dup","dup_count":2}'),
+        (0, "unique_phash", "hot_a", '{"phash":7,"dup_count":2}'),
+        (1, "unique_phash", "hot_b", '{"phash":7,"dup_count":2}'),
+        (0, "ref_orphan_image", "orphan", '{"reason":"ref_orphan_image"}'),
+        (1, "ref_orphan_caption", "lonely", '{"reason":"ref_orphan_caption"}'),
+        (0, "pixel_decode", "corrupt", '{"reason":"decode failed"}'),
+        (0, "pixel_dims", "bad_dims", '{"w":0,"h":8,"actual_w":8,"actual_h":8}'),
+        (0, "pixel_psnr", "blurry", json.dumps({"psnr_db": psnr}, separators=(",", ":"))),
+    ])
+    assert psnr < 40.0
+    assert sorted(tuple(r) for r in res.violations.collect()) == want
