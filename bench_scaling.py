@@ -12,7 +12,7 @@ Usage: python bench_scaling.py <axis> [n] [n_base] [rounds]
   submit       the same suite launched as spark-submit --py-files
                jobs/validate_job.py (timed by the job's --bench-rounds)
   dedup        MinHash-LSH candidate pairs over n docs
-  curation     LSH -> Jaccard verify -> components -> split -> packing
+  curation     jobs/curate_job.py end to end (dedup -> split -> packing)
   incremental  an n/2-doc new batch deduped against a persisted n-doc prior
   ann          IVF assignment (k=256) + a 4-query n_probe=2 top-k batch
   pq           IVF-PQ encode + a 4-query ADC / exact re-rank batch
@@ -52,18 +52,14 @@ from bench import (
     assert_no_cached_plans, ensure_images_parquet, images_cache_path,
     run_validation_suite,
 )
-from schema_inference_spark.functions import text as TX
+from jobs.curate_job import main as curate_job
 from schema_inference_spark.operators.dedup import (
-    cross_batch_candidates, cross_batch_exact_dups, cross_batch_verified_pairs,
-    dedup_signatures, duplicate_components, jaccard_verified_pairs,
-    lsh_candidate_pairs,
+    band_pairs, cross_batch_exact_dups, dedup_signatures, verify_pairs,
 )
-from schema_inference_spark.operators.packing import pack_documents
 from schema_inference_spark.operators.pq import (
     _codebooks_to_dict, _lut, _unit, adc_scores, pq_encode, pq_train_codebooks,
 )
 from schema_inference_spark.operators.profile import profile_images
-from schema_inference_spark.operators.sampling import leakage_safe_split
 from schema_inference_spark.operators.similarity import (
     _probe, _query_index, cosine_topk, ivf_assignments,
 )
@@ -168,10 +164,14 @@ def spawn(name: str, cpus: int, n: int, timed: bool = True) -> dict | None:
 # --- shared inputs
 
 
+def dedup_corpus_path(n: int) -> str:
+    return f"/tmp/spark_graft_dedup_corpus_{n}"
+
+
 @functools.cache
 def dedup_corpus(spark, n: int) -> DataFrame:
     """The dedup and curation axes' deterministic corpus, cached in /tmp."""
-    path = f"/tmp/spark_graft_dedup_corpus_{n}"
+    path = dedup_corpus_path(n)
     if not os.path.exists(f"{path}/_done"):
         # deterministic corpus: 30 md5-derived words per doc; every 100th doc is
         # a near-dup of its predecessor (one word changed)
@@ -294,58 +294,24 @@ def submit(cpus: int, n: int) -> dict:
 
 
 def dedup(spark, n: int) -> dict:
-    docs = dedup_corpus(spark, n)
-    return {"n_pairs": lsh_candidate_pairs(docs, "doc_id", "text", n_perm=4, band_size=2).count()}
+    sigs = dedup_signatures(dedup_corpus(spark, n), n_perm=4)
+    return {"n_pairs": band_pairs(sigs, n_perm=4, band_size=2).count()}
 
 
 def curation(spark, n: int) -> dict:
-    docs = dedup_corpus(spark, n)
-    # Production pipelines MATERIALIZE stage boundaries (each phase writes
-    # a table the next reads); re-deriving the full lazy DAG for every
-    # downstream action would run the heavy MinHash/Jaccard lane 4x. The
-    # persisted frames are the tiny ones (candidate pairs, dropped ids,
-    # the narrow (id, split, tokens) projection) — all unpersisted before
-    # the next timed round, so the bench-integrity rule (empty
-    # CacheManager at round start) holds.
-    cached = []
-    cands = lsh_candidate_pairs(docs, "doc_id", "text", n_perm=4, band_size=2)
-    cached.append(cands.persist())
-    pairs = jaccard_verified_pairs(docs, cands, "doc_id", "text", threshold=0.6)
-    cached.append(pairs.persist())
-    n_pairs = pairs.count()  # heavy lane 1: minhash/banding + jaccard verify
-    comps = duplicate_components(pairs, "doc_id")
-    drop = comps.where(F.col("doc_id") != F.col("component")).select("doc_id")
-    cached.append(drop.persist())
-    n_dropped = drop.count()  # tiny iterative lane over the cached pairs
-    kept = docs.join(drop, "doc_id", "left_anti")
-    # route splits by VERIFIED pairs — stage-for-stage the curate_job
-    # pipeline (ADVICE r4: routing by raw candidates made the benchmarked
-    # pipeline differ from the shipped one for pairs failing verification)
-    split_docs = leakage_safe_split(kept, pairs, "doc_id")
-    narrow = split_docs.select(
-        "doc_id", "split",
-        TX.token_count_expr(F.col("text")).cast("long").alias("n_tokens"),
-    )
-    cached.append(narrow.persist())
-    splits = {r["split"]: r["n"] for r in
-              narrow.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()}
-    train = narrow.where(F.col("split") == "train").select("doc_id", "n_tokens")
-    packed = pack_documents(train, max_tokens=512, n_partitions=16)
-    agg = packed.agg(
-        F.count(F.lit(1)).alias("n_packed"),
-        F.countDistinct("bin_id").alias("n_bins"),
-        F.sum("n_tokens").alias("tok"),
-    ).collect()[0]
-    for frame in cached:
-        frame.unpersist()
-    return {
-        "n_pairs": n_pairs,
-        "n_dropped": n_dropped,
-        "splits": splits,
-        "n_packed": agg["n_packed"],
-        "n_bins": agg["n_bins"],
-        "train_tokens": agg["tok"],
-    }
+    """The shipped job, not a copy of its pipeline: curate_job.main into a
+    per-round temp dir; its metrics.json minus the per-stage timings is the
+    round's outputs."""
+    dedup_corpus(spark, n)
+    with tempfile.TemporaryDirectory() as out:
+        rc = curate_job(["--input", f"{dedup_corpus_path(n)}/docs", "--output", out,
+                         "--max-tokens", "512", "--pack-groups", "16"])
+        if rc:
+            raise SystemExit(f"curate_job exited {rc}")
+        with open(f"{out}/metrics.json", encoding="utf-8") as f:
+            metrics = json.load(f)
+    metrics.pop("stages")
+    return metrics
 
 
 @functools.cache
@@ -385,15 +351,13 @@ def incremental(spark, n: int) -> dict:
     ex = exact.agg(
         F.count(F.lit(1)).alias("n"), F.sum("id_new").alias("chk")
     ).collect()[0]
-    cands = cross_batch_candidates(
-        dedup_signatures(new, n_perm=4), prior_sigs, n_perm=4, band_size=2
-    )
-    near = cross_batch_verified_pairs(new, prior, cands, threshold=0.6).join(
-        exact.select("id_new"), "id_new", "left_anti"
+    cands = band_pairs(dedup_signatures(new, n_perm=4), prior_sigs, n_perm=4, band_size=2)
+    near = verify_pairs(cands, new, prior, threshold=0.6).join(
+        exact.select(F.col("id_new").alias("id_a")), "id_a", "left_anti"
     )
     nr = near.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("id_new") + F.col("id_prior")).alias("chk"),
+        F.sum(F.col("id_a") + F.col("id_b")).alias("chk"),
     ).collect()[0]
     exact.unpersist()
     return {"n_exact": ex["n"], "exact_chk": ex["chk"],

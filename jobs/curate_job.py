@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Corpus curation as one resumable spark-submit job: near-dup dedup ->
-dedup groups -> leakage-safe split (-> optional PII redaction) ->
-sequence packing. The production shape of tests/test_curation_pipeline.py
-and the fifth scaling axis (bench_scaling.py curation, 0.96 N-vs-4N).
+dedup groups -> leakage-safe split -> sequence packing, all over the
+SHIPPED text (PII-redacted first when --redact-pii). The production shape
+of tests/test_curation_pipeline.py, and the job the curation scaling axis
+runs (bench_scaling.py curation).
 
     spark-submit --py-files /tmp/schema_inference_spark.zip \
         jobs/curate_job.py \
@@ -24,6 +25,14 @@ Outputs under --output (each stage is a parquet table + _SUCCESS marker):
                the persisted table a LATER batch dedups --against
   packed/      (id, n_tokens, bin_id, truncated) token-budget bins
   metrics.json per-stage row counts + wall seconds
+
+One signature pass: MinHash signatures of the shipped text are computed
+once per run (operators/dedup.py dedup_signatures, materialized with
+localCheckpoint) and read three times — by the cross-batch band join, by
+the within-batch band join (operators/dedup.py band_pairs, then
+verify_pairs) and by the signatures/ stage. Under --redact-pii every
+comparison therefore sees redacted text: two docs that differ only in
+their PII are near-dups.
 
 Cross-snapshot incremental dedup (r5, VERDICT r4 #1): production crawls
 are rolling, so --against <prior output> first drops new docs that
@@ -63,6 +72,7 @@ Exit 0 on success; 1 if the input has no rows.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
@@ -164,13 +174,11 @@ def main(argv: list[str] | None = None) -> int:
 
     from schema_inference_spark.functions import text as TX
     from schema_inference_spark.operators.dedup import (
-        cross_batch_candidates,
+        band_pairs,
         cross_batch_exact_dups,
-        cross_batch_verified_pairs,
         dedup_signatures,
         duplicate_components,
-        jaccard_verified_pairs,
-        lsh_candidate_pairs,
+        verify_pairs,
     )
     from schema_inference_spark.operators.packing import pack_documents
     from schema_inference_spark.operators.sampling import leakage_safe_split
@@ -219,22 +227,32 @@ def main(argv: list[str] | None = None) -> int:
         }
         return back
 
+    # the text as it ships: every dedup comparison, the persisted
+    # signatures and the corpus see it, so a dup of a PII-bearing doc
+    # compares redaction marker to redaction marker (the prior signatures a
+    # later batch reads --against were built on this text too)
+    shipped = docs
+    if args.redact_pii:
+        from schema_inference_spark.functions.pii import redact_expr
+
+        shipped = docs.withColumn(text_col, redact_expr(F.col(text_col)))
+
+    @functools.cache
+    def signatures():
+        # the run's one MinHash pass, materialized once (localCheckpoint:
+        # no CacheManager entry) for its three readers — the cross-batch
+        # band join, the within-batch band join and the signatures/ stage;
+        # computed on first use, so a fully resumed run never pays it
+        return dedup_signatures(
+            shipped, id_col, text_col, n_perm=args.n_perm
+        ).localCheckpoint()
+
     # 0. (--against) cross-snapshot dedup FIRST: docs duplicating the prior
     # curated corpus never enter the within-batch pipeline
-    docs_in, n_cross_dropped = docs, 0
+    batch, n_cross_dropped, drop_new = shipped, 0, None
     if args.against:
         prior_sigs = spark.read.parquet(prior_sigs_path)
         prior_corpus = spark.read.parquet(prior_corpus_path)
-        # compare like-for-like: the prior signatures were built on the
-        # SHIPPED (post-redaction) corpus text, so when this run redacts,
-        # the new batch must be hashed/verified on its text as it WOULD
-        # ship — otherwise an exact dup of a PII-bearing doc never matches
-        # (raw email vs '<EMAIL>' marker)
-        cmp_docs = docs
-        if args.redact_pii:
-            from schema_inference_spark.functions.pii import redact_expr
-
-            cmp_docs = docs.withColumn(text_col, redact_expr(F.col(text_col)))
 
         def build_cross_batch():
             # prior_docs verifies each 60-bit hash match by comparing the
@@ -242,20 +260,22 @@ def main(argv: list[str] | None = None) -> int:
             # at 10^12-doc scale cannot falsely drop a unique doc; it also
             # recovers id_prior in the same join
             exact = cross_batch_exact_dups(
-                cmp_docs, prior_sigs, id_col, text_col, prior_docs=prior_corpus
+                shipped, prior_sigs, id_col, text_col, prior_docs=prior_corpus
             ).select(
                 "id_new", "id_prior",
                 F.lit(1.0).alias("jaccard"), F.lit("exact").alias("kind"),
             )
-            cands = cross_batch_candidates(
-                dedup_signatures(cmp_docs, id_col, text_col, n_perm=args.n_perm),
-                prior_sigs, id_col,
+            cands = band_pairs(
+                signatures(), prior_sigs, id_col,
                 n_perm=args.n_perm, band_size=args.band_size,
             )
             near = (
-                cross_batch_verified_pairs(
-                    cmp_docs, prior_corpus, cands, id_col, text_col,
+                verify_pairs(
+                    cands, shipped, prior_corpus, id_col, text_col,
                     threshold=args.threshold,
+                )
+                .select(
+                    F.col("id_a").alias("id_new"), F.col("id_b").alias("id_prior"), "jaccard"
                 )
                 # an exact dup also band-collides and verifies at 1.0 —
                 # report it once, under the stronger kind
@@ -267,24 +287,18 @@ def main(argv: list[str] | None = None) -> int:
         cross = stage("cross_batch", build_cross_batch)
         drop_new = cross.select(F.col("id_new").alias(id_col)).distinct()
         n_cross_dropped = drop_new.count()
-        docs = docs.join(drop_new, id_col, "left_anti")
+        batch = shipped.join(drop_new, id_col, "left_anti")
 
-    # 1. near-dup pairs: LSH candidates, exact-Jaccard verified. The
-    # candidate frame is rebuilt from the pairs table on resume via the
-    # pair endpoints (anything already verified is what split routing
-    # needs — see leakage note below).
-    pairs = stage(
-        "pairs",
-        lambda: jaccard_verified_pairs(
-            docs,
-            lsh_candidate_pairs(
-                docs, id_col, text_col, n_perm=args.n_perm, band_size=args.band_size
-            ),
-            id_col,
-            text_col,
-            threshold=args.threshold,
-        ),
-    )
+    # 1. near-dup pairs: LSH candidates of the docs that survived step 0,
+    # exact-Jaccard verified
+    def build_pairs():
+        sigs = signatures()
+        if drop_new is not None:
+            sigs = sigs.join(drop_new, id_col, "left_anti")
+        cands = band_pairs(sigs, None, id_col, n_perm=args.n_perm, band_size=args.band_size)
+        return verify_pairs(cands, batch, None, id_col, text_col, threshold=args.threshold)
+
+    pairs = stage("pairs", build_pairs)
 
     # 2. dedup groups; representative = smallest id in the component
     comps = stage("components", lambda: duplicate_components(pairs, id_col))
@@ -294,13 +308,8 @@ def main(argv: list[str] | None = None) -> int:
     # candidates that failed verification are not near-dups and may split.
     def build_corpus():
         drop = comps.where(F.col(id_col) != F.col("component")).select(id_col)
-        kept = docs.join(drop, id_col, "left_anti")
-        split_docs = leakage_safe_split(kept, pairs, id_col)
-        if args.redact_pii:
-            from schema_inference_spark.functions.pii import redact_expr
-
-            split_docs = split_docs.withColumn(text_col, redact_expr(F.col(text_col)))
-        return split_docs.withColumn(
+        kept = batch.join(drop, id_col, "left_anti")
+        return leakage_safe_split(kept, pairs, id_col).withColumn(
             "n_tokens", token_count(F.col(text_col)).cast("long")
         )
 
@@ -310,9 +319,7 @@ def main(argv: list[str] | None = None) -> int:
     # post-redaction text) — the table a later batch dedups --against
     stage(
         "signatures",
-        lambda: dedup_signatures(
-            corpus.select(id_col, text_col), id_col, text_col, n_perm=args.n_perm
-        ),
+        lambda: signatures().join(corpus.select(id_col), id_col, "left_semi"),
     )
 
     # 4. pack the train split into token-budget bins
@@ -331,7 +338,7 @@ def main(argv: list[str] | None = None) -> int:
         r["split"]: r["n"]
         for r in corpus.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    n_input = docs_in.count()
+    n_input = docs.count()
     summary = {
         "input_docs": n_input,
         "cross_batch_dropped": n_cross_dropped,

@@ -4,10 +4,12 @@ Four families, each chosen for a different scale/recall tradeoff:
 
 * **exact** — md5-of-content groupBy. One shuffle of (hash, id); partial
   agg makes hot content cheap.
-* **MinHash + LSH** — per-row signature (pure array exprs over shingles),
-  banded bucketing, candidate pairs from bucket self-joins, optional exact
-  Jaccard verification of candidates. The standard near-dup pipeline at
-  web scale: O(n) signature pass + bucket-local joins instead of O(n^2).
+* **MinHash + LSH** — per-row signature (:func:`dedup_signatures`), banded
+  bucketing and one bucket join (:func:`band_pairs`: a self-join within a
+  batch, or new batch x persisted prior signatures across batches), then
+  exact Jaccard verification of the candidates (:func:`verify_pairs`). The
+  standard near-dup pipeline at web scale: O(n) signature pass +
+  bucket-local joins instead of O(n^2).
 * **SimHash** — per-token hashed bit votes aggregated into a fingerprint;
   near-pairs by Hamming distance within blocking buckets.
 * **n-gram Jaccard** — the exact verifier used on LSH candidates (never run
@@ -80,11 +82,24 @@ def _minhash_aggregated(
     return base.join(sigs, id_col, "left")
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n_perm: int = 8, k: int = 3
+def dedup_signatures(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
+    n_perm: int = 8, k: int = 3,
 ) -> DataFrame:
+    """(id, content_hash, mh0..mh{n_perm-1}) — the one signature function.
+    Its minhashes feed :func:`band_pairs`, within a batch and across
+    batches, and as a table it is the persisted signatures a curated corpus
+    carries so future batches can dedup against it. One shingle explode +
+    one restore join (the content hash rides the same join that restores
+    sub-k-word docs, and a reader that never selects it prunes it);
+    sub-k-word docs get NULL minhashes but still carry their content_hash
+    for the exact path."""
+    base = df.select(
+        F.col(id_col), md5_long_expr(F.col(text_col)).alias("content_hash")
+    )
     return _minhash_aggregated(
-        df, id_col, text_col, [(seed, f"mh{seed}") for seed in range(n_perm)], k
+        df, id_col, text_col, [(s, f"mh{s}") for s in range(n_perm)], k,
+        restore_to=base,
     )
 
 
@@ -92,7 +107,7 @@ def document_fingerprints(
     df: DataFrame, id_col: str, text_col: str, k: int = 4, seed: int = 997
 ) -> DataFrame:
     """(id, fingerprint): the 1-permutation MinHash content fingerprint on
-    the same explode+codegen aggregation path as minhash_signatures. NULL
+    the same explode+codegen aggregation path as dedup_signatures. NULL
     for docs with fewer than k words."""
     return _minhash_aggregated(df, id_col, text_col, [(seed, "fingerprint")], k)
 
@@ -105,26 +120,10 @@ def lsh_candidate_pairs(
     band_size: int = 2,
     k: int = 3,
 ) -> DataFrame:
-    """Candidate near-dup pairs (id_a < id_b) from banded MinHash buckets.
-
-    One signature projection, one explode to (band_id, band_sig, id), one
-    self-join per bucket. Bucket sizes are bounded in practice; a hot
-    bucket (e.g. boilerplate docs) is exactly a skew join — AQE splits it.
-    """
-    sig = minhash_signatures(df, id_col, text_col, n_perm, k)
-    buckets = _band_buckets(sig, id_col, n_perm, band_size)
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    """Candidate near-dup pairs (id_a < id_b) of one batch: its signatures'
+    band buckets self-joined."""
+    sigs = dedup_signatures(df, id_col, text_col, n_perm, k)
+    return band_pairs(sigs, id_col=id_col, n_perm=n_perm, band_size=band_size)
 
 
 def _band_buckets(
@@ -151,42 +150,112 @@ def _band_buckets(
     )
 
 
-def jaccard_verified_pairs(
-    df: DataFrame,
-    candidates: DataFrame,
-    id_col: str,
-    text_col: str,
+def bucket_join(
+    left: DataFrame, right: DataFrame | None, id_col: str, keys: tuple[str, ...]
+) -> DataFrame:
+    """DISTINCT (id_a, id_b) pairs of rows that agree on every ``keys``
+    column — the one banded-LSH join body (MinHash bands here, SRP bands in
+    operators/similarity.py). ``right=None`` self-joins ``left`` with
+    id_a < id_b; two tables pair every match, with no id ordering, so
+    overlapping id spaces across batches are safe. Buckets are bounded in
+    practice; a hot bucket (boilerplate docs) is a skew join AQE splits."""
+    a = left.alias("a")
+    b = (left if right is None else right).alias("b")
+    cond = F.col(f"a.{keys[0]}") == F.col(f"b.{keys[0]}")
+    for key in keys[1:]:
+        cond = cond & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+    if right is None:
+        cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return (
+        a.join(b, cond)
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
+
+
+def band_pairs(
+    left_sigs: DataFrame,
+    right_sigs: DataFrame | None = None,
+    id_col: str = "doc_id",
+    n_perm: int = 8,
+    band_size: int = 2,
+) -> DataFrame:
+    """(id_a, id_b) candidate pairs sharing at least one MinHash band of
+    two mh0..mh{n_perm-1} signature frames. ``right_sigs=None`` pairs
+    ``left_sigs`` with itself (id_a < id_b: within-batch dedup); otherwise
+    id_a comes from ``left_sigs`` and id_b from ``right_sigs`` (a new batch
+    against a persisted prior signature table: never new x new, which is
+    the within-batch job, nor prior x prior, which is already deduped)."""
+    right = None
+    if right_sigs is not None:
+        right = _band_buckets(right_sigs, id_col, n_perm, band_size)
+    return bucket_join(
+        _band_buckets(left_sigs, id_col, n_perm, band_size), right, id_col,
+        ("band_id", "band_sig"),
+    )
+
+
+def verify_pairs(
+    cands: DataFrame,
+    left_docs: DataFrame,
+    right_docs: DataFrame | None = None,
+    id_col: str = "doc_id",
+    text_col: str = "text",
     k: int = 3,
     threshold: float = 0.6,
 ) -> DataFrame:
-    """Exact k-shingle Jaccard for candidate pairs; keeps pairs >= threshold.
+    """Exact k-shingle Jaccard of candidate (id_a, id_b) pairs; keeps
+    (id_a, id_b, jaccard) >= threshold.
 
-    Shingle sets are exploded once and joined twice (ids are pre-filtered to
-    candidate members, so the explode touches only candidate docs)."""
+    ``right_docs=None``: both ids index ``left_docs``, and one shingle
+    frame over the union of candidate members serves both sides. With two
+    tables id_a indexes ``left_docs`` and id_b ``right_docs``, each with
+    its own shingle frame, so an id present in both batches cannot mix
+    the two texts. Either way a semi-join on the member ids keeps the
+    explode to candidate docs.
+
+    The candidates are materialized once (``localCheckpoint``; no
+    CacheManager entry) by the job that counts them. The member set is
+    broadcast only when its upper bound (two ids per candidate) fits under
+    ``spark.sql.autoBroadcastJoinThreshold``; otherwise the semi-join
+    shuffles, so a 10^8-member set never lands on the driver."""
     from schema_inference_spark.functions.hashing import exploded_shingles
 
-    member_ids = (
-        candidates.select(F.col("id_a").alias(id_col))
-        .unionByName(candidates.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    shingles = exploded_shingles(
-        df.join(F.broadcast(member_ids), id_col, "left_semi"), id_col, F.col(text_col), k
-    ).distinct()
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    s1 = shingles.withColumnRenamed(id_col, "id_a")
-    s2 = shingles.withColumnRenamed(id_col, "id_b")
+    # lazy: the count below is the one job that materializes the checkpoint
+    cands = cands.select("id_a", "id_b").localCheckpoint(eager=False)
+    id_bytes = cands._jdf.schema().apply("id_a").dataType().defaultSize()
+    limit = cands.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    broadcast = 0 <= 2 * cands.count() * (8 + id_bytes) <= limit
+
+    def shingles(docs: DataFrame, *sides: str) -> DataFrame:
+        members = cands.select(F.col(sides[0]).alias(id_col))
+        for side in sides[1:]:
+            members = members.unionByName(cands.select(F.col(side).alias(id_col)))
+        members = members.distinct()
+        return exploded_shingles(
+            docs.join(F.broadcast(members) if broadcast else members, id_col, "left_semi"),
+            id_col, F.col(text_col), k,
+        ).distinct()
+
+    if right_docs is None:
+        s_a = s_b = shingles(left_docs, "id_a", "id_b")
+    else:
+        s_a, s_b = shingles(left_docs, "id_a"), shingles(right_docs, "id_b")
+
+    def sizes(s: DataFrame, side: str) -> DataFrame:
+        return s.groupBy(id_col).agg(F.count(F.lit(1)).alias(f"n_{side}")).withColumnRenamed(
+            id_col, f"id_{side}"
+        )
+
     inter = (
-        candidates.join(s1, "id_a")
-        .join(s2, ["id_b", "shingle"])
+        cands.join(s_a.withColumnRenamed(id_col, "id_a"), "id_a")
+        .join(s_b.withColumnRenamed(id_col, "id_b"), ["id_b", "shingle"])
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    na = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n", "n_a")
-    nb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n", "n_b")
     return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
+        inter.join(sizes(s_a, "a"), "id_a")
+        .join(sizes(s_b, "b"), "id_b")
         .select(
             "id_a",
             "id_b",
@@ -481,24 +550,6 @@ FROM isl GROUP BY {id_col}, g
 # skew splitting, and nothing ever joins prior x prior or new x new.
 
 
-def dedup_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    n_perm: int = 8, k: int = 3,
-) -> DataFrame:
-    """(id, content_hash, mh0..mh{n_perm-1}) — the persisted signature table
-    a curated corpus carries so future batches can dedup against it. One
-    shingle explode + one restore join (the content hash rides the same
-    join that restores sub-k-word docs); sub-k-word docs get NULL minhashes
-    but still carry their content_hash for the exact path."""
-    base = df.select(
-        F.col(id_col), md5_long_expr(F.col(text_col)).alias("content_hash")
-    )
-    return _minhash_aggregated(
-        df, id_col, text_col, [(s, f"mh{s}") for s in range(n_perm)], k,
-        restore_to=base,
-    )
-
-
 def cross_batch_exact_dups(
     new_docs: DataFrame, prior_sigs: DataFrame,
     id_col: str = "doc_id", text_col: str = "text",
@@ -539,75 +590,4 @@ def cross_batch_exact_dups(
         .join(prior_texts, "id_prior")
         .where(F.col("_text_new") == F.col("_text_prior"))
         .select("id_new", "id_prior", "content_hash")
-    )
-
-
-def cross_batch_candidates(
-    new_sigs: DataFrame, prior_sigs: DataFrame,
-    id_col: str = "doc_id", n_perm: int = 8, band_size: int = 2,
-) -> DataFrame:
-    """(id_new, id_prior) near-dup candidates: banded buckets of the NEW
-    batch's signatures equi-joined against the PERSISTED prior signature
-    table. Strictly cross-batch — new x new is within-batch dedup's job and
-    prior x prior is already deduped — so there is no id ordering
-    constraint and overlapping id spaces across batches are safe."""
-    a = _band_buckets(new_sigs, id_col, n_perm, band_size).withColumnRenamed(
-        id_col, "id_new"
-    )
-    b = _band_buckets(prior_sigs, id_col, n_perm, band_size).withColumnRenamed(
-        id_col, "id_prior"
-    )
-    return (
-        a.join(b, ["band_id", "band_sig"]).select("id_new", "id_prior").distinct()
-    )
-
-
-def cross_batch_verified_pairs(
-    new_docs: DataFrame,
-    prior_docs: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    threshold: float = 0.6,
-) -> DataFrame:
-    """Exact k-shingle Jaccard over cross-batch candidates; keeps
-    (id_new, id_prior, jaccard) pairs >= threshold. Shingle sets are built
-    PER SIDE (unlike the within-batch verifier, whose single shingle frame
-    would mix texts if an id appeared in both batches), and each side's
-    explode touches only candidate members via a semi-join."""
-    from schema_inference_spark.functions.hashing import exploded_shingles
-
-    def side_shingles(docs: DataFrame, cand_col: str, out_id: str) -> DataFrame:
-        members = candidates.select(F.col(cand_col).alias(id_col)).distinct()
-        return (
-            exploded_shingles(
-                docs.join(F.broadcast(members), id_col, "left_semi"),
-                id_col, F.col(text_col), k,
-            )
-            .distinct()
-            .withColumnRenamed(id_col, out_id)
-        )
-
-    s_new = side_shingles(new_docs, "id_new", "id_new")
-    s_prior = side_shingles(prior_docs, "id_prior", "id_prior")
-    n_new = s_new.groupBy("id_new").agg(F.count(F.lit(1)).alias("n_a"))
-    n_prior = s_prior.groupBy("id_prior").agg(F.count(F.lit(1)).alias("n_b"))
-    inter = (
-        candidates.join(s_new, "id_new")
-        .join(s_prior, ["id_prior", "shingle"])
-        .groupBy("id_new", "id_prior")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        inter.join(n_new, "id_new")
-        .join(n_prior, "id_prior")
-        .select(
-            "id_new",
-            "id_prior",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
     )

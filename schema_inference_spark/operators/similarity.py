@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StructType
 
+from schema_inference_spark.operators.dedup import bucket_join
 from schema_inference_spark.sources.iceberg import read_table, write_table
 
 
@@ -360,7 +361,7 @@ def srp_band_buckets(
 ) -> DataFrame:
     """Exploded banded blocking keys: one row per (input row, band) with
     ``band`` and ``bucket`` columns — the MinHash-banding shape
-    (operators/dedup.py lsh_candidate_pairs) for embeddings. At scale the
+    (operators/dedup.py band_pairs) for embeddings. At scale the
     (band, bucket) pair is the self-join key; each band's join is
     bucket-local and recall comes from the OR across bands."""
     arr = srp_band_buckets_udf(n_planes, n_bands, seed)(F.col(vec_col))
@@ -711,19 +712,7 @@ def embedding_near_dup_pairs(
         slim = srp_band_buckets(
             df.select(id_col, vec_col), vec_col, n_planes, n_bands, seed
         ).select(id_col, "band", "bucket")
-        a, b = slim.alias("a"), slim.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-            )
-            .distinct()
-        )
+        cand = bucket_join(slim, None, id_col, ("band", "bucket"))
         va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
         vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
         return (

@@ -14,9 +14,9 @@ from schema_inference_spark.functions.hashing import (
     simhash_sql,
 )
 from schema_inference_spark.operators.dedup import (
+    dedup_signatures,
     exact_duplicate_groups,
     lsh_candidate_pairs,
-    minhash_signatures,
     simhash_fingerprints,
 )
 from schema_inference_spark.queries import QuerySpec
@@ -113,7 +113,11 @@ FROM documents ORDER BY doc_id
 
 def doc_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_signatures(docs, "doc_id", "text", n_perm=4).orderBy("doc_id")
+    return (
+        dedup_signatures(docs, "doc_id", "text", n_perm=4)
+        .drop("content_hash")
+        .orderBy("doc_id")
+    )
 
 
 MINHASH_SQL = f"""
@@ -204,13 +208,11 @@ ORDER BY id_a, id_b
 def doc_verified_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full near-dup pipeline: MinHash-LSH candidates -> exact k-shingle
     Jaccard verification (threshold 0 keeps all candidates with scores)."""
-    from schema_inference_spark.operators.dedup import jaccard_verified_pairs
+    from schema_inference_spark.operators.dedup import verify_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     cands = lsh_candidate_pairs(docs, "doc_id", "text", n_perm=4, band_size=2)
-    return jaccard_verified_pairs(docs, cands, "doc_id", "text", k=3, threshold=0.0).orderBy(
-        "id_a", "id_b"
-    )
+    return verify_pairs(cands, docs, k=3, threshold=0.0).orderBy("id_a", "id_b")
 
 
 from schema_inference_spark.functions.hashing import shingles_sql  # noqa: E402
@@ -263,23 +265,19 @@ def doc_cross_batch_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-bucket-join against the prior signature table (never new x new or
     prior x prior), candidates verify with exact k-shingle Jaccard built
     PER SIDE."""
-    from schema_inference_spark.operators.dedup import (
-        cross_batch_candidates,
-        cross_batch_verified_pairs,
-        dedup_signatures,
-    )
+    from schema_inference_spark.operators.dedup import band_pairs, verify_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     prior = docs.where(F.col("doc_id") % 2 == 0)
     new = docs.where(F.col("doc_id") % 2 == 1)
-    cands = cross_batch_candidates(
-        dedup_signatures(new, n_perm=4),
-        dedup_signatures(prior, n_perm=4),
-        n_perm=4,
-        band_size=2,
+    cands = band_pairs(
+        dedup_signatures(new, n_perm=4), dedup_signatures(prior, n_perm=4),
+        n_perm=4, band_size=2,
     )
-    return cross_batch_verified_pairs(new, prior, cands, threshold=0.0).orderBy(
-        "id_new", "id_prior"
+    return (
+        verify_pairs(cands, new, prior, threshold=0.0)
+        .select(F.col("id_a").alias("id_new"), F.col("id_b").alias("id_prior"), "jaccard")
+        .orderBy("id_new", "id_prior")
     )
 
 

@@ -140,16 +140,3 @@ def load_table(
             del _LOAD_CACHE[stale]
         _LOAD_CACHE[key] = (spark, df)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """Load tables and (optionally) register them as temp views for SQL."""
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        df = load_table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

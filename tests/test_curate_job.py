@@ -303,3 +303,79 @@ def test_curate_job_against_redacted_prior(spark):
         assert (1003, 3, "exact") in cross
         kept = {r["doc_id"] for r in spark.read.parquet(f"{d}/b/corpus").collect()}
         assert 1003 not in kept
+
+
+def _shingles(text: str, k: int = 3) -> set[str]:
+    words = text.split(" ")
+    return {" ".join(words[i:i + k]) for i in range(len(words) - k + 1)}
+
+
+def _jaccard(a: str, b: str) -> float:
+    sa, sb = _shingles(a), _shingles(b)
+    return len(sa & sb) / len(sa | sb)
+
+
+def test_curate_job_redact_pii_dedups_on_shipped_text(spark):
+    """Under --redact-pii the within-batch pairs are found and verified on
+    the redacted text that ships: two docs that differ only in long PII
+    strings are a near-dup pair, although their raw texts are not."""
+    from schema_inference_spark.functions.pii import redact_expr
+
+    words = [f"word{i}" for i in range(12)]
+
+    def doc(user: str) -> str:
+        tokens = []
+        for i, w in enumerate(words):
+            tokens.append(w)
+            if i % 2:
+                tokens.append(f"{user}.account{i}@mail-{user}.example.org")
+        return " ".join(tokens)
+
+    a, b = doc("alice"), doc("bob")
+    red = spark.createDataFrame([(a,), (b,)], "text string").select(
+        redact_expr(F.col("text")).alias("t")
+    ).collect()
+    red_a, red_b = (r["t"] for r in red)
+    assert _jaccard(a, b) < 0.6 <= _jaccard(red_a, red_b)
+
+    with tempfile.TemporaryDirectory() as d:
+        planted = spark.createDataFrame([(900, a), (901, b)], "doc_id long, text string")
+        _corpus(spark, n=60).unionByName(planted).write.mode("overwrite").parquet(f"{d}/in")
+        assert main([
+            "--input", f"{d}/in", "--output", f"{d}/out", "--redact-pii",
+        ]) == 0
+        pairs = {
+            (r["id_a"], r["id_b"]) for r in spark.read.parquet(f"{d}/out/pairs").collect()
+        }
+        assert (900, 901) in pairs
+
+
+def test_curate_job_computes_signatures_once(spark, monkeypatch):
+    """One MinHash pass per run, with and without --against: the
+    cross-batch join, the within-batch join and the signatures/ stage all
+    read the same materialized signature frame."""
+    from schema_inference_spark.operators import dedup
+
+    calls = []
+    real = dedup._minhash_aggregated
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_minhash_aggregated", counted)
+    with tempfile.TemporaryDirectory() as d:
+        _corpus(spark, n=100).write.mode("overwrite").parquet(f"{d}/in_a")
+        assert main(["--input", f"{d}/in_a", "--output", f"{d}/a"]) == 0
+        assert len(calls) == 1
+
+        # batch B: docs 50..99 repeat A's texts, 100..199 are fresh
+        _corpus(spark, n=200).where("doc_id >= 50").selectExpr(
+            "doc_id + 1000 AS doc_id", "text"
+        ).write.mode("overwrite").parquet(f"{d}/in_b")
+        calls.clear()
+        assert main([
+            "--input", f"{d}/in_b", "--output", f"{d}/b", "--against", f"{d}/a",
+        ]) == 0
+        assert len(calls) == 1
+        assert json.load(open(f"{d}/b/metrics.json"))["cross_batch_dropped"] >= 49

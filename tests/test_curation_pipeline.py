@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 from schema_inference_spark.functions import text as TX
 from schema_inference_spark.operators.dedup import (
     duplicate_components,
-    jaccard_verified_pairs,
     lsh_candidate_pairs,
+    verify_pairs,
 )
 from schema_inference_spark.operators.packing import pack_documents
 from schema_inference_spark.operators.sampling import leakage_safe_split
@@ -33,7 +33,7 @@ def test_full_curation_pipeline(spark, sf_dir):
 
     # 1. near-dup pairs: LSH candidates, exact-Jaccard verified
     cands = lsh_candidate_pairs(docs, "doc_id", "text", n_perm=4, band_size=2)
-    pairs = jaccard_verified_pairs(docs, cands, "doc_id", "text", threshold=0.6)
+    pairs = verify_pairs(cands, docs, None, "doc_id", "text", threshold=0.6)
 
     # 2. components -> one representative (smallest id) per dup group
     comps = duplicate_components(pairs, "doc_id")
@@ -75,7 +75,7 @@ def test_full_curation_pipeline(spark, sf_dir):
     # determinism of the whole pipeline under a different input layout
     docs2 = docs.repartition(11)
     cands2 = lsh_candidate_pairs(docs2, "doc_id", "text", n_perm=4, band_size=2)
-    pairs2 = jaccard_verified_pairs(docs2, cands2, "doc_id", "text", threshold=0.6)
+    pairs2 = verify_pairs(cands2, docs2, None, "doc_id", "text", threshold=0.6)
     comps2 = duplicate_components(pairs2, "doc_id")
     drop2 = comps2.where(F.col("doc_id") != F.col("component")).select("doc_id")
     assert sorted(r["doc_id"] for r in drop.collect()) == sorted(

@@ -11,10 +11,10 @@ from pyspark.sql import functions as F
 
 from schema_inference_spark.operators.dedup import (
     exact_duplicate_groups,
-    jaccard_verified_pairs,
     lsh_candidate_pairs,
     simhash_fingerprints,
     simhash_near_pairs,
+    verify_pairs,
 )
 from schema_inference_spark.operators.similarity import (
     cosine_topk,
@@ -63,7 +63,7 @@ def test_jaccard_verification_scores(spark, doc_df):
     cands = lsh_candidate_pairs(doc_df, "doc_id", "text", n_perm=8, band_size=2)
     verified = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_verified_pairs(doc_df, cands, "doc_id", "text", threshold=0.5).collect()
+        for r in verify_pairs(cands, doc_df, None, "doc_id", "text", threshold=0.5).collect()
     }
     assert verified[("d000", "d900")] == 1.0
     assert 0.5 <= verified[("d001", "d901")] < 1.0
@@ -513,9 +513,8 @@ def test_cross_batch_incremental_dedup(spark):
     the planted cross-batch exact + near dups — never new x new (that is
     within-batch dedup's job) nor prior x prior (already deduped)."""
     from schema_inference_spark.operators.dedup import (
-        cross_batch_candidates,
+        band_pairs,
         cross_batch_exact_dups,
-        cross_batch_verified_pairs,
         dedup_signatures,
     )
 
@@ -546,15 +545,15 @@ def test_cross_batch_incremental_dedup(spark):
     exact = cross_batch_exact_dups(new, prior_sigs).collect()
     assert [r["id_new"] for r in exact] == ["b_exact"]
 
-    cands = cross_batch_candidates(new_sigs, prior_sigs, n_perm=8, band_size=2)
-    got_cands = {(r["id_new"], r["id_prior"]) for r in cands.collect()}
+    cands = band_pairs(new_sigs, prior_sigs, n_perm=8, band_size=2)
+    got_cands = {(r["id_a"], r["id_b"]) for r in cands.collect()}
     assert ("b_exact", "a1") in got_cands and ("b_near", "a1") in got_cands
     # strictly cross-batch: every pair is (new, prior)
     assert all(n.startswith("b_") and p.startswith("a") for n, p in got_cands)
 
     verified = {
-        (r["id_new"], r["id_prior"]): r["jaccard"]
-        for r in cross_batch_verified_pairs(new, prior, cands, threshold=0.6).collect()
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in verify_pairs(cands, new, prior, threshold=0.6).collect()
     }
     assert verified[("b_exact", "a1")] == 1.0
     assert abs(verified[("b_near", "a1")] - round(17 / 19, 6)) < 1e-6
@@ -615,11 +614,9 @@ def test_cross_batch_exact_dups_verifies_hash_collisions(spark):
 
 
 def test_cross_batch_verify_safe_with_overlapping_id_spaces(spark):
-    """The cross-batch verifier builds shingles PER SIDE: an id reused
+    """Two-table verify_pairs builds shingles PER SIDE: an id reused
     across batches with different text must score the TEXTS, not a mixed
-    shingle bag (the within-batch verifier's single-frame shape would)."""
-    from schema_inference_spark.operators.dedup import cross_batch_verified_pairs
-
+    shingle bag (the self mode's single shingle frame would)."""
     prior = spark.createDataFrame(
         [("x", " ".join(f"p{i}" for i in range(10)))], "doc_id string, text string"
     )
@@ -627,8 +624,34 @@ def test_cross_batch_verify_safe_with_overlapping_id_spaces(spark):
         [("x", " ".join([f"p{i}" for i in range(9)] + ["zz"]))],
         "doc_id string, text string",
     )
-    cands = spark.createDataFrame([("x", "x")], "id_new string, id_prior string")
-    got = cross_batch_verified_pairs(new, prior, cands, threshold=0.0).collect()
+    cands = spark.createDataFrame([("x", "x")], "id_a string, id_b string")
+    got = verify_pairs(cands, new, prior, threshold=0.0).collect()
     # 8 shingles/side, only the last differs: jaccard = 7/9 (a mixed shingle
     # bag would score the union against itself and return 1.0)
     assert len(got) == 1 and abs(got[0]["jaccard"] - round(7 / 9, 6)) < 1e-6
+
+
+def test_verify_pairs_member_broadcast_follows_the_threshold(spark, doc_df):
+    """verify_pairs broadcasts the candidate member set only when its
+    measured size fits spark.sql.autoBroadcastJoinThreshold. With the
+    threshold off (-1) no BroadcastExchange is planned (a forced hint
+    would plan one at any size, and at ~10^8 ids OOM the driver), and the
+    shuffle semi-join finds the same pairs."""
+    cands = lsh_candidate_pairs(doc_df, "doc_id", "text", n_perm=8, band_size=2)
+
+    def run():
+        df = verify_pairs(cands, doc_df, None, "doc_id", "text", threshold=0.0)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan, sorted(tuple(r) for r in df.collect())
+
+    plan_small, broadcast_pairs = run()
+    assert "BroadcastExchange" in plan_small
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan_off, shuffled_pairs = run()
+    finally:
+        spark.conf.set(key, before)
+    assert "BroadcastExchange" not in plan_off
+    assert shuffled_pairs == broadcast_pairs and broadcast_pairs

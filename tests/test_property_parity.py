@@ -180,7 +180,7 @@ doc_texts = st.lists(
 @given(doc_texts)
 def test_minhash_simhash_three_way(spark, duck, texts):
     from schema_inference_spark.operators.dedup import (
-        minhash_signatures,
+        dedup_signatures,
         simhash_fingerprints,
     )
 
@@ -189,7 +189,7 @@ def test_minhash_simhash_three_way(spark, duck, texts):
     )
     got_mh = {
         r["doc_id"]: r["mh0"]
-        for r in minhash_signatures(df, "doc_id", "text", n_perm=1).collect()
+        for r in dedup_signatures(df, "doc_id", "text", n_perm=1).collect()
     }
     got_sh = {
         r["doc_id"]: r["simhash"]

@@ -1,13 +1,17 @@
 """Dead-code guard: every top-level ``def``/``class`` in the package and the
 jobs must be reached from non-test code.
 
-A name counts as reached if the code of a non-test source file — a package
-module, ``jobs/``, the bench scripts, ``tools/``, ``perfbench/`` or
-``__spark_entry__.py`` — uses it: as a ``Name``, an ``Attribute``, an
-imported name, or a string constant shaped like an identifier (a registry
-lookup by name). The walk is over each file's syntax tree, so a mention in a
-docstring or comment does not count. It is not a call graph: a use inside
-another unreached definition still counts. No Spark session is needed.
+Reachability is a name-based fixed point over syntax trees. It starts from
+the names used anywhere in the non-package readers — ``jobs/``, the bench
+scripts, ``tools/``, ``perfbench/`` and ``__spark_entry__.py`` — and from
+the package's module-level code (registries, constants, decorators; a
+module-level import alone is not a use). It then follows the body of every
+package definition already reached, until no new name turns up. So a
+helper that only a test-only definition calls is unreached too. A use is a
+``Name``, an ``Attribute``, an imported name, or a string constant shaped
+like an identifier (a registry lookup by name); a mention in a docstring
+or comment does not count. Names, not bindings: a use of ``f`` reaches
+every package definition called ``f``. No Spark session is needed.
 """
 
 from __future__ import annotations
@@ -15,12 +19,14 @@ from __future__ import annotations
 import ast
 import os
 import re
-from collections import Counter
+from collections import Counter, defaultdict
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-DEFINING_ROOTS = ("schema_inference_spark", "jobs")
-READER_ROOTS = DEFINING_ROOTS + ("tools", "perfbench")
+PACKAGE_ROOT = "schema_inference_spark"
+DEFINING_ROOTS = (PACKAGE_ROOT, "jobs")
+READER_ROOTS = ("jobs", "tools", "perfbench")
 READER_FILES = ("bench.py", "bench_scaling.py", "__spark_entry__.py")
+DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 # Names reached only by tests, kept on purpose.
 ALLOWED = {
@@ -45,49 +51,73 @@ def _py_files(root: str):
                 yield os.path.join(dirpath, f)
 
 
-def _reader_files() -> list[str]:
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as fh:
+        return ast.parse(fh.read())
+
+
+def _reader_trees() -> list[ast.Module]:
     files = [f for root in READER_ROOTS for f in _py_files(root)]
-    return files + [os.path.join(REPO, f) for f in READER_FILES]
+    return [_parse(f) for f in files + [os.path.join(REPO, f) for f in READER_FILES]]
 
 
 def _definitions():
     """Yield (name, rel path, def line number) per top-level def/class."""
     for root in DEFINING_ROOTS:
         for path in _py_files(root):
-            with open(path, encoding="utf-8") as fh:
-                src = fh.read()
-            for node in ast.parse(src).body:
-                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            for node in _parse(path).body:
+                if isinstance(node, DEFS):
                     yield node.name, os.path.relpath(path, REPO), node.lineno
 
 
-def used_names(src: str) -> Counter:
-    """Uses of each name in the code of ``src`` (docstrings and comments
-    are not code)."""
+def used_names(node: ast.AST) -> Counter:
+    """Uses of each name in the code under ``node`` (docstrings and
+    comments are not code)."""
     used = Counter()
-    for node in ast.walk(ast.parse(src)):
-        if isinstance(node, ast.Name):
-            used[node.id] += 1
-        elif isinstance(node, ast.Attribute):
-            used[node.attr] += 1
-        elif isinstance(node, ast.alias):
-            used.update(node.name.split("."))
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.Name):
+            used[sub.id] += 1
+        elif isinstance(sub, ast.Attribute):
+            used[sub.attr] += 1
+        elif isinstance(sub, ast.alias):
+            used.update(sub.name.split("."))
         elif (
-            isinstance(node, ast.Constant)
-            and isinstance(node.value, str)
-            and IDENTIFIER.fullmatch(node.value)
+            isinstance(sub, ast.Constant)
+            and isinstance(sub.value, str)
+            and IDENTIFIER.fullmatch(sub.value)
         ):
-            used[node.value] += 1
+            used[sub.value] += 1
     return used
 
 
+def reached(readers: list[ast.Module], package: list[ast.Module]) -> set[str]:
+    """Every name the readers use, closed over the package: module-level
+    code seeds it, and each reached package definition adds its body."""
+    names, bodies = set(), defaultdict(list)
+    for tree in readers:
+        names |= set(used_names(tree))
+    for tree in package:
+        for node in tree.body:
+            if isinstance(node, DEFS):
+                bodies[node.name].append(node)
+                for deco in node.decorator_list:
+                    names |= set(used_names(deco))
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                names |= set(used_names(node))
+    frontier = list(names & bodies.keys())
+    while frontier:
+        for node in bodies[frontier.pop()]:
+            new = set(used_names(node)) - names
+            names |= new
+            frontier += new & bodies.keys()
+    return names
+
+
 def unreached() -> dict[str, str]:
-    """{name: "path:line"} for every top-level def/class no reader uses."""
-    used = Counter()
-    for path in _reader_files():
-        with open(path, encoding="utf-8") as fh:
-            used.update(used_names(fh.read()))
-    return {name: f"{rel}:{lineno}" for name, rel, lineno in _definitions() if not used[name]}
+    """{name: "path:line"} for every top-level def/class no reader reaches."""
+    package = [_parse(f) for f in _py_files(PACKAGE_ROOT)]
+    names = reached(_reader_trees(), package)
+    return {name: f"{rel}:{lineno}" for name, rel, lineno in _definitions() if name not in names}
 
 
 def test_every_definition_is_reached():
@@ -107,7 +137,27 @@ def test_docstring_or_comment_mention_is_not_a_use():
         "    # helper is applied below\n"
         "    return 1\n"
     )
-    assert used_names(src)["helper"] == 0
-    assert used_names("helper(1)")["helper"] == 1
-    assert used_names("from m import helper")["helper"] == 1
-    assert used_names("REGISTRY['helper']")["helper"] == 1
+    assert used_names(ast.parse(src))["helper"] == 0
+    assert used_names(ast.parse("helper(1)"))["helper"] == 1
+    assert used_names(ast.parse("from m import helper"))["helper"] == 1
+    assert used_names(ast.parse("REGISTRY['helper']"))["helper"] == 1
+
+
+def test_helper_of_a_test_only_definition_is_unreached():
+    package = ast.parse(
+        "from m import imported_only\n"
+        "def helper():\n"
+        "    return 1\n"
+        "def test_only():\n"
+        "    return helper()\n"
+        "def served():\n"
+        "    return inner()\n"
+        "def inner():\n"
+        "    return 2\n"
+        "def registered():\n"
+        "    return 3\n"
+        "REGISTRY = {'registered': registered}\n"
+    )
+    names = reached([ast.parse("from pkg import served\nserved()\n")], [package])
+    assert {"served", "inner", "registered"} <= names
+    assert not {"helper", "test_only", "imported_only"} & names
