@@ -10,7 +10,7 @@ Usage: python bench_scaling.py <axis> [n] [n_base] [rounds]
 
   image        the validation suite over n synthetic images
   submit       the same suite launched as spark-submit --py-files
-               jobs/validate_job.py (timed by the job's --bench-rounds)
+               jobs/validate_job.py (timed by its record's validation steps)
   dedup        MinHash-LSH candidate pairs over n docs
   curation     jobs/curate_job.py end to end (dedup -> split -> packing)
   incremental  an n/2-doc new batch deduped against a persisted n-doc prior
@@ -265,9 +265,11 @@ def submit_prepare(spark, n: int) -> None:
 
 def submit(cpus: int, n: int) -> dict:
     """The production job through the real cluster entry point: the engine
-    ships as a --py-files zip, the session comes from --master/--conf, and
-    the job's ``--bench-rounds`` times its validation phase (JVM startup
-    and result writes are launch overhead a long-running job amortizes)."""
+    ships as a --py-files zip, and the session comes from --master/--conf.
+    The width's time is one cold run's validation steps, the summed step
+    seconds of the job's metrics.json (JVM startup and the driver-side
+    set-up are launch overhead a long-running job amortizes); its outputs
+    are the record's verdict summary."""
     from jobs.package_pyfiles import build
 
     corpus = images_cache_path(n)
@@ -278,19 +280,20 @@ def submit(cpus: int, n: int) -> dict:
             os.path.join(REPO, "jobs", "validate_job.py"),
             "--images", f"{corpus}/images", "--captions", f"{corpus}/captions",
             "--snapshot", f"{corpus}/snapshot_profile", "--output", out_dir,
-            "--run-id", f"submit-bench-{cpus}", "--bench-rounds", "2",
+            "--run-id", f"submit-bench-{cpus}",
         ])
-    # the corpus has planted violations, so the job's gate exits 1 by
-    # design: its BENCH line is the measurement, its summary the outputs
-    lines = out.stdout.splitlines()
-    bench = [json.loads(s[len("BENCH "):]) for s in lines if s.startswith("BENCH ")]
-    summary = [s.split(": ", 1)[1] for s in lines if s.startswith(f"run submit-bench-{cpus}: ")]
-    if not (bench and summary):
-        raise SystemExit(f"no BENCH line from spark-submit at local[{cpus}]:\n"
-                         f"{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
-    return {"cpus": cpus, "sec": bench[0]["suite_sec"],
-            "rows_per_sec": bench[0]["images_per_sec"],
-            "outputs": {"n_images": bench[0]["n_images"], "summary": summary[0]}}
+        # the corpus has planted violations, so the job's gate exits 1 by
+        # design: its record is the measurement
+        try:
+            with open(os.path.join(out_dir, "metrics.json"), encoding="utf-8") as f:
+                record = json.load(f)
+        except FileNotFoundError:
+            raise SystemExit(f"no metrics.json from spark-submit at local[{cpus}]:\n"
+                             f"{out.stdout[-2000:]}\n{out.stderr[-2000:]}") from None
+    sec = sum(s["sec"] for s in record.pop("stages").values())
+    record.pop("run_id")
+    return {"cpus": cpus, "sec": round(sec, 3), "rows_per_sec": round(n / sec, 1),
+            "outputs": record}
 
 
 def dedup(spark, n: int) -> dict:

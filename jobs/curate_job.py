@@ -24,7 +24,7 @@ Outputs under --output (each stage is a parquet table + _SUCCESS marker):
   signatures/  (id, content_hash, mh0..mh{n_perm-1}) of the kept corpus —
                the persisted table a LATER batch dedups --against
   packed/      (id, n_tokens, bin_id, truncated) token-budget bins
-  metrics.json per-stage row counts + wall seconds
+  metrics.json summary counts + per-stage rows and wall seconds ('stages')
 
 One signature pass: MinHash signatures of the shipped text are computed
 once per run (operators/dedup.py dedup_signatures, materialized with
@@ -47,20 +47,13 @@ the reference's persisted-derived-state pattern — re-analysis resumes
 from persisted output, not the raw scan (SeqScanAsJson.java:66-77).
 
 Resume: --resume skips any stage whose _SUCCESS marker exists and reads
-its table back — stage-level checkpointing (each stage boundary IS the
-checkpoint, the same materialization the scaling bench showed is also
-the right performance shape). Partition-level lineage/resume belongs to
-the validation suite (jobs/validate_job.py --checkpoint), whose check
-results are independent per partition; curation stages are global
-(components and splits must see all pairs), so the honest resume unit
-here is the stage.
-
-Parameter guard (ADVICE r4): the first run persists every
-semantics-affecting flag to <output>/params.json; --resume REFUSES to
-run (exit 2) if the recorded params differ from the current invocation —
-otherwise a resumed run with, say, --redact-pii added would silently
-reuse the unredacted corpus/ table, exit 0, and overwrite metrics.json
-as if the new flags had applied.
+its table back. Curation stages are global (components and splits must
+see all pairs), so the resume unit is the stage; partition-level resume
+belongs to jobs/validate_job.py --checkpoint. The stages run through the
+package's one step runner (plans/steps.py), whose params guard makes
+--resume REFUSE (exit 2) when the flags recorded in params.json differ:
+a resumed run with, say, --redact-pii added would otherwise reuse the
+unredacted corpus/ table.
 
 --tokenizer names the token counter used for packing budgets (the r5
 swap point — functions/text.py TOKEN_COUNTERS; production registers the
@@ -76,17 +69,6 @@ import functools
 import json
 import os
 import sys
-import time
-
-
-def _done(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-# every stage this job can emit, in pipeline order — a fresh (non-resume)
-# run clears these completion markers before recording its params so a
-# crash mid-run cannot leave an older run's stages looking resumable
-_STAGES = ("cross_batch", "pairs", "components", "corpus", "signatures", "packed")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -106,30 +88,13 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--resume", action="store_true")
     args = ap.parse_args(argv)
 
+    from schema_inference_spark.plans.steps import Steps
+
     # every flag that changes what a stage WOULD compute (not how it runs)
-    params = {
-        k: getattr(args, k)
-        for k in (
-            "input", "id_col", "text_col", "n_perm", "band_size",
-            "threshold", "max_tokens", "pack_groups", "redact_pii",
-            "tokenizer", "against",
-        )
-    }
-    params_path = os.path.join(args.output, "params.json")
-    if args.resume and os.path.exists(params_path):
-        recorded = json.load(open(params_path, encoding="utf-8"))
-        if recorded != params:
-            diff = {
-                k: {"recorded": recorded.get(k), "current": params.get(k)}
-                for k in sorted(set(recorded) | set(params))
-                if recorded.get(k) != params.get(k)
-            }
-            print(
-                "curate: REFUSING to resume — recorded params differ from this "
-                f"invocation (a resumed stage would not reflect them): {json.dumps(diff)}. "
-                "Re-run without --resume (recomputes all stages) or restore the flags."
-            )
-            return 2
+    params = {k: v for k, v in vars(args).items() if k not in ("output", "resume")}
+    run = Steps("curate", args.output, params, args.resume)
+    if run.refused():
+        return 2
 
     # --against validation runs BEFORE anything is written to --output (a
     # refused invocation must leave no params.json behind) and before the
@@ -137,7 +102,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.against:
         prior_sigs_path = os.path.join(args.against, "signatures")
         prior_corpus_path = os.path.join(args.against, "corpus")
-        if not (_done(prior_sigs_path) and _done(prior_corpus_path)):
+        if not all(
+            os.path.exists(os.path.join(p, "_SUCCESS"))
+            for p in (prior_sigs_path, prior_corpus_path)
+        ):
             print(
                 f"curate: --against {args.against} lacks signatures/ or corpus/ "
                 "(it must be a completed output of this job)"
@@ -182,50 +150,18 @@ def main(argv: list[str] | None = None) -> int:
     )
     from schema_inference_spark.operators.packing import pack_documents
     from schema_inference_spark.operators.sampling import leakage_safe_split
-    from schema_inference_spark.sources.iceberg import write_table
     from schema_inference_spark.sources.tables import ensure_utc
 
     spark = SparkSession.builder.getOrCreate()
     ensure_utc(spark)
-    id_col, text_col, out = args.id_col, args.text_col, args.output
+    id_col, text_col = args.id_col, args.text_col
     token_count = TX.get_token_counter(args.tokenizer)[0]  # fail fast on typos
     docs = spark.read.parquet(args.input)
     if docs.limit(1).count() == 0:
         print("curate: input has no rows")
         return 1
 
-    os.makedirs(out, exist_ok=True)
-    if not args.resume:
-        # a fresh run recomputes every stage, so clear stale completion
-        # markers BEFORE recording this invocation's params: otherwise a
-        # fresh run with changed flags that crashes mid-way leaves an older
-        # run's stage tables marked done under a params.json that now
-        # matches, and a later --resume reuses them (the exact stale-stage
-        # hazard the ADVICE r4 guard refuses)
-        for name in _STAGES:
-            marker = os.path.join(out, name, "_SUCCESS")
-            if os.path.exists(marker):
-                os.remove(marker)
-    with open(params_path, "w", encoding="utf-8") as f:
-        json.dump(params, f, indent=2)
-
-    metrics: dict[str, dict] = {}
-
-    def stage(name: str, build):
-        """Run (or resume) one stage; returns the stage's DataFrame."""
-        path = f"{out}/{name}"
-        if args.resume and _done(path):
-            metrics[name] = {"resumed": True}
-            return spark.read.parquet(path)
-        t0 = time.perf_counter()
-        df = build()
-        write_table(df, path, mode="overwrite")
-        back = spark.read.parquet(path)
-        metrics[name] = {
-            "rows": back.count(),
-            "sec": round(time.perf_counter() - t0, 2),
-        }
-        return back
+    run.begin(spark)
 
     # the text as it ships: every dedup comparison, the persisted
     # signatures and the corpus see it, so a dup of a PII-bearing doc
@@ -260,7 +196,8 @@ def main(argv: list[str] | None = None) -> int:
             # at 10^12-doc scale cannot falsely drop a unique doc; it also
             # recovers id_prior in the same join
             exact = cross_batch_exact_dups(
-                shipped, prior_sigs, id_col, text_col, prior_docs=prior_corpus
+                shipped, prior_sigs, id_col, text_col, prior_docs=prior_corpus,
+                new_sigs=signatures(),
             ).select(
                 "id_new", "id_prior",
                 F.lit(1.0).alias("jaccard"), F.lit("exact").alias("kind"),
@@ -284,7 +221,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             return exact.unionByName(near)
 
-        cross = stage("cross_batch", build_cross_batch)
+        cross = run.step("cross_batch", build_cross_batch)
         drop_new = cross.select(F.col("id_new").alias(id_col)).distinct()
         n_cross_dropped = drop_new.count()
         batch = shipped.join(drop_new, id_col, "left_anti")
@@ -298,10 +235,10 @@ def main(argv: list[str] | None = None) -> int:
         cands = band_pairs(sigs, None, id_col, n_perm=args.n_perm, band_size=args.band_size)
         return verify_pairs(cands, batch, None, id_col, text_col, threshold=args.threshold)
 
-    pairs = stage("pairs", build_pairs)
+    pairs = run.step("pairs", build_pairs)
 
     # 2. dedup groups; representative = smallest id in the component
-    comps = stage("components", lambda: duplicate_components(pairs, id_col))
+    comps = run.step("components", lambda: duplicate_components(pairs, id_col))
 
     # 3. deduped, split, training-ready corpus. Split routing uses the
     # VERIFIED pairs (a near-dup of a test doc must never reach train);
@@ -313,17 +250,17 @@ def main(argv: list[str] | None = None) -> int:
             "n_tokens", token_count(F.col(text_col)).cast("long")
         )
 
-    corpus = stage("corpus", build_corpus)
+    corpus = run.step("corpus", build_corpus)
 
     # 3b. persist the signature table of the SHIPPED corpus (post-dedup,
     # post-redaction text) — the table a later batch dedups --against
-    stage(
+    run.step(
         "signatures",
         lambda: signatures().join(corpus.select(id_col), id_col, "left_semi"),
     )
 
     # 4. pack the train split into token-budget bins
-    packed = stage(
+    packed = run.step(
         "packed",
         lambda: pack_documents(
             corpus.where(F.col("split") == "train").select(id_col, "n_tokens"),
@@ -339,18 +276,15 @@ def main(argv: list[str] | None = None) -> int:
         for r in corpus.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     n_input = docs.count()
-    summary = {
-        "input_docs": n_input,
-        "cross_batch_dropped": n_cross_dropped,
-        "near_dup_pairs": pairs.count(),
-        "docs_dropped": n_input - corpus.count(),
-        "splits": splits,
-        "packed_docs": packed.count(),
-        "bins": packed.select("bin_id").distinct().count(),
-        "stages": metrics,
-    }
-    with open(f"{out}/metrics.json", "w", encoding="utf-8") as f:
-        json.dump(summary, f, indent=2)
+    summary = run.finish(
+        input_docs=n_input,
+        cross_batch_dropped=n_cross_dropped,
+        near_dup_pairs=run.rows("pairs", pairs),
+        docs_dropped=n_input - run.rows("corpus", corpus),
+        splits=splits,
+        packed_docs=run.rows("packed", packed),
+        bins=packed.select("bin_id").distinct().count(),
+    )
     print(
         f"curate: {summary['input_docs']} docs -> {summary['docs_dropped']} dropped, "
         f"splits {splits}, {summary['packed_docs']} train docs in "

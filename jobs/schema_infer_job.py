@@ -16,6 +16,11 @@ the read-back infers no schema, fetching max(top-k, merge-n) rows so that
 proto line table is an Arrow local relation: writing ``protos`` runs no
 Python stage.
 
+The two tables are the steps ``distinct`` and ``protos`` of the
+package's one step runner (plans/steps.py); there is no --resume. A row
+that repeats a key keeps its last value (mapKeyDedupPolicy=LAST_WIN, as
+the reference's map fill does) instead of failing the job.
+
     spark-submit --py-files /tmp/schema_inference_spark.zip \
         jobs/schema_infer_job.py \
         --input  <path> --format {sequencefile|text|json-docs|parquet-kv} \
@@ -32,6 +37,7 @@ Outputs under --output:
   top_schemas.json top-k rows as JSON lines
   merged_schema.json  the A8 superset schema
   protos/          one row per .proto file (file_name, content) parquet
+  metrics.json     shape counts + per-step rows and wall seconds ('stages')
 
 Exit 0 on success; 1 if no parseable rows were found; 2 on a usage error
 (argparse), such as a --top-k or --merge-n below 1.
@@ -75,17 +81,17 @@ def main(argv: list[str] | None = None) -> int:
         proto_lines_df,
         with_metadata_message,
     )
-    from schema_inference_spark.operators.shapes import (
-        SHAPE_COUNTS_SCHEMA,
-        shape_counts,
-        top_k_counts,
-    )
+    from schema_inference_spark.operators.shapes import shape_counts, top_k_counts
+    from schema_inference_spark.plans.steps import Steps
     from schema_inference_spark.sources.delimited import parse_delimited
     from schema_inference_spark.sources.sequencefile import read_sequencefile_values
     from schema_inference_spark.sources.tables import ensure_utc
 
     spark = SparkSession.builder.getOrCreate()
     ensure_utc(spark)
+    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    run = Steps("schema-infer", args.output, {k: v for k, v in vars(args).items() if k != "output"})
+    run.begin(spark)
 
     if args.format == "sequencefile":
         rows = read_sequencefile_values(spark, args.input)
@@ -102,16 +108,11 @@ def main(argv: list[str] | None = None) -> int:
             kv_shape(F.col("kv")).alias("schema")
         )
 
-    from schema_inference_spark.sources.iceberg import read_table, write_table
-
     # shape_counts drops the null shapes (reference P4 null-row filter)
-    distinct = f"{args.output}/distinct"
-    write_table(shape_counts(shaped, F.col("schema")), distinct, mode="overwrite")
-
-    top = top_k_counts(
-        read_table(spark, distinct, SHAPE_COUNTS_SCHEMA), max(args.top_k, args.merge_n)
-    ).collect()
+    distinct = run.step("distinct", lambda: shape_counts(shaped, F.col("schema")))
+    top = top_k_counts(distinct, max(args.top_k, args.merge_n)).collect()
     if not top:
+        run.finish(top_k_shapes=0)
         print("no parseable rows found")
         return 1
     with open(f"{args.output}/top_schemas.json", "w", encoding="utf-8") as f:
@@ -127,12 +128,15 @@ def main(argv: list[str] | None = None) -> int:
         json.dump(merged, f, indent=2)
 
     hierarchy = with_metadata_message(proto_hierarchy(merged))
-    protos = concat_proto_files(proto_lines_df(spark, hierarchy))
-    write_table(protos, f"{args.output}/protos", mode="overwrite")
-
-    print(f"schema-infer: {len(top[: args.top_k])} distinct shapes (top-{args.top_k}), "
-          f"merged {len(top[: args.merge_n])}, "
-          f"{len(hierarchy)} proto messages emitted")
+    run.step("protos", lambda: concat_proto_files(proto_lines_df(spark, hierarchy)))
+    summary = run.finish(
+        top_k_shapes=len(top[: args.top_k]),
+        merged_shapes=len(top[: args.merge_n]),
+        proto_messages=len(hierarchy),
+    )
+    print(f"schema-infer: {summary['top_k_shapes']} distinct shapes (top-{args.top_k}), "
+          f"merged {summary['merged_shapes']}, "
+          f"{summary['proto_messages']} proto messages emitted")
     return 0
 
 

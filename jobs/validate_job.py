@@ -12,10 +12,15 @@ Launch (north_rule launch mode):
         [--snapshot <profile parquet>] [--checkpoint <lineage dir>] \
         [--run-id run-1] [--no-pixels]
 
-Writes three result tables under --output (verdicts/, violations/,
+Appends three result tables under --output (violations/, verdicts/,
 profile/), appends per-partition lineage to --checkpoint, and skips
 partitions already recorded there (resume). Exit code 1 if any check
 failed — suitable for orchestrator gating.
+
+The three writes are the steps of the package's one step runner
+(plans/steps.py) and, the suite being lazy, the whole validation phase:
+their summed seconds are the lineage rows' ``wall_sec``, and the run's
+record is <output>/metrics.json.
 """
 
 from __future__ import annotations
@@ -35,11 +40,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--run-id", default=f"run-{int(time.time())}")
     ap.add_argument("--no-pixels", action="store_true")
     ap.add_argument("--psnr-min-db", type=float, default=40.0)
-    # bench instrumentation (the submit axis of bench_scaling.py): after the
-    # production run, re-run the validation phase N more times and print a
-    # one-line `BENCH {json}` with the best suite time. 0 = off (production
-    # default).
-    ap.add_argument("--bench-rounds", type=int, default=0)
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -50,6 +50,7 @@ def main(argv: list[str] | None = None) -> int:
         unvalidated_parts,
         write_checkpoint,
     )
+    from schema_inference_spark.plans.steps import Steps
     from schema_inference_spark.plans.validation import ValidationConfig, run_validation
 
     # under spark-submit the session is provided/configured by the launcher
@@ -87,63 +88,22 @@ def main(argv: list[str] | None = None) -> int:
     # Append, tagged by run_id: a resumed run carries only the remaining
     # partitions, so overwriting would destroy the prior runs' tables
     # (ADVICE r1). Consumers read the union and can filter by run_id.
-    from schema_inference_spark.sources.iceberg import write_table
-
-    for name, df in (
-        ("violations", res.violations),
-        ("verdicts", res.verdicts),
-        ("profile", res.profile),
-    ):
-        tagged = df.withColumn("run_id", F.lit(args.run_id))
+    run = Steps("validate", args.output, {k: v for k, v in vars(args).items() if k != "output"})
+    run.begin(spark)
+    for name in ("violations", "verdicts", "profile"):
+        tagged = getattr(res, name).withColumn("run_id", F.lit(args.run_id))
         # partition-pruned reads for per-partition consumers/re-runs
         # (Iceberg: the results table's partition spec; parquet: partitionBy)
-        part = ("part",) if "part" in df.columns else None
-        write_table(tagged, f"{args.output}/{name}", mode="append", partition_by=part)
+        part = ("part",) if "part" in tagged.columns else None
+        run.step(name, lambda: tagged, mode="append", partition_by=part)
     if args.checkpoint:
-        write_checkpoint(res.verdicts, args.checkpoint, args.run_id)
+        wall_sec = round(sum(s["sec"] for s in run.stages.values()), 2)
+        write_checkpoint(res.verdicts, args.checkpoint, args.run_id, wall_sec=wall_sec)
 
-    if args.bench_rounds > 0:
-        # The production run above was the warmup (codegen JIT + Python
-        # worker pool); these rounds time the steady-state validation phase
-        # only — JVM/session startup and result writes are launch overhead a
-        # long-running cluster job amortizes, not engine throughput.
-        import json
-
-        n_images = images.count()
-        best = float("inf")
-        for _ in range(args.bench_rounds):
-            # drop ALL cached frames first (the production run above and any
-            # previous round persisted violations+profile): a round rebuilds
-            # identical plans, and Spark's CacheManager would serve them from
-            # cache — timing cache reads, not the engine (observed: 83k
-            # "img/s" on one core, 30x the real single-core rate)
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            bench_res = run_validation(
-                spark,
-                images,
-                captions,
-                config,
-                snapshot_profile=snapshot_profile,
-                materialize=True,
-            )
-            bench_res.violations.count()
-            bench_res.verdicts.count()
-            best = min(best, time.perf_counter() - t0)
-        print(
-            "BENCH "
-            + json.dumps(
-                {
-                    "cpus": spark.sparkContext.defaultParallelism,
-                    "n_images": n_images,
-                    "suite_sec": round(best, 3),
-                    "images_per_sec": round(n_images / best, 1),
-                }
-            )
-        )
-
+    n = run.stages["verdicts"]["rows"]
     failed = res.verdicts.where(~res.verdicts.passed).count()
-    n = res.verdicts.count()
+    run.finish(run_id=args.run_id, verdicts=n, failed_checks=failed,
+               schema_problems=res.schema_problems)
     print(f"run {args.run_id}: {n} verdicts, {failed} failed checks; "
           f"schema problems: {res.schema_problems or 'none'}")
     res.violations.unpersist()

@@ -554,6 +554,7 @@ def cross_batch_exact_dups(
     new_docs: DataFrame, prior_sigs: DataFrame,
     id_col: str = "doc_id", text_col: str = "text",
     prior_docs: DataFrame | None = None,
+    new_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """(id_new, id_prior, content_hash): new-batch docs whose exact content
     already exists in the prior corpus — ONE inner join of md5-derived
@@ -568,11 +569,16 @@ def cross_batch_exact_dups(
     joined back to either text column, so at scale the verification frame
     is collisions + true dups, never the corpus. Without prior_docs the
     prior text is never read and results are hash-exact only (fine for
-    analytics; not for an irreversible drop path)."""
-    hashed = new_docs.select(
-        F.col(id_col).alias("id_new"),
-        md5_long_expr(F.col(text_col)).alias("content_hash"),
-    )
+    analytics; not for an irreversible drop path).
+
+    ``new_sigs`` is the new batch's :func:`dedup_signatures` frame, when
+    the caller already has one: its ``content_hash`` is used, so the new
+    text is not hashed again."""
+    if new_sigs is None:
+        new_sigs = new_docs.select(
+            F.col(id_col), md5_long_expr(F.col(text_col)).alias("content_hash")
+        )
+    hashed = new_sigs.select(F.col(id_col).alias("id_new"), "content_hash")
     matched = hashed.join(
         prior_sigs.select("content_hash", F.col(id_col).alias("id_prior")),
         "content_hash",

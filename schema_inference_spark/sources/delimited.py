@@ -38,7 +38,13 @@ def parse_delimited(df: DataFrame, col: str = "value", drop_empty: bool = True) 
     ``drop_empty`` drops null/empty/'null' VALUES from the map (production
     semantics, JsonUtils.checkAndProcessIfJson:93-105). Pass False to keep
     them — the reference's schema-tree fixture (src/test/resources/json/
-    12.json) types empty values as 'null' instead of dropping them."""
+    12.json) types empty values as 'null' instead of dropping them.
+
+    A payload that repeats a key follows the session's
+    ``spark.sql.mapKeyDedupPolicy``. Spark's default, EXCEPTION, fails the
+    whole query with ``[DUPLICATED_MAP_KEY]`` on that one row.
+    jobs/schema_infer_job.py pins LAST_WIN, the reference's rule: its
+    splitFColumnIntoMap fills a map pair by pair, so the last value wins."""
     fields = F.split(F.col(col), FIELD_SEP)
     parsed = df.select(
         F.element_at(fields, 1).alias("ts"),

@@ -25,6 +25,7 @@ Remaining behavioral delta at the storage layer, and where it lands:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -35,10 +36,11 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def read_table(spark: SparkSession, identifier: str, schema: str) -> DataFrame:
+def read_table(spark: SparkSession, identifier: str, schema: str | StructType) -> DataFrame:
     """identifier: an Iceberg table name (catalog.db.tbl) or a parquet path.
 
-    ``schema`` is the table's declared DDL — the one its writer produces.
+    ``schema`` is the table's declared DDL — the one its writer produces —
+    or the schema of the frame that wrote it.
     The parquet read uses it instead of inferring the schema from the
     files, which would cost a Spark job; a declared column the files lack
     reads back as nulls, with no error, so never retype a DDL here. An

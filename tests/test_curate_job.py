@@ -353,17 +353,24 @@ def test_curate_job_redact_pii_dedups_on_shipped_text(spark):
 def test_curate_job_computes_signatures_once(spark, monkeypatch):
     """One MinHash pass per run, with and without --against: the
     cross-batch join, the within-batch join and the signatures/ stage all
-    read the same materialized signature frame."""
+    read the same materialized signature frame. The new batch's text is
+    md5-hashed once per run too: the cross-batch exact join takes its
+    content hashes from that frame instead of hashing the text again."""
     from schema_inference_spark.operators import dedup
 
-    calls = []
-    real = dedup._minhash_aggregated
+    calls, md5s = [], []
+    real, real_md5 = dedup._minhash_aggregated, dedup.md5_long_expr
 
     def counted(*args, **kwargs):
         calls.append(1)
         return real(*args, **kwargs)
 
+    def counted_md5(*args, **kwargs):
+        md5s.append(1)
+        return real_md5(*args, **kwargs)
+
     monkeypatch.setattr(dedup, "_minhash_aggregated", counted)
+    monkeypatch.setattr(dedup, "md5_long_expr", counted_md5)
     with tempfile.TemporaryDirectory() as d:
         _corpus(spark, n=100).write.mode("overwrite").parquet(f"{d}/in_a")
         assert main(["--input", f"{d}/in_a", "--output", f"{d}/a"]) == 0
@@ -374,8 +381,37 @@ def test_curate_job_computes_signatures_once(spark, monkeypatch):
             "doc_id + 1000 AS doc_id", "text"
         ).write.mode("overwrite").parquet(f"{d}/in_b")
         calls.clear()
+        md5s.clear()
         assert main([
             "--input", f"{d}/in_b", "--output", f"{d}/b", "--against", f"{d}/a",
         ]) == 0
         assert len(calls) == 1
+        assert len(md5s) == 1
         assert json.load(open(f"{d}/b/metrics.json"))["cross_batch_dropped"] >= 49
+
+
+def test_curate_job_fresh_run_job_count(spark):
+    """A fresh run on the test corpus starts 73 Spark jobs (94 before the
+    step runner): each stage's rows come from an observation on its own
+    write, and its table is read back by the written frame's schema, so no
+    stage pays a schema-inference job or a count job after its write."""
+    import uuid
+
+    with tempfile.TemporaryDirectory() as d:
+        _corpus(spark).write.mode("overwrite").parquet(f"{d}/in")
+        sc = spark.sparkContext
+        group = f"curate-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            assert main([
+                "--input", f"{d}/in", "--output", f"{d}/out",
+                "--max-tokens", "256", "--pack-groups", "4",
+            ]) == 0
+        finally:
+            sc._jsc.clearJobGroup()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        stages = json.load(open(f"{d}/out/metrics.json"))["stages"]
+    assert n_jobs == 73
+    assert list(stages) == ["pairs", "components", "corpus", "signatures", "packed"]
+    assert all(set(s) == {"rows", "sec"} for s in stages.values())
+    assert stages["corpus"]["rows"] == stages["signatures"]["rows"] == 393

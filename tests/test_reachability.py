@@ -5,8 +5,9 @@ Reachability is a name-based fixed point over syntax trees. It starts from
 the names used anywhere in the non-package readers — ``jobs/``, the bench
 scripts, ``tools/``, ``perfbench/`` and ``__spark_entry__.py`` — and from
 the package's module-level code (registries, constants, decorators; a
-module-level import alone is not a use). It then follows the body of every
-package definition already reached, until no new name turns up. So a
+module-level import alone is not a use, and neither is an ``__all__``
+entry, which exports a name but calls nothing). It then follows the body
+of every package definition already reached, until no new name turns up. So a
 helper that only a test-only definition calls is unreached too. A use is a
 ``Name``, an ``Attribute``, an imported name, or a string constant shaped
 like an identifier (a registry lookup by name); a mention in a docstring
@@ -38,6 +39,8 @@ ALLOWED = {
     "partkey_cardinality_hll": "queries/ function a test exercises directly (HLL accuracy)",
     "price_quantile_sketch": "queries/ function a test exercises directly (quantile sketch)",
     "infer_json_type_expr": "Catalyst formulation the Python shape lattice is tested against",
+    "make_shape_udf": "recursive JSON-document shape UDF the flat shape path is tested against",
+    "canonical_shape_string": "serializer of make_shape_udf, the recursive reference formulation",
 }
 
 IDENTIFIER = re.compile(r"[A-Za-z_]\w*")
@@ -90,6 +93,12 @@ def used_names(node: ast.AST) -> Counter:
     return used
 
 
+def _is_export_list(node: ast.stmt) -> bool:
+    """``__all__ = [...]`` or ``__all__ += [...]``."""
+    targets = getattr(node, "targets", None) or [getattr(node, "target", None)]
+    return any(isinstance(t, ast.Name) and t.id == "__all__" for t in targets)
+
+
 def reached(readers: list[ast.Module], package: list[ast.Module]) -> set[str]:
     """Every name the readers use, closed over the package: module-level
     code seeds it, and each reached package definition adds its body."""
@@ -102,7 +111,7 @@ def reached(readers: list[ast.Module], package: list[ast.Module]) -> set[str]:
                 bodies[node.name].append(node)
                 for deco in node.decorator_list:
                     names |= set(used_names(deco))
-            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)) and not _is_export_list(node):
                 names |= set(used_names(node))
     frontier = list(names & bodies.keys())
     while frontier:
@@ -156,8 +165,13 @@ def test_helper_of_a_test_only_definition_is_unreached():
         "    return 2\n"
         "def registered():\n"
         "    return 3\n"
+        "def exported_only():\n"
+        "    return 4\n"
         "REGISTRY = {'registered': registered}\n"
+        "__all__ = ['served', 'exported_only']\n"
+        "__all__ += ['exported_only']\n"
     )
     names = reached([ast.parse("from pkg import served\nserved()\n")], [package])
     assert {"served", "inner", "registered"} <= names
-    assert not {"helper", "test_only", "imported_only"} & names
+    assert not {"helper", "test_only", "imported_only", "exported_only"} & names
+

@@ -137,6 +137,32 @@ def test_parquet_kv_end_to_end(spark, planted_kv):
         "w": {"type": "boolean"},
     }}
 
+    # the run's record names both steps, each with the rows its write
+    # produced; params.json holds the flags
+    record = json.load(open(f"{d}/out/metrics.json"))
+    assert list(record["stages"]) == ["distinct", "protos"]
+    assert record["stages"]["distinct"]["rows"] == len(distinct)
+    assert record["stages"]["protos"]["rows"] == spark.read.parquet(f"{d}/out/protos").count()
+    assert (record["top_k_shapes"], record["merged_shapes"]) == (4, 4)
+    assert json.load(open(f"{d}/out/params.json")) == {
+        "input": f"{d}/in", "format": "parquet-kv", "top_k": 20, "merge_n": 10,
+    }
+
+
+def test_repeated_key_keeps_last_value(spark, tmp_path):
+    """A row that repeats a key keeps the key's last value, as the
+    reference's map fill does; one such row must not fail the job."""
+    rows = [_kv_row(0, [("k", "1"), ("k", "abc")]), _kv_row(1, [("k", "abc")])]
+    spark.createDataFrame([(r,) for r in rows], "value string").write.parquet(
+        f"{tmp_path}/in"
+    )
+    assert main(["--input", f"{tmp_path}/in", "--format", "parquet-kv",
+                 "--output", f"{tmp_path}/out"]) == 0
+    distinct = [
+        (r["count"], r["schema"]) for r in spark.read.parquet(f"{tmp_path}/out/distinct").collect()
+    ]
+    assert distinct == [(2, '{"type":"object","properties":{"k":{"type":"string"}}}')]
+
 
 def test_merge_n_larger_than_top_k(spark, planted_kv):
     """--merge-n above --top-k merges merge-n shapes, not only the top-k."""
