@@ -16,8 +16,10 @@ Usage: python bench_scaling.py <axis> [n] [n_base] [rounds]
   incremental  an n/2-doc new batch deduped against a persisted n-doc prior
   ann          IVF assignment (k=256) + a 4-query n_probe=2 top-k batch
   pq           IVF-PQ encode + a 4-query ADC / exact re-rank batch
+  shape        jobs/schema_infer_job.py --format parquet-kv over n ^A/^B/^C
+               rows (the distinct shapes' sha is the identity)
 
-Throughput counts images, docs, new-batch docs or vectors. The defaults are
+Throughput counts images, docs, new-batch docs, vectors or rows. The defaults are
 each axis' documented run (BASELINE.md); the image corpus regime is
 BENCH_DIMS_SCALE, default 8 here. Prints one JSON line.
 
@@ -37,6 +39,7 @@ The protocol, the same for every axis:
 from __future__ import annotations
 
 import functools
+import hashlib
 import json
 import os
 import subprocess
@@ -45,7 +48,7 @@ import tempfile
 import time
 from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bench import (
@@ -53,6 +56,7 @@ from bench import (
     run_validation_suite,
 )
 from jobs.curate_job import main as curate_job
+from jobs.schema_infer_job import main as schema_infer_job
 from schema_inference_spark.operators.dedup import (
     band_pairs, cross_batch_exact_dups, dedup_signatures, verify_pairs,
 )
@@ -64,6 +68,7 @@ from schema_inference_spark.operators.similarity import (
     _probe, _query_index, cosine_topk, ivf_assignments,
 )
 from schema_inference_spark.session import get_spark, session_conf
+from schema_inference_spark.sources.delimited import FIELD_SEP, KV_SEP, PAIR_SEP
 from schema_inference_spark.sources.iceberg import write_table
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -459,6 +464,53 @@ def pq(spark, n: int) -> dict:
     return {"checksum": int(chk["s"]), "rows": int(chk["c"]), "topk": _topk(probes)}
 
 
+def kv_rows(spark, n: int) -> str:
+    """The shape axis' deterministic ^A/^B/^C rows, cached in /tmp: one hot
+    shape on a third of the rows, 3000 tail shapes (each with its own
+    ``attr_<t>`` key), and a nested-JSON value on two of every three tail
+    shapes. Returns the parquet path."""
+    path = f"/tmp/spark_graft_kv_rows_{n}"
+    if not os.path.exists(f"{path}/_done"):
+        i, t = F.col("id"), (F.col("id") / 3).cast("long") % 3000
+
+        def pair(key, value):
+            return F.concat(key if isinstance(key, Column) else F.lit(key), F.lit(KV_SEP),
+                            value.cast("string"))
+
+        user = F.element_at(F.array(*[F.lit(f"user{j}") for j in range(8)]), (i % 8 + 1).cast("int"))
+        hot = F.concat_ws(PAIR_SEP, pair("host", F.concat(F.lit("web"), (i % 64).cast("string"))),
+                          pair("status", 200 + i % 400), pair("ts_ms", 10**12 + i), pair("user", user))
+        nested = F.concat(F.lit('{"a":'), (i % 99).cast("string"), F.lit(',"b":["x","y"],"c":{"d":'),
+                          F.when(t % 2 == 0, F.lit("true")).otherwise(F.lit("false")), F.lit("}}"))
+        tags = F.concat(F.lit("["), (i % 50).cast("string"), F.lit(","), (i % 7).cast("string"), F.lit("]"))
+        tail = F.concat_ws(
+            PAIR_SEP, pair("ts_ms", 10**12 + i), pair("user", user),
+            pair(F.concat(F.lit("attr_"), t.cast("string")),
+                 F.concat((i % 1000).cast("string"), F.lit("."), (i % 97 + 1).cast("string"))),
+            F.when(t % 3 == 0, pair("payload", nested)), F.when(t % 3 == 1, pair("tags", tags)),
+        )
+        value = F.concat_ws(FIELD_SEP, (1_700_000_000 + i).cast("string"),
+                            F.concat(F.lit("host"), (i % 97).cast("string")),
+                            F.when(i % 3 == 0, hot).otherwise(tail))
+        spark.range(n).select(value.alias("value")).repartition(16).write.mode(
+            "overwrite").parquet(f"{path}/rows")
+        open(f"{path}/_done", "w").write("ok")
+    return f"{path}/rows"
+
+
+def shape(spark, n: int) -> dict:
+    """The shipped job on the kv rows; the round's outputs are the count and
+    the sha of its sorted distinct (schema, count, percent) rows."""
+    rows = kv_rows(spark, n)
+    with tempfile.TemporaryDirectory() as out:
+        rc = schema_infer_job(["--input", rows, "--format", "parquet-kv", "--output", out])
+        if rc:
+            raise SystemExit(f"schema_infer_job exited {rc}")
+        distinct = sorted(tuple(r) for r in spark.read.parquet(f"{out}/distinct").collect())
+    return {"shapes": len(distinct),
+            "sha": hashlib.sha1(json.dumps(distinct).encode()).hexdigest()}
+
+
 AXES = {
     "image": Axis(_images, image, 400_000),
     "submit": Axis(submit_prepare, None, 400_000, launch=submit),
@@ -468,6 +520,7 @@ AXES = {
                         rows=lambda n: n // 2),
     "ann": Axis(ann_index, ann, 25_600_000),
     "pq": Axis(pq_index, pq, 3_200_000),
+    "shape": Axis(kv_rows, shape, 400_000),
 }
 
 

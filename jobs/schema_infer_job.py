@@ -17,9 +17,11 @@ proto line table is an Arrow local relation: writing ``protos`` runs no
 Python stage.
 
 The two tables are the steps ``distinct`` and ``protos`` of the
-package's one step runner (plans/steps.py); there is no --resume. A row
-that repeats a key keeps its last value (mapKeyDedupPolicy=LAST_WIN, as
-the reference's map fill does) instead of failing the job.
+package's one step runner (plans/steps.py); there is no --resume. The
+per-row shape is one Arrow UDF straight over the raw column: ``kv_shape``
+for the ^A/^B/^C formats, ``flat_json_shape_expr`` for json-docs. A row
+that repeats a key keeps its last value, as the reference's map fill does;
+the job sets no session conf.
 
     spark-submit --py-files /tmp/schema_inference_spark.zip \
         jobs/schema_infer_job.py \
@@ -70,10 +72,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from schema_inference_spark.functions.json_shape import (
-        flat_json_shape_expr,
-        make_kv_shape_udf,
-    )
+    from schema_inference_spark.functions.json_shape import flat_json_shape_expr, kv_shape
     from schema_inference_spark.functions.type_inference import merge_schemas
     from schema_inference_spark.operators.proto import (
         concat_proto_files,
@@ -83,13 +82,11 @@ def main(argv: list[str] | None = None) -> int:
     )
     from schema_inference_spark.operators.shapes import shape_counts, top_k_counts
     from schema_inference_spark.plans.steps import Steps
-    from schema_inference_spark.sources.delimited import parse_delimited
     from schema_inference_spark.sources.sequencefile import read_sequencefile_values
     from schema_inference_spark.sources.tables import ensure_utc
 
     spark = SparkSession.builder.getOrCreate()
     ensure_utc(spark)
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     run = Steps("schema-infer", args.output, {k: v for k, v in vars(args).items() if k != "output"})
     run.begin(spark)
 
@@ -100,13 +97,8 @@ def main(argv: list[str] | None = None) -> int:
     else:  # text, json-docs: one row per line
         rows = spark.read.text(args.input)
 
-    if args.format == "json-docs":
-        shaped = rows.select(flat_json_shape_expr(F.col("value")).alias("schema"))
-    else:
-        kv_shape = make_kv_shape_udf()
-        shaped = parse_delimited(rows, "value").select(
-            kv_shape(F.col("kv")).alias("schema")
-        )
+    shape = flat_json_shape_expr if args.format == "json-docs" else kv_shape
+    shaped = rows.select(shape(F.col("value")).alias("schema"))
 
     # shape_counts drops the null shapes (reference P4 null-row filter)
     distinct = run.step("distinct", lambda: shape_counts(shaped, F.col("schema")))

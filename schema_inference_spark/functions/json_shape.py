@@ -4,19 +4,24 @@ The reference's core scalar function (SchemaGenerator.java:46-147) turns each
 row's JSON document into a JSON-Schema tree; shapes are then counted across
 the corpus. Here:
 
+* ``kv_shape`` — the reference job's own path: one Arrow UDF from the raw
+  ^A/^B/^C row to the canonical recursive shape string. Per Arrow batch it
+  runs the parse (sources/delimited.parse_delimited), types scalars with an
+  Arrow port of the lattice (``_lattice_codes``), sorts each row's keys and
+  joins the pieces, all in ``pyarrow.compute``. Only a batch's distinct
+  nested values (``[`` or ``{``) go through ``kv_value_schema``, memoized
+  per worker, and only keys that JSON must escape through ``json.dumps``.
+  No interpreted Spark lambda and no per-row Python.
 * ``flat_json_shape_expr`` — for flat JSON objects (string->scalar maps, the
-  overwhelmingly common case and the shape of the driver's ``events.props``),
-  ``from_json`` (JVM, codegen) extracts the string map and an Arrow-batched
-  pandas UDF assembles the canonical shape string with a Python port of the
-  type lattice. The previous all-Catalyst form used transform/array_sort
-  lambdas, which Spark 4.1.2 evaluates INTERPRETED per row (the 20x MinHash
-  lesson); the map hop + compiled-regex lattice measured ~1.7x faster per
-  core and adds no shuffle. Extraction semantics are unchanged (same
-  from_json), so oracle parity is preserved.
+  shape of the driver's ``events.props``): ``from_json`` (JVM, codegen)
+  extracts the string map and the same lattice and assembly build the flat
+  shape string in one Arrow UDF. Keys stay unescaped, byte for byte like the
+  DuckDB twin ``flat_json_shape_sql``.
 * ``json_shape_of`` / ``make_shape_udf`` — the fully recursive version
   (nested objects, arrays with element-schema merging, reference
   SchemaGenerator.java:56-89) as an Arrow-batched pandas UDF for payloads the
-  flat path can't express. Python, but vectorized per Arrow batch.
+  flat path can't express. ``_infer_json_type_py`` / ``kv_value_schema`` are
+  the Python definitions the kernels are tested against.
 
 Canonical form (sorted keys, no whitespace) so that equal shapes compare
 equal as strings — the distributed groupBy key is this string, exactly like
@@ -25,11 +30,15 @@ the reference's ObjectNode value-equality groupBy (SeqFilesScan.java:297-316).
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 from typing import Any
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,6 +48,7 @@ from schema_inference_spark.functions.type_inference import (  # noqa: F401
     infer_json_type_sql,
     merge_schemas,
 )
+from schema_inference_spark.sources.delimited import last_per_key, parse_delimited
 
 
 _LETTER_PAT = re.compile(r"[a-zA-Z]")
@@ -69,33 +79,14 @@ def _infer_json_type_py(v: str | None) -> str:
     return "null"
 
 
-_FLAT_PREFIX = '{"type":"object","properties":{'
-
-
-def _shape_of_map(m) -> str | None:
-    if m is None:
-        return None
-    if not isinstance(m, dict):  # arrow map batches may arrive as [(k, v)]
-        m = dict(m)
-    pieces = (
-        f'"{k}":{{"type":"{_infer_json_type_py(m[k])}"}}' for k in sorted(m)
-    )
-    return _FLAT_PREFIX + ",".join(pieces) + "}}"
-
-
 def flat_json_shape_expr(col: Column) -> Column:
     """Canonical JSON-Schema string for a flat JSON-object column.
 
     ``{"type":"object","properties":{"k":{"type":"integer"},...}}`` with keys
-    sorted; null for unparseable rows (filtered like reference P4).
+    sorted; null for unparseable rows (filtered like reference P4). Keys are
+    written as they are, unescaped, byte for byte like ``flat_json_shape_sql``.
     """
-    m = F.from_json(col, "map<string,string>")
-
-    @F.pandas_udf(T.StringType())
-    def _assemble(maps: pd.Series) -> pd.Series:
-        return maps.map(_shape_of_map)
-
-    return _assemble(m)
+    return F.arrow_udf(flat_shape_udf, T.StringType())(F.from_json(col, "map<string,string>"))
 
 
 def flat_json_shape_sql(col_sql: str) -> str:
@@ -191,31 +182,112 @@ def kv_value_schema(v: str | None) -> dict:
     return {"type": _infer_json_type_py(v)}
 
 
-def kv_schema_of(kv: dict) -> dict:
-    """Recursive JSON-Schema of a parsed ^C/^B KV payload — the analog of
-    the reference's per-row ObjectNode (ProcessStringColumnAsObjectNode.java
-    :24-41). Nested JSON values recurse, unlike the flat path."""
-    return {"type": "object", "properties": {k: kv_value_schema(v) for k, v in kv.items()}}
+# ---------------------------------------------------------------------------
+# Arrow kernels: one batch of rows -> one batch of canonical shape strings.
+# ---------------------------------------------------------------------------
+
+_TYPES = ("null", "boolean", "string", "integer", "number")
+_FRAGMENTS = tuple(f'":{{"type":"{t}"}}' for t in _TYPES)  # '"' + key + fragment
+_SHAPE_PREFIX = '{"type":"object","properties":{'
+# float() accepts these around a number; str.strip() also removes \x1c-\x1f
+_FLOAT_WS = r"[ \t\n\x0b\x0c\r]*"
+_NUMBER_RE = rf"^{_FLOAT_WS}[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+){_FLOAT_WS}$"
+_STRIP_CHARS = "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f "
 
 
-def make_kv_shape_udf():
-    """Arrow-batched pandas UDF: map<string,string> KV column -> canonical
-    recursive shape string (handles nested-JSON values)."""
+def _mask(bools: pa.Array) -> np.ndarray:
+    return pc.fill_null(bools, False).to_numpy(zero_copy_only=False)
 
-    @F.pandas_udf(T.StringType())
-    def kv_shape_udf(kvs: pd.Series) -> pd.Series:
-        def one(kv):
-            if kv is None:
-                return None
-            if not isinstance(kv, dict):
-                kv = dict(kv)
-            return json.dumps(
-                _type_first(kv_schema_of(kv)), separators=(",", ":"), ensure_ascii=True
-            )
 
-        return kvs.map(one)
+def _lattice_codes(values: pa.Array) -> np.ndarray:
+    """``_infer_json_type_py`` over a batch: an index into ``_TYPES`` per
+    value. RE2's ``$`` does not match before a final newline as Python's
+    does, hence ``\\n?$``; letters exclude exponents, so a number is digits
+    with at most one dot inside the whitespace ``float()`` accepts."""
+    return np.select(
+        [
+            _mask(pc.is_in(pc.ascii_lower(values), value_set=pa.array(["true", "false"]))),
+            _mask(pc.match_substring_regex(values, "[a-zA-Z]")),
+            _mask(pc.match_substring_regex(values, r"^[0-9]+\n?$")),
+            _mask(pc.match_substring_regex(values, _NUMBER_RE)),
+        ],
+        [1, 2, 3, 4],
+        0,
+    ).astype(np.int32)
 
-    return kv_shape_udf
+
+@functools.lru_cache(maxsize=1 << 14)  # per worker process
+def _nested_fragment(value: str) -> str:
+    """Type fragment of one stripped nested value: ``kv_value_schema``,
+    so a value ``json.loads`` rejects takes the scalar lattice."""
+    return '":' + json.dumps(_type_first(kv_value_schema(value)), separators=(",", ":"),
+                             ensure_ascii=True)
+
+
+def _shape_strings(offsets: np.ndarray, nulls: np.ndarray, keys: pa.Array,
+                   codes: np.ndarray, vocab: list[str]) -> pa.Array:
+    """One shape string per row from its (key-sorted) entries: row i owns
+    entries ``offsets[i]:offsets[i+1]`` and is null where ``nulls``; entry j
+    has type fragment ``vocab[codes[j]]``."""
+    frags = pa.array(vocab, pa.string()).take(pa.array(codes))
+    pieces = pc.binary_join_element_wise('"', keys, frags, "")
+    rows = pa.ListArray.from_arrays(pa.array(offsets, mask=np.append(nulls, False)), pieces)
+    return pc.binary_join_element_wise(_SHAPE_PREFIX, pc.binary_join(rows, ","), "}}", "")
+
+
+def _map_entries(maps: pa.MapArray) -> tuple[np.ndarray, pa.Array, pa.Array]:
+    """(offsets from 0, keys, items) of a possibly sliced map array."""
+    offsets = maps.offsets.to_numpy()
+    lo, hi = int(offsets[0]), int(offsets[-1])
+    return offsets - lo, maps.keys.slice(lo, hi - lo), maps.items.slice(lo, hi - lo)
+
+
+def kv_shape_udf(values: pa.Array) -> pa.Array:
+    """Canonical recursive shape string of each raw ^A/^B/^C row, null for
+    a rejected row: the schema of its parsed payload, ``kv_value_schema``
+    per value, serialized like ``canonical_shape_string``. Scalars are
+    typed by ``_lattice_codes``; only values that start with ``[`` or
+    ``{`` go through ``kv_value_schema`` (``_nested_fragment``). Keys are
+    escaped as ``json.dumps`` escapes them, after the sort."""
+    kv = parse_delimited(values).field("kv")
+    offsets, keys, vals = _map_entries(kv)
+    nulls = kv.is_null().to_numpy(zero_copy_only=False)
+    stripped = pc.utf8_trim(vals, characters=_STRIP_CHARS)  # kv_value_schema's strip
+    codes = _lattice_codes(stripped)
+    codes[_mask(pc.equal(pc.ascii_lower(stripped), "null"))] = 0
+    nested = np.flatnonzero(_mask(pc.match_substring_regex(stripped, r"^[\[{]")))
+    docs = stripped.take(nested)
+    distinct = pc.unique(docs)
+    codes[nested] = len(_FRAGMENTS) + pc.index_in(docs, value_set=distinct).to_numpy()
+    vocab = list(_FRAGMENTS) + [_nested_fragment(d) for d in distinct.to_pylist()]
+
+    escaped = pa.array(_mask(pc.match_substring_regex(keys, r'[^ -~]|["\\]')))
+    if pc.any(escaped).as_py():
+        keys = pc.replace_with_mask(keys, escaped, pa.array(
+            [json.dumps(k, ensure_ascii=True)[1:-1] for k in keys.filter(escaped).to_pylist()],
+            pa.string()))
+    return _shape_strings(offsets, nulls, keys, codes, vocab)
+
+
+def kv_shape(col: Column) -> Column:
+    """Shape string of a raw ^A/^B/^C row column (``kv_shape_udf`` as one
+    Arrow UDF); null for a row the parse rejects."""
+    return F.arrow_udf(kv_shape_udf, T.StringType())(col)
+
+
+def flat_shape_udf(maps: pa.Array) -> pa.Array:
+    """Flat shape string of each ``map<string,string>`` (null stays null):
+    the last of repeated keys wins, as ``dict`` does; keys are sorted and
+    not escaped; values are typed by ``_lattice_codes``, a nested value
+    included."""
+    offsets, keys, vals = _map_entries(maps)
+    row_of = np.repeat(np.arange(len(maps)), np.diff(offsets))
+    keep = last_per_key(row_of, keys)
+    offsets = np.zeros(len(maps) + 1, dtype=np.int32)
+    np.cumsum(np.bincount(row_of[keep], minlength=len(maps)), out=offsets[1:])
+    nulls = maps.is_null().to_numpy(zero_copy_only=False)
+    return _shape_strings(offsets, nulls, keys.take(keep), _lattice_codes(vals.take(keep)),
+                          list(_FRAGMENTS))
 
 
 def make_shape_udf():
@@ -239,6 +311,7 @@ def make_shape_udf():
 __all__ = [
     "JSON_TYPE_FOR",
     "flat_json_shape_expr",
+    "kv_shape",
     "flat_json_shape_sql",
     "json_shape_of",
     "canonical_shape_string",

@@ -4,9 +4,9 @@ The reference scans ``SequenceFile<BytesWritable, Text>`` and keeps only
 the values (SeqFilesScan.java:209-211 ``jsc.sequenceFile(path,
 BytesWritable.class, Text.class).values()``). This adapter does the same
 through ``sc.sequenceFile`` (one RDD hop, unavoidable: Spark has no
-DataFrame SequenceFile reader) and immediately lands in a DataFrame so
-everything downstream — parse_delimited, the shape pipeline — stays
-declarative and Catalyst-optimized.
+DataFrame SequenceFile reader) and immediately lands in a DataFrame of raw
+``value`` rows, which the shape UDF (functions/json_shape.kv_shape) parses
+one Arrow batch at a time.
 
 Scale notes:
 * SequenceFiles are splittable; the Hadoop input format hands Spark one

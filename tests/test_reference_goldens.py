@@ -15,16 +15,18 @@ from __future__ import annotations
 import glob
 import json
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from schema_inference_spark.functions.json_shape import (
-    kv_schema_of,
+    kv_shape,
+    kv_shape_udf,
     kv_value_schema,
-    make_kv_shape_udf,
 )
 from schema_inference_spark.functions.type_inference import merge_schemas
 from schema_inference_spark.sources.delimited import parse_delimited
+from tests.test_shape_kernel import kv_schema_of
 
 FVALUES = "/root/reference/src/test/resources/fvalues.txt"
 EXPECTED_TREE = "/root/reference/src/test/resources/json/12.json"
@@ -37,19 +39,20 @@ def test_fvalues_row_schema_matches_reference_tree(spark):
     compared as parsed dicts (property ORDER is serialization detail; the
     reference emits insertion order, our canon sorts)."""
     raw = open(FVALUES, encoding="utf-8").read().strip("\n")
-    df = spark.createDataFrame([(raw,)], "value string")
-    parsed = parse_delimited(df, "value", drop_empty=False)
-    rows = parsed.collect()
-    assert len(rows) == 1
+    rows = parse_delimited(pa.array([raw]), drop_empty=False).to_pylist()
+    assert len(rows) == 1 and rows[0] is not None
     kv = rows[0]["kv"]
     got = kv_schema_of(dict(kv))
     expected = json.load(open(EXPECTED_TREE, encoding="utf-8"))
     assert got == expected
 
-    # and the distributed UDF path emits the same tree
-    udf = make_kv_shape_udf()
-    s = parsed.select(udf(F.col("kv")).alias("s")).collect()[0]["s"]
-    assert json.loads(s) == expected
+    # and the distributed shape path emits the same tree, less the keys
+    # whose empty values the production hygiene drops
+    df = spark.createDataFrame([(raw,)], "value string")
+    s = df.select(kv_shape(F.col("value")).alias("s")).collect()[0]["s"]
+    non_null = {k: v for k, v in expected["properties"].items() if v != {"type": "null"}}
+    assert json.loads(s) == {"type": "object", "properties": non_null}
+    assert kv_shape_udf(pa.array([raw])).to_pylist() == [s]
 
 
 def _load_distinct_rows():
@@ -197,14 +200,11 @@ def test_additional_fvalues_rows_parse_consistently(spark):
     parse_delimited + the recursive KV shape, and all produced property
     schemas must be mergeable with the fvalues.txt golden superset
     (the production A8 fold never rejects a real row's schema)."""
-    from schema_inference_spark.functions.json_shape import kv_schema_of
-
     raws = []
     for name in ("fvalues.txt", "fvalues2.txt", "fvalues3.txt", "fvalues5.txt"):
         raws.append(open(f"/root/reference/src/test/resources/{name}").read().strip("\n"))
-    df = spark.createDataFrame([(r,) for r in raws], "value string")
-    parsed = parse_delimited(df, "value", drop_empty=False).collect()
-    assert len(parsed) == len(raws)  # all are well-formed 3-field rows
+    parsed = parse_delimited(pa.array(raws), drop_empty=False).to_pylist()
+    assert None not in parsed  # all are well-formed 3-field rows
     merged = None
     for row in parsed:
         schema = kv_schema_of(dict(row["kv"]))

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import tempfile
 import uuid
 
@@ -162,6 +163,61 @@ def test_repeated_key_keeps_last_value(spark, tmp_path):
         (r["count"], r["schema"]) for r in spark.read.parquet(f"{tmp_path}/out/distinct").collect()
     ]
     assert distinct == [(2, '{"type":"object","properties":{"k":{"type":"string"}}}')]
+
+
+def test_json_docs_repeated_key_keeps_last_value(spark, tmp_path):
+    """from_json keeps both entries of a repeated key in its map; the flat
+    shape keeps the last, like the delimited path and like ``dict``."""
+    with open(f"{tmp_path}/docs.txt", "w") as f:
+        f.write('{"k": 1, "k": "abc"}\n{"k": "abc"}\n')
+    assert main(["--input", f"{tmp_path}/docs.txt", "--format", "json-docs",
+                 "--output", f"{tmp_path}/out"]) == 0
+    distinct = [
+        (r["count"], r["schema"]) for r in spark.read.parquet(f"{tmp_path}/out/distinct").collect()
+    ]
+    assert distinct == [(2, '{"type":"object","properties":{"k":{"type":"string"}}}')]
+
+
+def test_job_leaves_the_session_conf_as_it_found_it(spark, planted_kv):
+    """The job runs on the caller's session and sets none of its confs (it
+    once left spark.sql.mapKeyDedupPolicy=LAST_WIN behind for every later
+    query of the session)."""
+    d = planted_kv
+    spark.conf.unset("spark.sql.mapKeyDedupPolicy")
+    before = spark.conf.getAll
+    assert main(["--input", f"{d}/in", "--format", "parquet-kv",
+                 "--output", f"{d}/out_conf"]) == 0
+    assert spark.conf.getAll == before
+
+
+@pytest.mark.parametrize("fmt", ["parquet-kv", "json-docs"])
+def test_distinct_plan_is_one_python_node_and_no_lambda(spark, planted_kv, tmp_path, monkeypatch, fmt):
+    """The per-row shape is one Arrow UDF over the raw column: the distinct
+    step's plan evaluates Python once and has no higher-order function
+    (Spark evaluates their lambdas interpreted, row by row)."""
+    from schema_inference_spark.operators import shapes
+
+    seen, real_shape_counts = [], shapes.shape_counts
+
+    def recording_shape_counts(*args, **kwargs):
+        seen.append(real_shape_counts(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(shapes, "shape_counts", recording_shape_counts)
+    if fmt == "json-docs":
+        with open(f"{tmp_path}/docs.txt", "w") as f:
+            f.write('{"a": 1, "b": "x"}\n{"a": [1]}\nnot json\n')
+        source = f"{tmp_path}/docs.txt"
+    else:
+        source = f"{planted_kv}/in"
+    assert main(["--input", source, "--format", fmt, "--output", f"{tmp_path}/out"]) == 0
+    (distinct,) = seen
+    distinct.collect()
+    plan = distinct._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    logical = distinct._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"ArrowEvalPython|BatchEvalPython|MapInArrow|MapInPandas", plan)) == 1, plan
+    for hof in ("lambdafunction", "transform_values", "map_filter", "str_to_map"):
+        assert hof not in plan and hof not in logical, hof
 
 
 def test_merge_n_larger_than_top_k(spark, planted_kv):

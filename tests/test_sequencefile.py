@@ -8,9 +8,10 @@ from __future__ import annotations
 import json
 import tempfile
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 
-from schema_inference_spark.functions.json_shape import make_kv_shape_udf
+from schema_inference_spark.functions.json_shape import kv_shape
 from schema_inference_spark.sources.delimited import parse_delimited
 from schema_inference_spark.sources.sequencefile import read_sequencefile_values
 
@@ -39,14 +40,15 @@ def test_sequencefile_reference_row_to_schema_tree(spark):
     raw = open(FVALUES, encoding="utf-8").read().strip("\n")
     with tempfile.TemporaryDirectory() as d:
         _write_seqfile(spark, f"{d}/seq", [raw, "not-three-fields", ""])
-        parsed = parse_delimited(read_sequencefile_values(spark, f"{d}/seq"), "value")
-        rows = parsed.collect()
+        values = read_sequencefile_values(spark, f"{d}/seq")
+        raws = [r["value"] for r in values.collect()]
+        rows = [r for r in parse_delimited(pa.array(raws, pa.string())).to_pylist() if r]
         assert len(rows) == 1  # malformed rows dropped (P1/P4 semantics)
         assert rows[0]["hostname"] == "10-181-208-32"
-        # drop_empty default drops the empty-valued keys; the non-empty
+        # the production hygiene drops the empty-valued keys; the non-empty
         # subset of the reference tree must match exactly
-        udf = make_kv_shape_udf()
-        shape = parsed.select(udf(F.col("kv")).alias("s")).collect()[0]["s"]
+        shapes = values.select(kv_shape(F.col("value")).alias("s")).where("s IS NOT NULL")
+        shape = shapes.collect()[0]["s"]
         got_props = json.loads(shape)["properties"]
         expected = json.load(open(EXPECTED_TREE, encoding="utf-8"))["properties"]
         non_null = {k: v for k, v in expected.items() if v != {"type": "null"}}

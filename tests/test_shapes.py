@@ -16,7 +16,7 @@ from schema_inference_spark.functions.json_shape import (
     flat_json_shape_expr,
     flat_json_shape_sql,
     json_shape_of,
-    make_kv_shape_udf,
+    kv_shape,
     make_shape_udf,
 )
 from schema_inference_spark.operators.shapes import (
@@ -26,7 +26,7 @@ from schema_inference_spark.operators.shapes import (
     shape_exemplars,
     top_shapes,
 )
-from schema_inference_spark.sources.delimited import FIELD_SEP, KV_SEP, parse_delimited
+from schema_inference_spark.sources.delimited import FIELD_SEP, KV_SEP
 
 
 def test_flat_shape_expr_basic(spark):
@@ -143,24 +143,33 @@ def test_flat_expr_equals_recursive_udf_on_flat_docs(spark):
 
 
 def test_python_lattice_matches_catalyst_lattice(spark):
-    """The pandas-UDF shape path ports infer_json_type_expr to Python; the
-    two must agree value-for-value on representative + adversarial strings."""
-    from schema_inference_spark.functions.json_shape import _infer_json_type_py
+    """The shape paths port infer_json_type_expr twice, to Python and to
+    Arrow; all three must agree value-for-value on representative +
+    adversarial strings. Python's and Java's ``$`` match before a final
+    newline (RE2's does not), and float() takes surrounding whitespace."""
+    import pyarrow as pa
+
+    from schema_inference_spark.functions.json_shape import (
+        _TYPES,
+        _infer_json_type_py,
+        _lattice_codes,
+    )
     from schema_inference_spark.functions.type_inference import infer_json_type_expr
 
     vals = [
         "true", "FALSE", "tRuE", "abc", "a1", "123", "007", "",
         "1.5", "-2.75", "1e10", "1.5e-3", ".5", "5.", "1.2.3", "--",
         "12-34", "+42", "-0", "0.0001", "1_000", "NaN", "Infinity",
-        " 1.5", "1.5 ", "½", "١٢٣",
+        " 1.5", "1.5 ", "½", "١٢٣", "12\n", "1.5\t",
     ]
     df = spark.createDataFrame([(v,) for v in vals], "v string")
     got = {
         r["v"]: r["t"]
         for r in df.select("v", infer_json_type_expr(F.col("v")).alias("t")).collect()
     }
-    for v in vals:
-        assert _infer_json_type_py(v) == got[v], (v, _infer_json_type_py(v), got[v])
+    arrow = [_TYPES[c] for c in _lattice_codes(pa.array(vals))]
+    for v, a in zip(vals, arrow):
+        assert _infer_json_type_py(v) == got[v] == a, (v, _infer_json_type_py(v), got[v], a)
 
 
 def test_merged_shape_agrees_with_spark_native_json_inference(spark):
@@ -198,9 +207,7 @@ def test_shape_counts_schema_is_the_declared_ddl(spark, tmp_path, fmt):
         rows = spark.createDataFrame(
             [(f"1{FIELD_SEP}h{FIELD_SEP}a{KV_SEP}1",), (f"2{FIELD_SEP}h",)], "value string"
         )
-        shaped = parse_delimited(rows, "value").select(
-            make_kv_shape_udf()(F.col("kv")).alias("schema")
-        )
+        shaped = rows.select(kv_shape(F.col("value")).alias("schema"))
     counts = shape_counts(shaped, F.col("schema"))
     declared = StructType.fromDDL(SHAPE_COUNTS_SCHEMA)
     assert [(f.name, f.dataType) for f in counts.schema] == [
