@@ -72,7 +72,11 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from schema_inference_spark.functions.json_shape import flat_json_shape_expr, kv_shape
+    from schema_inference_spark.functions.json_shape import (
+        flat_json_shape_expr,
+        flat_shape_schema,
+        kv_shape,
+    )
     from schema_inference_spark.functions.type_inference import merge_schemas
     from schema_inference_spark.operators.proto import (
         concat_proto_files,
@@ -113,9 +117,12 @@ def main(argv: list[str] | None = None) -> int:
                 {"schema": r["schema"], "count": r["count"], "percent": r["percent"]}
             ) + "\n")
 
+    # a flat shape keeps keys raw, so one with a key JSON must escape is
+    # not JSON: read it back by its own grammar
+    schema_of = flat_shape_schema if args.format == "json-docs" else json.loads
     merged = None
     for r in top[: args.merge_n]:
-        merged = merge_schemas(merged, json.loads(r["schema"]))
+        merged = merge_schemas(merged, schema_of(r["schema"]))
     with open(f"{args.output}/merged_schema.json", "w", encoding="utf-8") as f:
         json.dump(merged, f, indent=2)
 

@@ -16,7 +16,8 @@ the corpus. Here:
   shape of the driver's ``events.props``): ``from_json`` (JVM, codegen)
   extracts the string map and the same lattice and assembly build the flat
   shape string in one Arrow UDF. Keys stay unescaped, byte for byte like the
-  DuckDB twin ``flat_json_shape_sql``.
+  DuckDB twin ``flat_json_shape_sql``; ``flat_shape_schema`` reads such a
+  string back, also where a key makes it invalid JSON.
 * ``json_shape_of`` / ``make_shape_udf`` — the fully recursive version
   (nested objects, arrays with element-schema merging, reference
   SchemaGenerator.java:56-89) as an Arrow-batched pandas UDF for payloads the
@@ -87,6 +88,20 @@ def flat_json_shape_expr(col: Column) -> Column:
     written as they are, unescaped, byte for byte like ``flat_json_shape_sql``.
     """
     return F.arrow_udf(flat_shape_udf, T.StringType())(F.from_json(col, "map<string,string>"))
+
+
+def flat_shape_schema(shape: str) -> dict:
+    """The schema a flat shape string spells, keys as they are: what
+    ``json.loads`` returns for it, also where a key holds a character JSON
+    must escape (``"``, ``\\``, a control character), which the flat
+    shape keeps raw. A key that itself spells a type fragment followed by
+    ``,"`` splits there; two such documents share one shape string."""
+    body, props, pos = shape[len(_SHAPE_PREFIX):-2], {}, 0
+    while pos < len(body):
+        m = _FLAT_ENTRY.match(body, pos)
+        props[m.group(1)] = {"type": _TYPES[_FRAGMENTS.index(m.group(2))]}
+        pos = m.end()
+    return {"type": "object", "properties": props}
 
 
 def flat_json_shape_sql(col_sql: str) -> str:
@@ -189,6 +204,10 @@ def kv_value_schema(v: str | None) -> dict:
 _TYPES = ("null", "boolean", "string", "integer", "number")
 _FRAGMENTS = tuple(f'":{{"type":"{t}"}}' for t in _TYPES)  # '"' + key + fragment
 _SHAPE_PREFIX = '{"type":"object","properties":{'
+# one '"' + key + fragment entry of a flat shape, up to the next entry or the end
+_FLAT_ENTRY = re.compile(
+    '"(.*?)(' + "|".join(map(re.escape, _FRAGMENTS)) + ')(?:,(?=")|$)', re.S
+)
 # float() accepts these around a number; str.strip() also removes \x1c-\x1f
 _FLOAT_WS = r"[ \t\n\x0b\x0c\r]*"
 _NUMBER_RE = rf"^{_FLOAT_WS}[+-]?(?:[0-9]+\.?[0-9]*|\.[0-9]+){_FLOAT_WS}$"

@@ -595,18 +595,25 @@ def _probe(rows, query_vec, n: int) -> list:
     doubles, so its ``ORDER BY cosine DESC, cid ASC`` picks the same cells
     — and a zero norm scores 0. A negative ``n`` raises (a slice would
     quietly drop the farthest cells instead)."""
+    rows = list(rows)
+    return _probe_matrix(
+        [i for i, _ in rows], np.asarray([c for _, c in rows], dtype=np.float64), query_vec, n
+    )
+
+
+def _probe_matrix(ids: list, cmat: np.ndarray, query_vec, n: int) -> list:
+    """``_probe`` over prebuilt centroids: ``ids[i]`` is the id of the
+    float64 row ``cmat[i]`` (an open index keeps both on the driver)."""
     if n < 0:
         raise ValueError(f"probe count must be >= 0, got {n}")
-    rows = list(rows)
-    if not rows:
+    if not ids:
         return []
-    cmat = np.asarray([c for _, c in rows], dtype=np.float64)
     q = np.broadcast_to(np.asarray(query_vec, dtype=np.float64), cmat.shape)
     den = np.sqrt(_seq_dot(q[:1], q[:1])[0]) * np.sqrt(_seq_dot(cmat, cmat))
     with np.errstate(divide="ignore", invalid="ignore"):
         cos = np.where(den == 0.0, 0.0, _seq_dot(q, cmat) / den)
-    order = sorted(range(len(rows)), key=lambda i: (-cos[i], rows[i][0]))
-    return [rows[i][0] for i in order[:n]]
+    order = sorted(range(len(ids)), key=lambda i: (-cos[i], ids[i]))
+    return [ids[i] for i in order[:n]]
 
 
 CENTROIDS_SCHEMA = "centroid_id int, centroid array<double>"

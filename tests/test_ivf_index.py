@@ -2,8 +2,8 @@
 query_index, under every codec x {flat, two-level}: how a query picks its
 cells (one probe rule: (−cos, id), a zero norm scores 0), that a full
 probe is exact, how the encoders fail on a cell they cannot encode, the
-manifest as the build's commit marker, and what one query costs in Spark
-jobs and plan shape.
+manifest as the build's commit marker, what one query costs in Spark
+jobs and plan shape, and when an open index (open_index) is reused.
 
 The probe tests write their indexes by hand, so each controls exactly what
 the centroids/ table holds and in which row order it is stored; the
@@ -20,6 +20,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from schema_inference_spark.operators import pq
 from schema_inference_spark.operators.pq import (
     CODEBOOK_SCHEMA,
     CODECS,
@@ -28,9 +29,11 @@ from schema_inference_spark.operators.pq import (
     SCALES_SCHEMA,
     _codebooks_to_dict,
     build_index,
+    open_index,
     pq_encode,
     pq_train_codebooks,
     query_index,
+    query_pq_index,
     query_pq_index_batch,
     sq_encode,
 )
@@ -69,15 +72,19 @@ def _write_index(spark, path, centroids, codec="raw"):
         write_table(cb_df, f"{path}/codebooks", mode="overwrite")
         vectors = pq_encode(vectors, _codebooks_to_dict(cb_df.collect()))
     write_table(vectors, f"{path}/vectors", mode="overwrite", partition_by=("centroid_id",))
-    spark.createDataFrame(centroids, CENTROIDS_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids")
+    _write_centroids(spark, path, centroids)
     manifest = {
         "codec": codec, "two_level": False, "id_col": "vec_id", "vec_col": "embedding",
         "vectors": spark.read.parquet(f"{path}/vectors").schema.toDDL(),
     }
     with open(f"{path}/{MANIFEST}", "w", encoding="utf-8") as f:
         json.dump(manifest, f)
+
+
+def _write_centroids(spark, path, centroids):
+    spark.createDataFrame(centroids, CENTROIDS_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/centroids")
 
 
 def _ids(df):
@@ -298,21 +305,26 @@ def _collect_counting_jobs(spark, make_df):
 
 @pytest.mark.parametrize("layout", LAYOUTS, ids=LAYOUT_IDS)
 def test_index_query_jobs_and_plan(spark, built, layout):
-    """One query is one collect per side table it reads — centroids/,
-    then fine_centroids/ when two-level, then scales/ (int8) or
-    codebooks/ (pq) — plus one plan; vectors/ is read by the manifest's
-    DDL, so no schema-inference job (pq and int8: 3 jobs). That plan scans
-    vectors/ once, pruned on every cell key, and has one Python stage
-    (the bulk lane, or raw's cosine)."""
+    """A cold open — the first query on a path — is one collect per side
+    table it reads — centroids/, then fine_centroids/ when two-level,
+    then scales/ (int8) or codebooks/ (pq), every probed cell at once —
+    plus one plan; vectors/ is read by the manifest's DDL, so no
+    schema-inference job (pq and int8: 3 jobs). A warm query, whose cells
+    an earlier query loaded, is the plan alone: 1 job, same rows. That
+    plan scans vectors/ once, pruned on every cell key, and has one
+    Python stage (the bulk lane, or raw's cosine)."""
     codec, two_level = layout
     q = [float(x) for x in np.linspace(-1.0, 1.0, 64)]
 
     def make_df():
         return query_index(spark, built[layout], q, k=2, n_probe=3, n_probe_coarse=2)
 
-    df, rows, jobs = _collect_counting_jobs(spark, make_df)
-    assert len(rows) == 2
+    pq._open.clear()  # no handle yet: the next query opens the index
+    _, cold, jobs = _collect_counting_jobs(spark, make_df)
+    assert len(cold) == 2
     assert jobs == 2 + two_level + (codec in ("int8", "pq"))
+    df, rows, jobs = _collect_counting_jobs(spark, make_df)
+    assert rows == cold and jobs == 1
     plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
     assert plan.count("ArrowEvalPython") == 1, plan
     assert plan.count("FileScan") == 1 and f"{built[layout]}/vectors" in plan, plan
@@ -358,3 +370,142 @@ def test_manifest_is_the_commit_marker(spark, tmp_path):
         build_index(df, path, "pq", k=3, max_iter=2, m=3, ncodes=2, pq_max_iter=2)
     with pytest.raises(ValueError, match=f"no index at {path}"):
         query_index(spark, path, q)
+
+
+def test_rebuild_opens_a_fresh_handle(spark, emb, tmp_path):
+    """An open index is reused only while the manifest, build id
+    included, is the one it opened: after a rebuild with other k and m
+    at the same path, a query answers from the new build, as a fresh
+    session does. A rebuild that fails leaves no index to answer from,
+    however recently the old one was open."""
+    path = str(tmp_path / "idx")
+    q = _query_vec(emb, 5)
+    build_index(emb, path, "pq", k=4, max_iter=2, m=16, ncodes=8, pq_max_iter=2)
+    before = query_index(spark, path, q, k=5, n_probe=1).collect()
+    old = open_index(spark, path)
+    assert open_index(spark, f"{path}/") is old and len(before) == 5
+    build_index(emb, path, "pq", k=6, max_iter=2, m=8, ncodes=8, pq_max_iter=2)
+    assert open_index(spark, path) is not old
+    got = query_index(spark, path, q, k=5, n_probe=1).collect()
+    assert got == query_index(spark.newSession(), path, q, k=5, n_probe=1).collect()
+    with pytest.raises(Exception, match="not divisible by m=7"):
+        build_index(emb, path, "pq", k=6, max_iter=2, m=7, ncodes=8, pq_max_iter=2)
+    with pytest.raises(ValueError, match=f"no index at {path}"):
+        query_index(spark, path, q)
+
+
+def test_manifest_without_build_id_is_reread(spark, tmp_path):
+    """A manifest without a build id (written before build ids, or by
+    hand) opens a fresh handle on every call: each query collects
+    centroids/ again and sees it rewritten in place."""
+    path = str(tmp_path / "idx")
+    e0, e1, e2 = [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]
+    _write_index(spark, path, [(0, e0), (1, e1), (2, e2)])
+    assert open_index(spark, path) is not open_index(spark, path)
+    q = [1.0, 0.1, 0.0, 0.0]
+
+    def make_df():
+        return query_index(spark, path, q, k=10, n_probe=1)
+
+    _, rows, jobs = _collect_counting_jobs(spark, make_df)
+    assert {r["vec_id"] for r in rows} == {0, 1, 2} and jobs == 2
+    _write_centroids(spark, path, [(0, e2), (1, e1), (2, e0)])
+    _, rows, jobs = _collect_counting_jobs(spark, make_df)
+    assert {r["vec_id"] for r in rows} == {20, 21} and jobs == 2
+
+
+def _pq_query(spark, path, q):
+    return query_pq_index(spark, path, q, k=10, n_probe=3).collect()
+
+
+def test_side_cache_budget_evicts_cells(spark, emb, built, monkeypatch):
+    """The per-cell side cache holds at most SIDE_CACHE_BYTES: with room
+    for two pq cells, queries probing three cells each evict the least
+    recently used, reload what they need, and answer exactly as with the
+    default budget."""
+    path = built["pq", False]
+    queries = [_query_vec(emb, v) for v in (5, 7, 123, 5)]
+    want = [_pq_query(spark, path, q) for q in queries]
+    cell = open_index(spark, path).side("codebooks", [0])[0].nbytes
+    monkeypatch.setattr(pq, "SIDE_CACHE_BYTES", 2 * cell)
+    pq._open.clear()
+    index = open_index(spark, path)
+    for q, rows in zip(queries, want):
+        assert _pq_query(spark, path, q) == rows
+        assert len(index._cells) == 2 and index._cell_bytes == 2 * cell
+    assert open_index(spark, path) is index
+
+
+def _exchange_inputs(df, key: str) -> list[str]:
+    """The input columns of each shuffle Exchange of ``df``'s executed
+    plan that hash-partitions by ``key``."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    return [
+        sec.split("\n")[1]
+        for sec in plan.split("\n\n")
+        if sec.split("\n")[0].endswith(") Exchange") and f"hashpartitioning({key}#" in sec
+    ]
+
+
+def test_pq_batch_cut_shuffles_no_raw_column(spark, emb, built):
+    """The batch path's candidate cut partitions by qid over (qid, id,
+    score) only: no qid Exchange carries the raw embedding column, which
+    meets just the cut candidates, and the batch still equals the single
+    queries row for row."""
+    path = built["pq", False]
+    queries = [_query_vec(emb, v) for v in (0, 7, 123)]
+    df = query_pq_index_batch(spark, path, queries, k=10, n_probe=2, over_retrieve=4)
+    rows = df.collect()
+    inputs = _exchange_inputs(df, "qid")
+    assert inputs and not any("embedding" in i for i in inputs), inputs
+    for qid, q in enumerate(queries):
+        single = query_pq_index(spark, path, q, k=10, n_probe=2, over_retrieve=4).collect()
+        assert [(r["vec_id"], r["cosine_sim"]) for r in rows if r["qid"] == qid] == [
+            tuple(r) for r in single
+        ]
+
+
+def test_side_cache_stays_consistent_under_threads(monkeypatch):
+    """Queries on several driver threads share one open index: with more
+    threads than cores, a short switch interval and a budget of a few
+    cells, every side() call returns exactly the cells it asked for and
+    the cache's byte count stays the sum of the cells it holds. The
+    collect is replaced by rows built in memory, so no Spark job runs."""
+    import sys
+    import threading
+
+    def fake_read_side(spark, path, table, schema, key, ids):
+        return [
+            {"centroid_id": cid, "subspace": j, "code": c, "codeword": [float(cid)] * 2}
+            for cid in ids for j in range(2) for c in range(2)
+        ]
+
+    monkeypatch.setattr(pq, "_read_side", fake_read_side)
+    monkeypatch.setattr(pq, "SIDE_CACHE_BYTES", 3 * 2 * 2 * 2 * 4)  # three cells
+    index = pq.Index(None, "unused", {})
+    errors = []
+
+    def worker(seed):
+        rng = np.random.default_rng(seed)
+        try:
+            for _ in range(300):
+                cids = sorted({int(c) for c in rng.integers(0, 12, size=3)})
+                got = index.side("codebooks", cids)
+                assert sorted(got) == cids
+                assert all((cb == float(cid)).all() for cid, cb in got.items())
+        except Exception as err:  # noqa: BLE001 — reported by the main thread
+            errors.append(err)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert index._cell_bytes == sum(pq._nbytes(v) for v in index._cells.values())
+    assert index._cell_bytes <= pq.SIDE_CACHE_BYTES

@@ -178,6 +178,23 @@ def test_json_docs_repeated_key_keeps_last_value(spark, tmp_path):
     assert distinct == [(2, '{"type":"object","properties":{"k":{"type":"string"}}}')]
 
 
+def test_json_docs_keys_json_must_escape(spark, tmp_path):
+    """A document key holding '"' or '\\' stays raw in the flat shape
+    string, which is then not JSON; the merge still reads every key of it
+    and merged_schema.json escapes them."""
+    with open(f"{tmp_path}/docs.txt", "w") as f:
+        f.write('{"q\\"k": 1, "a\\\\b": "x"}\n' * 2 + '{"q\\"k": 2.5}\n')
+    assert main(["--input", f"{tmp_path}/docs.txt", "--format", "json-docs",
+                 "--output", f"{tmp_path}/out"]) == 0
+    tops = [json.loads(l) for l in open(f"{tmp_path}/out/top_schemas.json")]
+    assert [t["count"] for t in tops] == [2, 1]
+    assert tops[0]["schema"] == (
+        '{"type":"object","properties":{"a\\b":{"type":"string"},"q"k":{"type":"integer"}}}'
+    )
+    merged = json.load(open(f"{tmp_path}/out/merged_schema.json"))
+    assert merged["properties"] == {"a\\b": {"type": "string"}, 'q"k': {"type": "number"}}
+
+
 def test_job_leaves_the_session_conf_as_it_found_it(spark, planted_kv):
     """The job runs on the caller's session and sets none of its confs (it
     once left spark.sql.mapKeyDedupPolicy=LAST_WIN behind for every later
